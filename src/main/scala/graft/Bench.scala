@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
 /** Benchmark main — prints ONE JSON line as the final stdout line (and
   * mirrors it to BENCH_SELF.json in the cwd so the driver can parse it
@@ -23,35 +22,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** tmpfs base when available: local-mode shuffle + sink writes through
-    * /dev/vda otherwise cap multi-core throughput (measured: the disk, not
-    * the CPUs, was the local[32] bottleneck). */
-  private def fastTmp(): Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-bench") else None
-  }
-
-  private def newSession(cores: Int): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // dictionary-encoding the columnar cache was a measured hotspot
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      // no per-file chmod forks / .crc siblings (graft.fs.FastLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.FastLocalFileSystem].getName)
-      .config("spark.ui.enabled", "false")
-    fastTmp().foreach { base =>
-      Files.createDirectories(java.nio.file.Paths.get(s"$base/local"))
-      b.config("spark.local.dir", s"$base/local")
-    }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   /** JDK-17 module opens Spark needs outside spark-submit (mirrors
     * org.apache.spark.launcher.JavaModuleOptions). */
   private val jdk17AddOpens: Seq[String] = Seq(
@@ -71,10 +41,8 @@ object Bench {
     val cmd = (Seq(javaBin) ++ jdk17AddOpens ++ Seq(
       "-XX:+UseParallelGC", s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", cp, "graft.CrawlBench", cores.toString, totalUrls.toString,
-      (cores * 2).toString)).toArray
+      "-cp", cp, "graft.CrawlBench", cores.toString, totalUrls.toString)).toArray
     val pb = new ProcessBuilder(cmd: _*)
-    fastTmp().foreach(base => pb.environment().put("SPARK_GRAFT_BENCH_DIR", base))
     pb.redirectErrorStream(false)
     try {
       val p = pb.start()
@@ -97,20 +65,8 @@ object Bench {
 
   /** In-process fallback when forking is unavailable. */
   private def inProcessCrawl(cores: Int, totalUrls: Long): Double = {
-    import graft.crawl.{CrawlConfig, CrawlLoop}
-    val spark = newSession(cores)
-    val base = fastTmp().getOrElse(System.getProperty("java.io.tmpdir"))
-    Files.createDirectories(java.nio.file.Paths.get(base))
-    val wd = Files.createTempDirectory(
-      java.nio.file.Paths.get(base), s"crawl-$cores").toString
-    val cfg = CrawlConfig(workDir = wd, totalUrls = totalUrls, epochs = 2,
-      numHosts = 4000, buckets = 32, budgetPerHost = 1500, seed = 42L)
-    val t0 = System.nanoTime()
-    CrawlLoop.run(spark, cfg)
-    val sec = (System.nanoTime() - t0) / 1e9
-    spark.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wd))
-    totalUrls / sec
+    val spark = BenchSession("graft-bench", cores)
+    try CrawlBench.run(spark, cores, totalUrls) finally spark.stop()
   }
 
   /** Contention markers (BASELINE.md protocol): a register-only spin scales
@@ -137,37 +93,127 @@ object Bench {
     counts.sum / (ms / 1000.0)
   }
 
-  private def memStream(threads: Int, ms: Long): Double = {
-    val words = 8 * 1024 * 1024 // 64 MB/thread — far beyond LLC
-    val sums = new Array[Long](threads)
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // allocation/first-touch happens BEFORE the clock starts (a 64 MB
-    // tabulate per thread ate most of a short window and zeroed the
-    // marker); the latch releases all threads into the timed loop together
-    val ready = new java.util.concurrent.CountDownLatch(threads)
-    val go = new java.util.concurrent.CountDownLatch(1)
-    val ts = (0 until threads).map { i =>
-      val t = new Thread(() => {
-        val a = Array.tabulate(words)(k => k.toLong + i)
-        ready.countDown(); go.await()
-        var passes = 0L; var s = 0L
-        while (!stop.get()) {
-          var j = 0
-          while (j < words) { s += a(j); j += 1 }
-          passes += 1
-        }
-        sums(i) = if (s == 42) -1 else passes * words.toLong
-      }); t.start(); t
-    }
-    ready.await(); go.countDown()
-    Thread.sleep(ms); stop.set(true); ts.foreach(_.join())
-    sums.sum * 8.0 / (ms / 1000.0) // bytes/s
-  }
-
   /** Trimmed fixed-point rendering: "1.10" → "1.1", "14.00" → "14". */
   private def fmt(v: Double, dp: Int): String = {
     val s = String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
     if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse else s
+  }
+
+  /** [[fmt]] as a JSON number; a non-finite value is written as null. */
+  private def n(v: Double, dp: Int): java.math.BigDecimal =
+    if (v.isNaN || v.isInfinite) null else new java.math.BigDecimal(fmt(v, dp))
+
+  /** Everything one run measured — the input of [[summarize]]. */
+  private[graft] final case class Measured(
+      sfDir: String,
+      readSamples: Seq[(String, Seq[Double])],
+      levels: Seq[Int],
+      sweeps: Seq[Map[Int, Double]],
+      samples: Map[Int, Seq[Double]],
+      sweepMarks: Seq[Double],
+      calmGbps: Double,
+      multijvm: Seq[(String, Any)],
+      spinThreads: Int, spin1: Double, spinN: Double, mem1: Double, memN: Double)
+
+  /** The recorded multi-JVM scaling pair (flat JSON object), keys prefixed
+    * `multijvm_`. */
+  private[graft] def readMultijvm(text: String): Seq[(String, Any)] =
+    Json.readFlat(text).map { case (k, v) => s"multijvm_$k" -> v }
+
+  /** Pure summary of one run: (compact line, BENCH_DETAIL.json body). */
+  private[graft] def summarize(m: Measured): (String, String) = {
+    import m._
+    val results = readSamples.map { case (name, ss) => name -> ss.min }
+    val thr = levels.map(c => c -> samples(c).max)
+    // headline efficiencies: ratios of the per-level capacity estimates
+    // (best-of-samples — see the one-sided-noise argument in main)
+    val thrMap = thr.toMap
+    val effs = levels.sliding(2).collect { case Seq(a, b) =>
+      (a, b) -> thrMap(b) / ((b.toDouble / a) * thrMap(a))
+    }.toVector
+    // per-sweep pairs for the sidecar (the round-3 paired design, kept
+    // for transparency) + the calmest sweep index
+    val completeIdx = sweeps.indices.filter(i => levels.forall(sweeps(i).contains))
+    val headlineIdx = completeIdx.sortBy(i => -sweepMarks(i)).headOption
+    val sweepPairs = for {
+      i <- sweeps.indices.toVector
+      Seq(a, b) <- levels.sliding(2).toVector
+      if sweeps(i).contains(a) && sweeps(i).contains(b)
+    } yield s"sweep${i + 1}_eff_${a}_$b" ->
+      sweeps(i)(b) / ((b.toDouble / a) * sweeps(i)(a))
+
+    // ---- compact summary (the LAST stdout line, read from a ~2000-char
+    // stdout tail by whoever runs the bench) + full-detail sidecar. Query
+    // keys are the canonical short ids (q08, c14 — unique by
+    // construction): round 3's full-name line outgrew the tail window and
+    // the round's bench artifact recorded parsed:null. Full names live in
+    // the sidecar.
+    val shortIds = results.map { case (name, _) => name -> name.takeWhile(_ != '_') }
+    require(shortIds.map(_._2).distinct.size == shortIds.size,
+      "short query ids collide; compact summary would be ambiguous")
+    val total = results.map(_._2).sum
+    val compact: Seq[(String, Any)] =
+      shortIds.map { case (name, id) => id -> n(results.toMap.apply(name), 2) } ++
+      thr.map { case (c, t) => s"crawl_urls_per_sec_local$c" -> n(t, 0) } ++
+      effs.map { case ((a, b), e) => s"crawl_scaling_efficiency_${a}_$b" -> n(e, 3) } ++
+      // TWO headline keys, with round-over-round-comparable semantics:
+      //  - crawl_scaling_efficiency: the MIN over adjacent-pair
+      //    efficiencies — the original (rounds 1-3) conservative key, which
+      //    no pair selection can flatter; restored under its original name
+      //    so cross-round consumers never read a reporting change as an
+      //    engine change.
+      //  - crawl_scaling_efficiency_evidence_2_8: the N→4N EVIDENCE pair =
+      //    the first quadrupling (2→8 at the default levels), whose two
+      //    legs run on distinct physical cores so the ratio measures the
+      //    engine's scheduler/shuffle scaling. The top rung (8→32, its own
+      //    key) saturates every hardware thread of this single-socket box
+      //    and is bounded by the shared memory bus + the single-JVM
+      //    memory-manager monitor, not plan shape — measured decomposition
+      //    in BASELINE.md's round-4 addendum. A real 4N-executor cluster
+      //    adds memory bandwidth with the nodes; local[32] cannot.
+      (if (effs.nonEmpty) Seq(
+        "crawl_scaling_efficiency" -> n(effs.map(_._2).min, 3),
+        "crawl_scaling_efficiency_evidence_2_8" -> n(effs.head._2, 3))
+       else Nil) ++
+      // self-describing window quality: the 1-thread membw fingerprint of
+      // EVERY sweep plus the automatic gating verdict (1 = at least one
+      // sweep landed in a calm window, so the per-level capacity maxima
+      // include a calm sample and the headline ratios are trustworthy;
+      // 0 = every window was contended — read the ratios as lower bounds)
+      sweepMarks.zipWithIndex.map { case (v, i) =>
+        s"membw_gbps_sweep${i + 1}" -> n(v, 1) } ++
+      Seq("calm_window_found" ->
+        (if (sweepMarks.exists(_ >= calmGbps)) 1 else 0)) ++
+      headlineIdx.map(i => "membw_gbps_headline_sweep" -> n(sweepMarks(i), 1)).toSeq ++
+      // recorded true-executor pair: only the two headline ratios + the
+      // timestamp in the compact line (full set in the sidecar)
+      multijvm.filter { case (k, _) =>
+        k.endsWith("eff_raw") || k.endsWith("eff_corrected") ||
+          k.endsWith("recorded_utc") }
+    val line = Json.write(Seq("metric" -> "total", "value" -> n(total, 1),
+      "unit" -> "sec", "queries" -> compact, "sf" -> sfDir.split('/').last))
+
+    val detail: Seq[(String, Any)] =
+      results.map { case (name, v) => name -> n(v, 4) } ++
+      readSamples.flatMap { case (name, ss) =>
+        ss.zipWithIndex.map { case (v, i) => s"${name}_r${i + 1}" -> n(v, 4) } } ++
+      thr.map { case (c, t) => s"crawl_urls_per_sec_local$c" -> n(t, 1) } ++
+      levels.flatMap { c =>
+        samples(c).zipWithIndex.map { case (v, i) =>
+          s"crawl_urls_per_sec_local${c}_r${i + 1}" -> n(v, 1) } } ++
+      effs.map { case ((a, b), e) => s"crawl_scaling_efficiency_${a}_$b" -> n(e, 4) } ++
+      sweepPairs.map { case (k, v) => k -> n(v, 4) } ++
+      sweepMarks.zipWithIndex.map { case (v, i) =>
+        s"membw_gbps_1t_sweep${i + 1}" -> n(v, 4) } ++
+      headlineIdx.map(i => "headline_sweep" -> i).toSeq ++
+      multijvm ++
+      Seq(
+        "calm_gbps_threshold" -> n(calmGbps, 1),
+        "spin_giters_1t" -> n(spin1 / 1e9, 4),
+        s"spin_ratio_${spinThreads}t" -> n(if (spin1 > 0) spinN / spin1 else 0.0, 4),
+        "membw_gbps_1t" -> n(mem1 / 1e9, 4),
+        s"membw_ratio_${spinThreads}t" -> n(if (mem1 > 0) memN / mem1 else 0.0, 4))
+    (line, Json.write(Seq("sf" -> sfDir, "total_sec" -> n(total, 3), "detail" -> detail)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -180,8 +226,6 @@ object Bench {
     // reproducibly) — 16M is where the engine, not the harness, is
     // measured. Crawl portion ≈ reps × 3 levels × (1.5–5 min).
     val crawlUrls = sys.env.getOrElse("SPARK_GRAFT_BENCH_URLS", "16000000").toLong
-    // read-side scratch writes (materialize) through the tmpfs base too
-    fastTmp().foreach(base => sys.props("graft.scratch.dir") = base)
 
     // 1. read-side queries, BEST-OF-N per query (default 2): one window
     // spike must not write a phantom regression into the record (round 3
@@ -190,7 +234,7 @@ object Bench {
     // scaffolding crawl is NOT a query cost (the crawl engine is measured
     // separately below, fresh-JVM at scaled input).
     val readReps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_READ_REPS", "2").toInt)
-    val spark = newSession(cpus)
+    val spark = BenchSession("graft-bench", cpus)
     graft.readside.CrawlQueries.warmFixture(spark)
     val readSamples: Seq[(String, Seq[Double])] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -204,7 +248,6 @@ object Bench {
         }
       }
     spark.stop()
-    val results = readSamples.map { case (n, ss) => n -> ss.min }
 
     // 2. crawl scaling: three parallelism levels (cpus/16, cpus/4, cpus —
     // i.e. 2/8/32 at the default), fresh JVM each, identical input, and
@@ -237,7 +280,7 @@ object Bench {
     var sw = 0
     while (sw < maxSweeps &&
         (sw < reps || !sweepMarks.exists(_ >= calmGbps))) {
-      sweepMarks += memStream(1, 300) / 1e9
+      sweepMarks += WindowMark.memStream(1, 300) / 1e9
       sweeps += levels.flatMap(c => forkCrawl(c, crawlUrls).map(c -> _)).toMap
       sw += 1
     }
@@ -245,39 +288,18 @@ object Bench {
       val runs = sweeps.toSeq.flatMap(_.get(c))
       c -> (if (runs.nonEmpty) runs else Seq(inProcessCrawl(c, crawlUrls)))
     }.toMap
-    val thr = levels.map(c => c -> samples(c).max)
-    // headline efficiencies: ratios of the per-level capacity estimates
-    // (best-of-samples — see the one-sided-noise argument above)
-    val thrMap = thr.toMap
-    val effs = levels.sliding(2).collect { case Seq(a, b) =>
-      (a, b) -> thrMap(b) / ((b.toDouble / a) * thrMap(a))
-    }.toVector
-    // per-sweep pairs for the sidecar (the round-3 paired design, kept
-    // for transparency) + the calmest sweep index
-    val completeIdx = sweeps.indices.filter(i => levels.forall(sweeps(i).contains))
-    val headlineIdx = completeIdx.sortBy(i => -sweepMarks(i)).headOption
-    val sweepPairs = for {
-      i <- sweeps.indices.toVector
-      Seq(a, b) <- levels.sliding(2).toVector
-      if sweeps(i).contains(a) && sweeps(i).contains(b)
-    } yield s"sweep${i + 1}_eff_${a}_$b" ->
-      sweeps(i)(b) / ((b.toDouble / a) * sweeps(i)(a))
 
     // recorded multi-JVM (local-cluster) scaling pair, if the repo carries
     // one (tools/multijvm_pair.sh writes it; BASELINE.md documents the
     // protocol). These are NOT measured by this run — they are the
     // repo's recorded true-executor N→4N evidence, included so the bench
     // artifact is self-contained; the *_utc key states when it was taken.
-    val multijvm: Seq[(String, String)] = {
-      val p = java.nio.file.Paths.get(sys.env.getOrElse(
+    val multijvm: Seq[(String, Any)] = {
+      val p = Paths.get(sys.env.getOrElse(
         "SPARK_GRAFT_MULTIJVM_FILE", "tools/multijvm_recorded.json"))
-      if (!java.nio.file.Files.isReadable(p)) Nil
-      else {
-        val txt = Files.readString(p)
-        // flat {"key": value} object, values numeric or quoted strings
-        """"([A-Za-z0-9_]+)"\s*:\s*("[^"]*"|[-0-9.Ee+]+)""".r
-          .findAllMatchIn(txt)
-          .map(m => s"multijvm_${m.group(1)}" -> m.group(2)).toSeq
+      if (!Files.isReadable(p)) Nil
+      else scala.util.Try(readMultijvm(Files.readString(p))).getOrElse {
+        System.err.println(s"[bench] unreadable $p: multijvm keys left out"); Nil
       }
     }
 
@@ -285,86 +307,15 @@ object Bench {
     // describe (approximately) the same host window
     val spinThreads = math.min(8, math.max(2, cpus / 4))
     val spin1 = spinIters(1, 300); val spinN = spinIters(spinThreads, 300)
-    val mem1 = memStream(1, 300); val memN = memStream(spinThreads, 300)
+    val mem1 = WindowMark.memStream(1, 300)
+    val memN = WindowMark.memStream(spinThreads, 300)
 
-    // ---- compact summary (the LAST stdout line, parsed by the driver's
-    // ~2000-char stdout tail) + full-detail sidecar. Query keys are the
-    // canonical short ids (q08, c14 — unique by construction): round 3's
-    // full-name line outgrew the tail window and the round's bench
-    // artifact recorded parsed:null. Full names live in the sidecar.
-    val shortIds = results.map { case (n, _) => n -> n.takeWhile(_ != '_') }
-    require(shortIds.map(_._2).distinct.size == shortIds.size,
-      "short query ids collide; compact summary would be ambiguous")
-    val total = results.map(_._2).sum
-    val compactEntries =
-      shortIds.map { case (n, id) => id -> fmt(results.toMap.apply(n), 2) } ++
-      thr.map { case (c, t) => s"crawl_urls_per_sec_local$c" -> fmt(t, 0) } ++
-      effs.map { case ((a, b), e) => s"crawl_scaling_efficiency_${a}_$b" -> fmt(e, 3) } ++
-      // TWO headline keys, with round-over-round-comparable semantics:
-      //  - crawl_scaling_efficiency: the MIN over adjacent-pair
-      //    efficiencies — the original (rounds 1-3) conservative key, which
-      //    no pair selection can flatter; restored under its original name
-      //    so cross-round consumers never read a reporting change as an
-      //    engine change.
-      //  - crawl_scaling_efficiency_evidence_2_8: the N→4N EVIDENCE pair =
-      //    the first quadrupling (2→8 at the default levels), whose two
-      //    legs run on distinct physical cores so the ratio measures the
-      //    engine's scheduler/shuffle scaling. The top rung (8→32, its own
-      //    key) saturates every hardware thread of this single-socket box
-      //    and is bounded by the shared memory bus + the single-JVM
-      //    memory-manager monitor, not plan shape — measured decomposition
-      //    in BASELINE.md's round-4 addendum. A real 4N-executor cluster
-      //    adds memory bandwidth with the nodes; local[32] cannot.
-      (if (effs.nonEmpty) Seq(
-        "crawl_scaling_efficiency" -> fmt(effs.map(_._2).min, 3),
-        "crawl_scaling_efficiency_evidence_2_8" -> fmt(effs.head._2, 3))
-       else Nil) ++
-      // self-describing window quality: the 1-thread membw fingerprint of
-      // EVERY sweep plus the automatic gating verdict (1 = at least one
-      // sweep landed in a calm window, so the per-level capacity maxima
-      // include a calm sample and the headline ratios are trustworthy;
-      // 0 = every window was contended — read the ratios as lower bounds)
-      sweepMarks.zipWithIndex.map { case (v, i) =>
-        s"membw_gbps_sweep${i + 1}" -> fmt(v, 1) } ++
-      Seq("calm_window_found" ->
-        (if (sweepMarks.exists(_ >= calmGbps)) "1" else "0")) ++
-      headlineIdx.map(i => "membw_gbps_headline_sweep" -> fmt(sweepMarks(i), 1)).toSeq ++
-      // recorded true-executor pair: only the two headline ratios + the
-      // timestamp in the compact line (full set in the sidecar)
-      multijvm.filter { case (k, _) =>
-        k.endsWith("eff_raw") || k.endsWith("eff_corrected") ||
-          k.endsWith("recorded_utc") }
-    val qs = compactEntries.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val sfShort = sfDir.split('/').last
-    val json = s"""{"metric":"total","value":${fmt(total, 1)},"unit":"sec","queries":$qs,"sf":"$sfShort"}"""
-
-    val detailEntries =
-      results.map { case (n, v) => n -> fmt(v, 4) } ++
-      readSamples.flatMap { case (n, ss) =>
-        ss.zipWithIndex.map { case (v, i) => s"${n}_r${i + 1}" -> fmt(v, 4) } } ++
-      thr.map { case (c, t) => s"crawl_urls_per_sec_local$c" -> fmt(t, 1) } ++
-      samples.toSeq.flatMap { case (c, ss) =>
-        ss.zipWithIndex.map { case (v, i) =>
-          s"crawl_urls_per_sec_local${c}_r${i + 1}" -> fmt(v, 1) } } ++
-      effs.map { case ((a, b), e) => s"crawl_scaling_efficiency_${a}_$b" -> fmt(e, 4) } ++
-      sweepPairs.map { case (k, v) => k -> fmt(v, 4) } ++
-      sweepMarks.zipWithIndex.map { case (v, i) =>
-        s"membw_gbps_1t_sweep${i + 1}" -> fmt(v, 4) } ++
-      headlineIdx.map(i => "headline_sweep" -> i.toString).toSeq ++
-      multijvm ++
-      Seq(
-        "calm_gbps_threshold" -> fmt(calmGbps, 1),
-        "spin_giters_1t" -> fmt(spin1 / 1e9, 4),
-        s"spin_ratio_${spinThreads}t" -> fmt(if (spin1 > 0) spinN / spin1 else 0.0, 4),
-        "membw_gbps_1t" -> fmt(mem1 / 1e9, 4),
-        s"membw_ratio_${spinThreads}t" -> fmt(if (mem1 > 0) memN / mem1 else 0.0, 4))
-    val detail = detailEntries.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val (json, detail) = summarize(Measured(sfDir, readSamples, levels,
+      sweeps.toSeq, samples, sweepMarks.toSeq, calmGbps, multijvm,
+      spinThreads, spin1, spinN, mem1, memN))
     try {
-      Files.writeString(java.nio.file.Paths.get("BENCH_DETAIL.json"),
-        s"""{"sf":"$sfDir","total_sec":${fmt(total, 3)},"detail":$detail}""" + "\n")
-      Files.writeString(java.nio.file.Paths.get("BENCH_SELF.json"), json + "\n")
+      Files.writeString(Paths.get("BENCH_DETAIL.json"), detail + "\n")
+      Files.writeString(Paths.get("BENCH_SELF.json"), json + "\n")
     } catch { case _: Throwable => () }
     println(json)
   }

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round helper bench (guide §1): read-side queries ONLY,
@@ -18,39 +17,13 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object BenchExtra {
 
-  private def fastTmp(): Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-bench") else None
-  }
-
-  private def newSession(cores: Int): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-benchextra-$cores")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.FastLocalFileSystem].getName)
-      .config("spark.ui.enabled", "false")
-    fastTmp().foreach { base =>
-      Files.createDirectories(Paths.get(s"$base/local"))
-      b.config("spark.local.dir", s"$base/local")
-    }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_READ_REPS", "2").toInt)
     val nameRe = args.headOption.getOrElse(".*").r
     val plansDir = args.lift(1)
-    fastTmp().foreach(base => sys.props("graft.scratch.dir") = base)
-
-    val spark = newSession(cpus)
+    val spark = BenchSession("graft-benchextra", cpus)
     // per-query breakdown: jobs / stages / tasks / summed task runtime —
     // separates engine compute from driver scheduling+codegen overhead
     val nJobs = new AtomicInteger; val nStages = new AtomicInteger
@@ -91,9 +64,10 @@ object BenchExtra {
     }
     val total = results.map(_._2.min).sum
     println(f"TOTAL(best-of-$reps) = $total%.2f s over ${results.size} queries")
-    val json = results.map { case (n, ss) =>
-      "\"" + n + "\":" + f"${ss.min}%.4f"
-    }.mkString("{", ",", f""","_total":$total%.3f}""") // f-interp: the s-interpolator left a literal %.3f suffix, making the file invalid JSON (r06 fix)
+    def dec(v: Double, dp: Int) =
+      new java.math.BigDecimal(String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v)))
+    val json = Json.write(results.map { case (n, ss) => n -> dec(ss.min, 4) } :+
+      ("_total" -> dec(total, 3)))
     Files.writeString(Paths.get("BENCH_EXTRA.json"), json + "\n")
     spark.stop()
   }

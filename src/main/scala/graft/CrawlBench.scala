@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import graft.crawl.{CrawlConfig, CrawlLoop}
 
@@ -16,9 +16,6 @@ object CrawlBench {
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
     val totalUrls = args(1).toLong
-    val shufflePartitions = if (args.length > 2) args(2).toInt else cores * 2
-    val numHosts = if (args.length > 3) args(3).toInt else 4000
-    val budget = if (args.length > 4) args(4).toInt else 1500
     // SPARK_GRAFT_MASTER overrides the master URL — the multi-executor
     // evidence knob: `local-cluster[N,cores,memMB]` launches N REAL
     // executor JVMs (own heap, own UnifiedMemoryManager, own GC), which
@@ -26,111 +23,26 @@ object CrawlBench {
     // the single-JVM artifact where all 32 threads convoy on one memory-
     // manager monitor. `cores` stays the TOTAL core count for the
     // urls_per_sec denominator and shuffle sizing.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName(s"graft-crawl-bench-$cores")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // dictionary-encoding the columnar cache was a measured hotspot
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.ui.enabled", "false")
-    // kill Hadoop's per-file chmod fork + .crc sibling (see
-    // graft.fs.FastLocalFileSystem — a cluster committer never forks);
-    // SPARK_GRAFT_LOCAL_FS=default is the ablation knob (measured
-    // /proc/stat forks: 32.7k → 0.8k per 4M-URL run)
-    if (!sys.env.get("SPARK_GRAFT_LOCAL_FS").contains("default"))
-      builder.config("spark.hadoop.fs.file.impl",
-        classOf[graft.fs.FastLocalFileSystem].getName)
-    // shuffle dirs on tmpfs too: disk-backed spark.local.dir capped
-    // local[32] at −40% in round-1 measurements (the sink workDir below
-    // alone doesn't cover shuffle spill/blockmgr files)
-    sys.env.get("SPARK_GRAFT_BENCH_DIR").foreach { base =>
-      Files.createDirectories(java.nio.file.Paths.get(s"$base/local"))
-      builder.config("spark.local.dir", s"$base/local")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_JOB_TIMES=1: per-job wall clock keyed by the job
-    // descriptions runEpoch sets — the scaling-diagnosis view (which epoch
-    // stage stops scaling between two parallelism levels). Local mode runs
-    // the loop's jobs sequentially, so per-job wall times partition the
-    // epoch wall.
-    if (sys.env.get("SPARK_GRAFT_JOB_TIMES").contains("1")) {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
-      val inFlight = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = {
-          val desc = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("(none)")
-          inFlight.put(js.jobId, (desc, System.nanoTime()))
-        }
-        override def onJobEnd(je: SparkListenerJobEnd): Unit =
-          Option(inFlight.remove(je.jobId)).foreach { case (desc, t) =>
-            System.err.println(
-              f"JOB_TIME id=${je.jobId}%-4d ms=${(System.nanoTime() - t) / 1e6}%8.0f  $desc")
-          }
-      })
-    }
-    val wd = sys.env.get("SPARK_GRAFT_BENCH_DIR") match {
-      case Some(base) =>
-        Files.createDirectories(java.nio.file.Paths.get(base))
-        Files.createTempDirectory(java.nio.file.Paths.get(base), s"crawl-$cores").toString
-      case None => Files.createTempDirectory(s"graft-crawl-bench-$cores").toString
-    }
-    // SPARK_GRAFT_MAINTAIN_LATEST=0 is an ABLATION knob only (quantifies
-    // the latest-view maintenance cost); benched/recorded runs keep the
-    // default-on path — the upsert reader is part of the engine contract.
-    val maintainLatest = sys.env.get("SPARK_GRAFT_MAINTAIN_LATEST").forall(_ != "0")
-    // SPARK_GRAFT_MAX_SEEN_FRAC: ablation knob for the seen-confirm join
-    // shape — 0 forces the cogrouped two-tier (fully distributed, no
-    // driver-sized broadcasts), 1 forces the inverted broadcast confirm.
-    // Multi-executor masters pay broadcast cost per EXECUTOR copy, so the
-    // crossover differs from single-JVM local mode.
-    val maxSeenFrac = sys.env.get("SPARK_GRAFT_MAX_SEEN_FRAC")
-      .map(_.toDouble).getOrElse(0.5)
-    // SPARK_GRAFT_EPOCHS: epoch count (default 2). >2 exposes the
-    // STEADY-STATE per-epoch cost (epochs 0/1 pay first-time codegen for
-    // their unique plan shapes: no-seen-store vs bloom-probe branch) —
-    // the epoch-age-flatness evidence mode (per-epoch wall + job count
-    // printed from the committed metrics when SPARK_GRAFT_EPOCH_WALLS=1).
-    val epochs = sys.env.getOrElse("SPARK_GRAFT_EPOCHS", "2").toInt
-    val cfg = CrawlConfig(workDir = wd, totalUrls = totalUrls, epochs = epochs,
-      numHosts = numHosts, buckets = 32, budgetPerHost = budget, seed = 42L,
-      maintainLatest = maintainLatest, maxSeenFracForBroadcast = maxSeenFrac)
-    // Per-epoch scheduled-job counts (epoch-age-flatness evidence: job
-    // count must not creep with crawl age). Attribution is via the
-    // `epoch=N ...` job descriptions runEpoch sets — the driver loop is
-    // single-threaded, so every job inherits the last-set description.
-    val epochJobs = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
-    if (sys.env.get("SPARK_GRAFT_EPOCH_WALLS").contains("1")) {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-      spark.sparkContext.addSparkListener(new SparkListener {
-        private val Ep = "epoch=(\\d+)".r
-        override def onJobStart(js: SparkListenerJobStart): Unit = {
-          val desc = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-          val e = Ep.findFirstMatchIn(desc).map(_.group(1).toInt).getOrElse(-1)
-          epochJobs.merge(e, 1, (a, b) => a + b)
-        }
-      })
-    }
-    val t0 = System.nanoTime()
-    val metrics = CrawlLoop.run(spark, cfg)
-    if (sys.env.get("SPARK_GRAFT_EPOCH_WALLS").contains("1")) {
-      Thread.sleep(500) // listener bus is async; drain before reading counts
-      metrics.foreach(m => System.err.println(
-        f"EPOCH_WALL epoch=${m.epoch}%-4d ms=${m.duration_ms}%6d " +
-          f"candidates=${m.n_candidates} " +
-          f"jobs=${Option(epochJobs.get(m.epoch)).fold(0)(_.intValue)}"))
-    }
-    val sec = (System.nanoTime() - t0) / 1e9
-    val candidates = metrics.map(_.n_candidates).sum
-    println(f"CRAWL_BENCH cores=$cores urls=$totalUrls candidates=$candidates " +
-      f"sec=$sec%.2f urls_per_sec=${totalUrls / sec}%.1f")
-    spark.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wd))
+    val spark = BenchSession("graft-crawl-bench", cores, sys.env.get("SPARK_GRAFT_MASTER"))
+    try run(spark, cores, totalUrls) finally spark.stop()
+  }
+
+  /** One seeded 2-epoch crawl of `totalUrls` in a fresh work dir: prints
+    * the CRAWL_BENCH line and returns fresh URLs/s. */
+  def run(spark: SparkSession, cores: Int, totalUrls: Long): Double = {
+    val base = Paths.get(BenchSession.tmpBase.getOrElse(System.getProperty("java.io.tmpdir")))
+    Files.createDirectories(base)
+    val wd = Files.createTempDirectory(base, s"crawl-$cores").toString
+    val cfg = CrawlConfig(workDir = wd, totalUrls = totalUrls, epochs = 2,
+      numHosts = 4000, buckets = 32, budgetPerHost = 1500, seed = 42L)
+    try {
+      val t0 = System.nanoTime()
+      val metrics = CrawlLoop.run(spark, cfg)
+      val sec = (System.nanoTime() - t0) / 1e9
+      val candidates = metrics.map(_.n_candidates).sum
+      println(f"CRAWL_BENCH cores=$cores urls=$totalUrls candidates=$candidates " +
+        f"sec=$sec%.2f urls_per_sec=${totalUrls / sec}%.1f")
+      totalUrls / sec
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wd))
   }
 }

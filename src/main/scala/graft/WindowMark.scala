@@ -25,25 +25,32 @@ object WindowMark {
       println(f"WINDOW_MARK membw_gbps_1t=${memStream(1, ms) / 1e9}%.2f")
   }
 
-  /** N-thread copy of Bench.memStream (kept private there; this main must
-    * run from the plain jar without pulling Bench's query table in). */
-  private def memStream(threads: Int, ms: Long): Double = {
-    val words = 8 * 1024 * 1024 // 64 MB per thread — far beyond LLC
+  /** Aggregate streaming bandwidth (bytes/s) of `threads` threads summing
+    * 64 MB arrays each. Allocation and first touch happen BEFORE the clock
+    * starts (a 64 MB tabulate per thread ate most of a short window and
+    * zeroed the marker); a latch releases all threads into the timed loop
+    * together. */
+  def memStream(threads: Int, ms: Long): Double = {
+    val words = 8 * 1024 * 1024 // 64 MB/thread — far beyond LLC
+    val sums = new Array[Long](threads)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val totals = new java.util.concurrent.atomic.AtomicLongArray(threads)
+    val ready = new java.util.concurrent.CountDownLatch(threads)
+    val go = new java.util.concurrent.CountDownLatch(1)
     val ts = (0 until threads).map { i =>
-      new Thread(() => {
-        val a = Array.tabulate(words)(k => k.toLong) // first-touch per thread
+      val t = new Thread(() => {
+        val a = Array.tabulate(words)(k => k.toLong + i)
+        ready.countDown(); go.await()
         var passes = 0L; var s = 0L
         while (!stop.get()) {
           var j = 0
           while (j < words) { s += a(j); j += 1 }
           passes += 1
         }
-        totals.set(i, if (s == 42) -1 else passes * words.toLong)
-      })
+        sums(i) = if (s == 42) -1 else passes * words.toLong
+      }); t.start(); t
     }
-    ts.foreach(_.start()); Thread.sleep(ms); stop.set(true); ts.foreach(_.join())
-    (0 until threads).map(totals.get).sum * 8.0 / (ms / 1000.0)
+    ready.await(); go.countDown()
+    Thread.sleep(ms); stop.set(true); ts.foreach(_.join())
+    sums.sum * 8.0 / (ms / 1000.0) // bytes/s
   }
 }

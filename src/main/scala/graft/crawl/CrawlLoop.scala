@@ -1,6 +1,7 @@
 package graft.crawl
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -19,7 +20,6 @@ case class CrawlConfig(
     budgetPerHost: Int,
     seed: Long = 42L,
     bloomFpp: Double = 0.01,
-    useBloom: Boolean = true,
     forceUpdate: Boolean = false,
     /** ST5 watchdog: an epoch running longer than this is cancelled and
       * marked FAILED (reference: 6 h stuck-operation timeout,
@@ -29,16 +29,9 @@ case class CrawlConfig(
       * membership-identical merge of the per-epoch dirs — keeps readSeen
       * O(1) dirs on long crawls). 0 disables. */
     consolidateEvery: Int = 64,
-    /** Maintain the incremental latest-row-wins view ([[LatestView]]) as
-      * part of each epoch, so upsert readers scan instead of windowing the
-      * whole store (reference in-place-update semantics,
-      * service/CrawlerOrchestrationService.java:120-137). Per-epoch cost is
-      * one O(epoch) pointer-delta append; the fold into the resolved dir
-      * runs every [[latestCompactEvery]] epochs. */
-    maintainLatest: Boolean = true,
-    /** Cadence of the latest-view delta→resolved compaction (bounds the
-      * read-time tail at K epochs of pointers). 0 = never (readers resolve
-      * from deltas alone). */
+    /** Cadence of the latest-view ([[LatestView]]) delta→resolved
+      * compaction (bounds the read-time tail at K epochs of pointers).
+      * 0 = never (readers resolve from deltas alone). */
     latestCompactEvery: Int = 8,
     /** Steady-state guard for the broadcast confirm: when the PREVIOUS
       * epoch skipped more than this fraction of its candidates as already
@@ -137,7 +130,7 @@ object CrawlLoop {
           val priorCarried = prior.map(p => p.n_deferred + p.n_failed)
             .getOrElse(0L)
           val m = runEpochWatched(spark, cfg, e, store, priorSeenFrac,
-            priorCarried, Some(bcRules))
+            priorCarried, bcRules)
           prior = Some(m)
           out += m
           // automatic small-files maintenance: without it a 10^4-epoch
@@ -150,8 +143,7 @@ object CrawlLoop {
             graft.seen.SeenDeletes.consolidate(spark, cfg.workDir, e + 1)
           // latest-view compaction on its own cadence (after the commit:
           // replay-safe — the merge is idempotent by key)
-          if (cfg.maintainLatest && cfg.latestCompactEvery > 0 &&
-              (e + 1) % cfg.latestCompactEvery == 0)
+          if (cfg.latestCompactEvery > 0 && (e + 1) % cfg.latestCompactEvery == 0)
             LatestView.compact(spark, cfg.workDir)
           e += 1
       }
@@ -168,21 +160,17 @@ object CrawlLoop {
     * write a FAILED marker (no commit marker — resume replays the epoch
     * idempotently) and raise. */
   def runEpochWatched(spark: SparkSession, cfg: CrawlConfig, epoch: Int,
-      store: PayloadStore = PayloadSink, priorSeenFrac: Double = 0.0,
-      priorCarried: Long = 0L,
-      sharedRules: Option[org.apache.spark.broadcast.Broadcast[Map[String, RobotsRule]]] = None)
-      : EpochMetrics = {
+      store: PayloadStore, priorSeenFrac: Double, priorCarried: Long,
+      rules: Broadcast[Map[String, RobotsRule]]): EpochMetrics = {
     if (cfg.stuckTimeoutMs == Long.MaxValue)
-      return runEpoch(spark, cfg, epoch, store, priorSeenFrac, priorCarried,
-        sharedRules)
+      return runEpoch(spark, cfg, epoch, store, priorSeenFrac, priorCarried, rules)
     val group = s"graft-epoch-$epoch"
     import scala.concurrent.{Await, Future, TimeoutException}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val fut = Future {
       spark.sparkContext.setJobGroup(group, s"epoch $epoch", interruptOnCancel = true)
-      try runEpoch(spark, cfg, epoch, store, priorSeenFrac, priorCarried,
-        sharedRules)
+      try runEpoch(spark, cfg, epoch, store, priorSeenFrac, priorCarried, rules)
       finally spark.sparkContext.clearJobGroup()
     }
     try Await.result(fut, cfg.stuckTimeoutMs.millis)
@@ -210,11 +198,11 @@ object CrawlLoop {
     }.foldLeft(-1)(math.max)
   }
 
+  /** One epoch. `rules` is the run's robots-rules broadcast, shared by
+    * every epoch and released by [[run]]. */
   def runEpoch(spark: SparkSession, cfg: CrawlConfig, epoch: Int,
-      store: PayloadStore = PayloadSink, priorSeenFrac: Double = 0.0,
-      priorCarried: Long = 0L,
-      sharedRules: Option[org.apache.spark.broadcast.Broadcast[Map[String, RobotsRule]]] = None)
-      : EpochMetrics = {
+      store: PayloadStore, priorSeenFrac: Double, priorCarried: Long,
+      rules: Broadcast[Map[String, RobotsRule]]): EpochMetrics = {
     import spark.implicits._
     import org.apache.spark.sql.Observation
     val tEpoch0 = System.nanoTime()
@@ -261,54 +249,49 @@ object CrawlLoop {
     // + object headers, ~96 B/row serialized); thresholds leave the
     // unified pool to execution. Degrade, never die: DISK_ONLY completes
     // at any input size (local-disk blocks, zero storage-pool pressure).
-    // SPARK_GRAFT_FRONTIER_CACHE=mem|ser|disk overrides for A/B runs.
-    val frontierCacheLevel = sys.env.get("SPARK_GRAFT_FRONTIER_CACHE") match {
-      case Some("mem")  => StorageLevel.MEMORY_AND_DISK
-      case Some("ser")  => StorageLevel.MEMORY_AND_DISK_SER
-      case Some("disk") => StorageLevel.DISK_ONLY
-      case _ =>
-        // footprint = new slice + CARRIED rows (deferred+retry from the
-        // prior epoch's counts — under tight/zero host budgets the carry
-        // dominates urlsPerEpoch, and sizing on the slice alone kept
-        // MEMORY_AND_DISK in exactly the GC-overhead regime this tier
-        // switch exists to prevent); memory = where the blocks LIVE —
-        // this JVM's heap when the driver IS the executor (master "local"
-        // or "local[N]"; NOT local-cluster, which forks real executor
-        // JVMs), else the AGGREGATE executor budget: per-executor heap ×
-        // executor count (instances conf when set, else derived from
-        // defaultParallelism / executor cores) — the cached rows spread
-        // across the fleet, so comparing global rows to ONE executor's
-        // heap was over-conservative tiering.
-        val estRows = cfg.urlsPerEpoch + priorCarried
-        val conf = spark.sparkContext.getConf
-        val master = conf.get("spark.master", "local")
-        val heap =
-          if (master == "local" || master.startsWith("local["))
-            Runtime.getRuntime.maxMemory()
-          else {
-            val perExec = conf.getSizeAsBytes("spark.executor.memory", "1g")
-            // executor count: explicit conf > the local-cluster master
-            // string (which conveys N and cores OUTSIDE the conf — the
-            // spark.executor.cores default of 1 would overcount executors
-            // by cores-per-executor there) > defaultParallelism / cores
-            val LocalCluster = """local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,[^\]]*\]""".r
-            val execs =
-              if (conf.contains("spark.executor.instances"))
-                math.max(1, conf.get("spark.executor.instances").toInt)
-              else master match {
-                case LocalCluster(n, _) => math.max(1, n.toInt)
-                case _ =>
-                  val cores = math.max(1,
-                    conf.get("spark.executor.cores", "1").toInt)
-                  math.max(1, spark.sparkContext.defaultParallelism / cores)
-              }
-            perExec * execs
-          }
-        if (estRows * 224L <= (heap * 0.35).toLong)
-          StorageLevel.MEMORY_AND_DISK
-        else if (estRows * 96L <= (heap * 0.25).toLong)
-          StorageLevel.MEMORY_AND_DISK_SER
-        else StorageLevel.DISK_ONLY
+    val frontierCacheLevel = {
+      // footprint = new slice + CARRIED rows (deferred+retry from the
+      // prior epoch's counts — under tight/zero host budgets the carry
+      // dominates urlsPerEpoch, and sizing on the slice alone kept
+      // MEMORY_AND_DISK in exactly the GC-overhead regime this tier
+      // switch exists to prevent); memory = where the blocks LIVE —
+      // this JVM's heap when the driver IS the executor (master "local"
+      // or "local[N]"; NOT local-cluster, which forks real executor
+      // JVMs), else the AGGREGATE executor budget: per-executor heap ×
+      // executor count (instances conf when set, else derived from
+      // defaultParallelism / executor cores) — the cached rows spread
+      // across the fleet, so comparing global rows to ONE executor's
+      // heap was over-conservative tiering.
+      val estRows = cfg.urlsPerEpoch + priorCarried
+      val conf = spark.sparkContext.getConf
+      val master = conf.get("spark.master", "local")
+      val heap =
+        if (master == "local" || master.startsWith("local["))
+          Runtime.getRuntime.maxMemory()
+        else {
+          val perExec = conf.getSizeAsBytes("spark.executor.memory", "1g")
+          // executor count: explicit conf > the local-cluster master
+          // string (which conveys N and cores OUTSIDE the conf — the
+          // spark.executor.cores default of 1 would overcount executors
+          // by cores-per-executor there) > defaultParallelism / cores
+          val LocalCluster = """local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,[^\]]*\]""".r
+          val execs =
+            if (conf.contains("spark.executor.instances"))
+              math.max(1, conf.get("spark.executor.instances").toInt)
+            else master match {
+              case LocalCluster(n, _) => math.max(1, n.toInt)
+              case _ =>
+                val cores = math.max(1,
+                  conf.get("spark.executor.cores", "1").toInt)
+                math.max(1, spark.sparkContext.defaultParallelism / cores)
+            }
+          perExec * execs
+        }
+      if (estRows * 224L <= (heap * 0.35).toLong)
+        StorageLevel.MEMORY_AND_DISK
+      else if (estRows * 96L <= (heap * 0.25).toLong)
+        StorageLevel.MEMORY_AND_DISK_SER
+      else StorageLevel.DISK_ONLY
     }
     // dup/total counts ride as OBSERVED aggregates on the cache
     // materialization (no dedicated count job, no extra pass over the
@@ -363,29 +346,25 @@ object CrawlLoop {
         }
     val (unseen, seenCleanup): (Dataset[KeyedUrl], () => Unit) =
       if (cfg.forceUpdate || seen == null) (deduped, () => ())
-      else if (cfg.useBloom) {
-        // broadcast confirm only while the maybe-seen sliver is provably
-        // small: its size tracks the TRUE-duplicate fraction of candidates
-        // (not the bloom fpp), so at steady-state recrawl ratios it
-        // approaches the full candidate set and would blow the broadcast /
-        // driver ceiling. The prior epoch's seen-skip fraction is the
-        // zero-cost estimator; past the threshold, the cogrouped two-tier
-        // keeps everything distributed (same rows, graceful degradation).
-        if (priorSeenFrac <= cfg.maxSeenFracForBroadcast)
-          SeenSet.unseenTwoTierBroadcast(deduped, seen, segmentsDs)
-        else
-          SeenSet.unseenTwoTier(deduped, seen, segmentsDs)
-      } else (SeenSet.unseenExact(deduped, seen), () => ())
+      // broadcast confirm only while the maybe-seen sliver is provably
+      // small: its size tracks the TRUE-duplicate fraction of candidates
+      // (not the bloom fpp), so at steady-state recrawl ratios it
+      // approaches the full candidate set and would blow the broadcast /
+      // driver ceiling. The prior epoch's seen-skip fraction is the
+      // zero-cost estimator; past the threshold, the cogrouped two-tier
+      // keeps everything distributed (same rows, graceful degradation).
+      else if (priorSeenFrac <= cfg.maxSeenFracForBroadcast)
+        SeenSet.unseenTwoTierBroadcast(deduped, seen, segmentsDs)
+      else
+        SeenSet.unseenTwoTier(deduped, seen, segmentsDs)
 
     // 4. fused host stage: robots admission + politeness rank + budget —
     // map-side deny/top-k prefilter, then one repartition(host)+sort pass.
     // Scheduling-state counts are OBSERVED on the cache materialization:
     // every live row is exactly one of denied/admitted/deferred, and the
     // seen-skip count is the residual — zero dedicated count jobs.
-    val rulesMap = sharedRules.map(_.value)
-      .getOrElse(Robots.syntheticRules(cfg.numHosts, cfg.seed))
-    val (scheduledDs, bcRules) = Politeness.scheduleTracked(unseen, rulesMap,
-      cfg.budgetPerHost, sharedRules = sharedRules)
+    val (scheduledDs, _) = Politeness.scheduleTracked(unseen, rules.value,
+      cfg.budgetPerHost, sharedRules = Some(rules))
     val obsSched = Observation(s"graft_sched_$epoch")
     val scheduled = scheduledDs
       .observe(obsSched,
@@ -474,10 +453,8 @@ object CrawlLoop {
     // (O(epoch) — one slim columnar write); the fold into the resolved
     // latest/ dir happens on the latestCompactEvery cadence below, so
     // "current rows" consumers never pay a full-store window per read
-    if (cfg.maintainLatest) {
-      spark.sparkContext.setJobDescription(s"epoch=$epoch latest-delta")
-      LatestView.appendDelta(spark, cfg.workDir, epoch, written)
-    }
+    spark.sparkContext.setJobDescription(s"epoch=$epoch latest-delta")
+    LatestView.appendDelta(spark, cfg.workDir, epoch, written)
 
     // seen delta = terminal-success rows only (reference guard:
     // status==DOWNLOADED ⇒ skip; CrawlerOrchestrationService.java:114-115)
@@ -497,7 +474,7 @@ object CrawlLoop {
     // BEFORE the commit marker so a replayed epoch rewrites it
     // idempotently; the previous epoch's segment dir is then dropped so
     // the store stays O(1) dirs regardless of crawl age.
-    if (cfg.useBloom && !cfg.forceUpdate) {
+    if (!cfg.forceUpdate) {
       spark.sparkContext.setJobDescription(s"epoch=$epoch seen-bloom-write")
       val deltaKeys = written.filter(col("status") === Status.Processed)
         .select(col("host_bucket").cast("int").as("host_bucket"),
@@ -602,10 +579,6 @@ object CrawlLoop {
     commit(spark, cfg.workDir, m)
 
     scheduled.unpersist()
-    // unpersist, not destroy: lineage replay may still lazily re-broadcast
-    // (same rationale as the bloom broadcast in unseenTwoTierBroadcast).
-    // Shared rules are released once per RUN by the caller, not per epoch.
-    if (sharedRules.isEmpty) bcRules.unpersist()
     m
   }
 

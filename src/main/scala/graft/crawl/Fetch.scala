@@ -165,7 +165,12 @@ object Validate {
     * semantics as the keying stage) is the content identity that keys the
     * source pixels for the PSNR invariant (pass any frame with those
     * columns; extra columns are ignored). Output: (image_id, ok, reason,
-    * psnr). */
+    * psnr).
+    *
+    * A gzip-wired body must be ONE gzip member ([[Transport.decodeBody]]):
+    * a legal concatenated multi-member stream, which `GZIPInputStream`
+    * would join, is a DECODE_ERROR here, as is a truncated member. An
+    * optional FHCRC header CRC is skipped, not verified. */
   def validatePayload(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession

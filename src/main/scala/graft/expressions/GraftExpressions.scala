@@ -110,8 +110,9 @@ case class WordNgramsExpr(child: Expression, n: Int, lowercase: Boolean,
   // `pinned` = the TextStatsExpr plan-shape pin (see there): declares
   // non-determinism so a filter on a column derived from this array is
   // not pushed below the projection with the kernel inlined per
-  // reference (q48's size(toks) > 0 guard). Kernel itself deterministic.
-  override lazy val deterministic: Boolean = !pinned
+  // reference (q48's size(toks) > 0 guard). Kernel itself deterministic,
+  // so an unpinned instance is exactly as deterministic as its child.
+  override lazy val deterministic: Boolean = !pinned && children.forall(_.deterministic)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullSafeEval(v: Any): Any =
     ExprOps.wordNgrams(v.asInstanceOf[UTF8String], n, lowercase)
@@ -155,8 +156,8 @@ case class TextStatsExpr(child: Expression, en: Seq[String], de: Seq[String],
   // refuse to duplicate it; the kernel itself IS deterministic — the
   // flag is purely a plan-shape pin, used by TextFunctions.textStatsCol
   // (the multi-consumer projection path). Inline single-use sites keep
-  // the default deterministic=true.
-  override lazy val deterministic: Boolean = !pinned
+  // the default: deterministic iff the child is.
+  override lazy val deterministic: Boolean = !pinned && children.forall(_.deterministic)
   @transient private lazy val enB: Array[Array[Byte]] =
     en.map(w => UTF8String.fromString(w).getBytes).toArray
   @transient private lazy val deB: Array[Array[Byte]] =

@@ -429,14 +429,7 @@ object CrawlQueries {
     // read-side materialize uses): this query's whole working set is its
     // own tiny table, so every one of its ~10 write/commit/read round
     // trips otherwise pays slow-disk latency (guide §6)
-    val base = (sys.props.get("graft.scratch.dir") ++
-        sys.env.get("SPARK_GRAFT_BENCH_DIR")).iterator
-      .map(java.nio.file.Paths.get(_))
-      .find(p => Files.isDirectory(p) && Files.isWritable(p))
-      .getOrElse(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
-    val rootDir = Files.createTempDirectory(base, "graft-snap-deletes").toFile
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(rootDir))
-    val root = rootDir.toString
+    val root = Queries.scratchDir("graft-snap-deletes").toString
     val log = new graft.sources.SnapshotLog(root, s.sparkContext.hadoopConfiguration)
     s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // (r06 negative result, kept for the record: scoped AQE-off was

@@ -58,6 +58,21 @@ object Queries {
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
+  /** A fresh read-side scratch dir, reaped at JVM exit. Base: the
+    * `graft.scratch.dir` property (set by the bench session to its tmpfs
+    * base) > `SPARK_GRAFT_BENCH_DIR` > `java.io.tmpdir` — the JVM default
+    * may sit on slow disk. */
+  private[graft] def scratchDir(prefix: String): java.io.File = {
+    val base = (sys.props.get("graft.scratch.dir") ++
+        sys.env.get("SPARK_GRAFT_BENCH_DIR")).iterator
+      .map(java.nio.file.Paths.get(_))
+      .find(p => java.nio.file.Files.isDirectory(p) && java.nio.file.Files.isWritable(p))
+      .getOrElse(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    val dir = java.nio.file.Files.createTempDirectory(base, prefix).toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir
+  }
+
   /** Materialize `df` to a scratch parquet and read it back: cuts lineage
     * (so upstream caches can be released) WITHOUT collecting a single row
     * to the driver — the at-scale-safe replacement for the
@@ -65,16 +80,8 @@ object Queries {
     * fraction of all rows, so "the result is tiny" does not hold for the
     * clustering output at 100 TB). The scratch dir is reaped at JVM exit. */
   private def materialize(s: SparkSession, df: DataFrame): DataFrame = {
-    // scratch base: graft.scratch.dir property (set by graft.Bench to the
-    // tmpfs base) > SPARK_GRAFT_BENCH_DIR env > java.io.tmpdir — the JVM
-    // default may sit on slow disk, and q46/q47/q50 all pay this write
-    val base = (sys.props.get("graft.scratch.dir") ++
-        sys.env.get("SPARK_GRAFT_BENCH_DIR")).iterator
-      .map(java.nio.file.Paths.get(_))
-      .find(p => java.nio.file.Files.isDirectory(p) && java.nio.file.Files.isWritable(p))
-      .getOrElse(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
-    val dir = java.nio.file.Files.createTempDirectory(base, "graft-mat").toFile
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    // q46/q47/q50 all pay this write
+    val dir = scratchDir("graft-mat")
     df.write.mode("overwrite").parquet(dir.toString)
     s.read.parquet(dir.toString)
   }

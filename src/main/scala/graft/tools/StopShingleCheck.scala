@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.expressions.GraftFunctions
 
@@ -12,10 +11,7 @@ import graft.expressions.GraftFunctions
 object StopShingleCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.BenchSession("graft-stop-shingle-check", 8)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val nDocs = docs.count()

@@ -725,6 +725,31 @@ class CrawlSpec extends SparkSpec {
     gzRows.foreach { case (b, _) => assert(ImageCodec.decode(b).isDefined) }
   }
 
+  test("ad-hoc payload validation: multi-member and truncated gzip bodies are DECODE_ERROR") {
+    val (id, body, w, h, fmt, url) = spark.read.parquet(s"$wd/payload")
+      .filter($"status" === Status.Processed)
+      .select($"image_id", $"bytes", $"w", $"h", $"fmt", $"url_canon")
+      .as[(String, Array[Byte], Int, Int, String, String)].head()
+    val single = Transport.gzip(body)
+    val k = body.length / 2
+    val twoMembers = Transport.gzip(body.take(k)) ++ Transport.gzip(body.drop(k))
+    // the concatenation is legal gzip of the same body: the JDK stream joins it
+    val joined = new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(twoMembers)).readAllBytes()
+    assert(joined.sameElements(body))
+    val truncated = single.take(single.length - 5)
+    val verdicts = Seq("single" -> single, "two-members" -> twoMembers,
+        "truncated" -> truncated)
+      .map { case (tag, b) => (s"$id/$tag", b, w, h, fmt, url) }
+      .toDF("image_id", "bytes", "w", "h", "fmt", "url_canon")
+    val got = Validate.validatePayload(verdicts)
+      .select($"image_id", $"ok", $"reason").as[(String, Boolean, String)]
+      .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(got(s"$id/single") == ((true, "")))
+    assert(got(s"$id/two-members") == ((false, SecurityPredicates.Reason.DecodeError)))
+    assert(got(s"$id/truncated") == ((false, SecurityPredicates.Reason.DecodeError)))
+  }
+
   test("cooperative pause mid-run stops at the epoch boundary; resume reproduces the run") {
     val wdP = tmpDir()
     // a store hook that raises the pause flag DURING epoch 0 (the flag is

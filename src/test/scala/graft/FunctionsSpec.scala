@@ -112,8 +112,10 @@ class FunctionsSpec extends SparkSpec {
       floor((alphaTerm + punctTerm + stopTerm + lenTerm) * 10000.0 + 0.5)
         .cast("bigint")
     }
-    // boundary rows: the empirically-pinned \b cases (é/ü are NON-word:
-    // "éthe" matches, "xfür" does not, "fürx" does not), digits and
+    // boundary rows: the empirically-pinned \b cases (é/ü ARE word
+    // chars for JDK \b, so "éthe" does not match \bthe\b; "xfür" and
+    // "fürx" do not match \bfür\b, their neighbouring letter being a
+    // word char too), digits and
     // underscores as word chars, alternation-order/overlap ("le" vs
     // "les"), blank/space-only/tab-only/null, 0x20-only trim vs \s+
     // split (leading/trailing empty segments), NBSP inside a token, a
@@ -298,6 +300,26 @@ class FunctionsSpec extends SparkSpec {
         assert(got == brute(cases(i.toInt)),
           s"case $i '${cases(i.toInt)}': got $got want ${brute(cases(i.toInt))}")
     }
+  }
+
+  test("unpinned text kernels inherit child non-determinism; pinned stay non-deterministic") {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Rand}
+    import org.apache.spark.sql.types.StringType
+    import graft.expressions.{TextStatsExpr, WordNgramsExpr}
+    val random = Cast(Rand(Literal(7L)), StringType)
+    val fixed = Literal("the quick fox")
+    val stops = Seq("the")
+    assert(!WordNgramsExpr(random, 2, lowercase = true).deterministic)
+    assert(!TextStatsExpr(random, stops, stops, stops).deterministic)
+    assert(WordNgramsExpr(fixed, 2, lowercase = true).deterministic)
+    assert(TextStatsExpr(fixed, stops, stops, stops).deterministic)
+    assert(!WordNgramsExpr(fixed, 2, lowercase = true, pinned = true).deterministic)
+    assert(!TextStatsExpr(fixed, stops, stops, stops, pinned = true).deterministic)
+    // the analyzed plan agrees: a projection of the kernel over rand() is
+    // flagged non-deterministic
+    val projected = Seq(1).toDF("x")
+      .select(GraftFunctions.wordNgrams(rand(7L).cast("string"), 2, lowercase = true).as("g"))
+    assert(!projected.queryExecution.analyzed.expressions.forall(_.deterministic))
   }
 
   test("shingles, minhash, lsh bands, jaccard") {

@@ -22,8 +22,6 @@ cd "$(dirname "$0")/.."
 JAR=target/scala-2.13/lawcrawlerservicespark_2.13-0.1.0.jar
 BIG=${1:-64000000}
 SWEEPS=${2:-2}
-export SPARK_GRAFT_BENCH_DIR=/dev/shm/graftbench
-mkdir -p "$SPARK_GRAFT_BENCH_DIR"
 SUBMIT=/opt/spark/bin/spark-submit
 
 mark() {
@@ -40,7 +38,7 @@ run() {
     --driver-memory 8g --conf spark.executor.memory=7g \
     --conf "spark.executor.extraJavaOptions=-XX:+UseParallelGC -XX:ActiveProcessorCount=$C" \
     --conf spark.ui.enabled=false --class graft.CrawlBench \
-    "$JAR" "$CORES" "$URLS" $((CORES * 2)) 2>/dev/null \
+    "$JAR" "$CORES" "$URLS" 2>/dev/null \
     | grep CRAWL_BENCH | sed "s/^/execs=${N}x${C} /"
 }
 

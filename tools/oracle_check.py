@@ -21,12 +21,24 @@ def norm_df(df):
     return list(df.columns), rows
 
 
-def main(outdir, sfdir):
-    con = duckdb.connect()
+def connect(sfdir):
+    """A fresh in-memory DuckDB connection with the sf tables as views.
+
+    One thread: run multi-threaded, the heaviest oracle (q63) makes DuckDB
+    map tens of thousands of memory regions, up to the kernel's per-process
+    limit (vm.max_map_count, 65530), and closing the connection does not
+    unmap them, so it or a later query fails with "bad allocation". On
+    one thread the same oracle stays at a few hundred maps.
+    """
+    con = duckdb.connect(config={"threads": 1})
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def main(outdir, sfdir):
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
     all_queries = sorted(
@@ -37,16 +49,22 @@ def main(outdir, sfdir):
             print(f"[FAIL] {name}: no spark output parquet")
             n_fail += 1
             continue
-        sdf = con.sql(f"SELECT * FROM '{outdir}/{name}/*.parquet'").df()
-        if name not in oracle:
-            print(f"[rows] {name}: rows={len(sdf)} (no oracle, rows-only)")
-            continue
+        # one connection per query: no state carries from one oracle to
+        # the next
+        con = connect(sfdir)
         try:
-            odf = con.sql(oracle[name]).df()
-        except Exception as e:
-            print(f"[FAIL] {name}: oracle SQL error: {e}")
-            n_fail += 1
-            continue
+            sdf = con.sql(f"SELECT * FROM '{outdir}/{name}/*.parquet'").df()
+            if name not in oracle:
+                print(f"[rows] {name}: rows={len(sdf)} (no oracle, rows-only)")
+                continue
+            try:
+                odf = con.sql(oracle[name]).df()
+            except Exception as e:
+                print(f"[FAIL] {name}: oracle SQL error: {e}")
+                n_fail += 1
+                continue
+        finally:
+            con.close()
         scols, srows = norm_df(sdf)
         ocols, orows = norm_df(odf)
         if scols != ocols:
