@@ -7,13 +7,17 @@ import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
 import com.fasterxml.jackson.databind.json.JsonMapper
 import scala.jdk.CollectionConverters._
 
-/** The one JSON writer (and reader) of the bench and verify mains — Jackson
-  * from the Spark distribution. An object is an ordered `Seq[(String, Any)]`
-  * whose values are strings, `Int`s, `java.math.BigDecimal` numbers
+/** The one JSON writer (and reader) of the bench and verify mains and the
+  * crawl store's marker files — Jackson from the Spark distribution. An
+  * object is an ordered `Seq[(String, Any)]` whose values are strings,
+  * `Int`s, `Long`s, `java.math.BigDecimal` numbers
   * (written plain, so `new BigDecimal("19.70")` stays `19.70`; a malformed
   * number text throws in the constructor instead of reaching the output),
-  * `null`, or nested objects. */
+  * `null`, nested objects, or [[Arr]] arrays of such values. */
 object Json {
+  /** A JSON array (a bare `Seq` is an object). */
+  final case class Arr(items: Seq[Any])
+
   private val mapper = JsonMapper.builder()
     .enable(StreamWriteFeature.WRITE_BIGDECIMAL_AS_PLAIN)
     .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
@@ -27,7 +31,12 @@ object Json {
       case null => g.writeNull()
       case s: String => g.writeString(s)
       case i: Int => g.writeNumber(i)
+      case l: Long => g.writeNumber(l)
       case d: java.math.BigDecimal => g.writeNumber(d)
+      case Arr(items) =>
+        g.writeStartArray()
+        items.foreach(value)
+        g.writeEndArray()
       case o: Seq[_] =>
         g.writeStartObject()
         o.foreach { case (k: String, x) => g.writeFieldName(k); value(x) }

@@ -2,6 +2,7 @@ package graft.crawl
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import graft.fs.StoreFiles
 
 /** Cooperative pause / cancel control surface — the reference polls
   * pause/cancel flags from the progress store between dates and exposes
@@ -30,16 +31,8 @@ object CrawlControl {
 
   private def ctrl(workDir: String, name: String) = new Path(s"$workDir/_control/$name")
 
-  private def fs(spark: SparkSession, workDir: String) =
-    new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def touch(spark: SparkSession, workDir: String, name: String): Unit = {
-    val f = fs(spark, workDir)
-    f.mkdirs(new Path(s"$workDir/_control"))
-    val out = f.create(ctrl(workDir, name), true)
-    out.write(s"""{"flag":"$name"}""".getBytes("UTF-8"))
-    out.close()
-  }
+  private def touch(spark: SparkSession, workDir: String, name: String): Unit =
+    StoreFiles.writeJson(spark, ctrl(workDir, name).toString, Seq("flag" -> name))
 
   def requestPause(spark: SparkSession, workDir: String): Unit =
     touch(spark, workDir, "pause")
@@ -49,7 +42,7 @@ object CrawlControl {
 
   /** Clear both flags — the resume/acknowledge step. */
   def resume(spark: SparkSession, workDir: String): Unit = {
-    val f = fs(spark, workDir)
+    val f = StoreFiles.fs(spark, workDir)
     f.delete(ctrl(workDir, "pause"), false)
     f.delete(ctrl(workDir, "cancel"), false)
   }
@@ -57,7 +50,7 @@ object CrawlControl {
   /** Poll the flags (cancel wins over pause, as in the reference's
     * cancellation check preceding the pause wait loop). */
   def poll(spark: SparkSession, workDir: String): State = {
-    val f = fs(spark, workDir)
+    val f = StoreFiles.fs(spark, workDir)
     if (f.exists(ctrl(workDir, "cancel"))) Cancelled
     else if (f.exists(ctrl(workDir, "pause"))) Paused
     else Running
@@ -65,11 +58,7 @@ object CrawlControl {
 
   /** Terminal cancelled marker (idempotent). */
   private[crawl] def writeCancelledMarker(spark: SparkSession, workDir: String,
-      atEpoch: Int): Unit = {
-    val f = fs(spark, workDir)
-    f.mkdirs(new Path(s"$workDir/_commits"))
-    val out = f.create(new Path(s"$workDir/_commits/crawl.CANCELLED.json"), true)
-    out.write(s"""{"status":"CANCELLED","before_epoch":$atEpoch}""".getBytes("UTF-8"))
-    out.close()
-  }
+      atEpoch: Int): Unit =
+    StoreFiles.writeJson(spark, s"$workDir/_commits/crawl.CANCELLED.json",
+      Seq("status" -> "CANCELLED", "before_epoch" -> atEpoch))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.fs.StoreFiles
 import graft.seen.SeenSet
 
 /** Crawl configuration. `totalUrls` arrive in `epochs` equal slices —
@@ -91,10 +92,9 @@ object CrawlLoop {
   def run(spark: SparkSession, cfg: CrawlConfig,
       stopAfter: Int = Int.MaxValue,
       store: PayloadStore = PayloadSink): Seq[EpochMetrics] = {
-    // finish any half-done seen-store consolidation / latest-view swap
-    // before reading either
-    graft.seen.SeenDeletes.recoverConsolidation(spark, cfg.workDir)
-    LatestView.recover(spark, cfg.workDir)
+    // finish any half-done store rewrite (seen consolidation or
+    // compaction, cuckoo segments, latest view) before reading the store
+    StoreFiles.recover(spark, StoreFiles.swapMarker(cfg.workDir))
     val resumeFrom = lastCommittedEpoch(spark, cfg.workDir) + 1
     val until = math.min(cfg.epochs.toLong, resumeFrom.toLong + stopAfter.toLong).toInt
     // the robots rules are epoch-invariant: broadcast ONCE per run and
@@ -136,9 +136,8 @@ object CrawlLoop {
           // automatic small-files maintenance: without it a 10^4-epoch
           // crawl accumulates one seen dir per epoch and readSeen's
           // listing + tiny-file reads grow with crawl age. Runs AFTER the
-          // epoch's commit (membership-identical merge, crash-recoverable
-          // marker protocol — a kill mid-consolidation is finished by the
-          // recovery call above).
+          // epoch's commit (membership-identical merge under a swap marker —
+          // a kill mid-consolidation is finished by the recovery call above).
           if (cfg.consolidateEvery > 0 && (e + 1) % cfg.consolidateEvery == 0)
             graft.seen.SeenDeletes.consolidate(spark, cfg.workDir, e + 1)
           // latest-view compaction on its own cadence (after the commit:
@@ -177,19 +176,15 @@ object CrawlLoop {
     catch {
       case _: TimeoutException =>
         spark.sparkContext.cancelJobGroup(group)
-        val fs = new Path(cfg.workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.mkdirs(new Path(s"${cfg.workDir}/_commits"))
-        val out = fs.create(new Path(s"${cfg.workDir}/_commits/epoch_$epoch.FAILED.json"), true)
-        out.write(s"""{"epoch":$epoch,"status":"FAILED","reason":"stuck_timeout"}"""
-          .getBytes("UTF-8"))
-        out.close()
+        StoreFiles.writeJson(spark, s"${cfg.workDir}/_commits/epoch_$epoch.FAILED.json",
+          Seq("epoch" -> epoch, "status" -> "FAILED", "reason" -> "stuck_timeout"))
         throw new StuckEpochException(epoch, cfg.stuckTimeoutMs)
     }
   }
 
   /** Highest epoch with a commit marker, or -1. */
   def lastCommittedEpoch(spark: SparkSession, workDir: String): Int = {
-    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFiles.fs(spark, workDir)
     val dir = new Path(s"$workDir/_commits")
     if (!fs.exists(dir)) return -1
     val re = "epoch_(\\d+)\\.json".r
@@ -404,14 +399,9 @@ object CrawlLoop {
     // read back ONLY this epoch's partition directories (listing the whole
     // payload tree would grow linearly with crawl age; at 10^4+ epochs the
     // file listing, not the data, becomes the cost)
-    val touchedBuckets = {
-      val fs = new Path(cfg.workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (0 until cfg.buckets).filter(b =>
-        fs.exists(new Path(s"${cfg.workDir}/payload/host_bucket=$b/crawl_epoch=$epoch")))
-    }
     val writtenFull = {
-      val leaves = touchedBuckets
-        .map(b => s"${cfg.workDir}/payload/host_bucket=$b/crawl_epoch=$epoch")
+      val leaves = PayloadSink.epochLeaves(spark, cfg.workDir, cfg.buckets, epoch)
+        .map(l => s"${cfg.workDir}/payload/$l")
       if (leaves.isEmpty)
         spark.read.parquet(s"${cfg.workDir}/payload")
           .filter(col("crawl_epoch") === epoch) // degenerate epoch: fall back
@@ -495,7 +485,6 @@ object CrawlLoop {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(bloomDir(cfg.workDir, epoch))
       segsFallback.foreach(_.unpersist(blocking = false))
-      val fsB = new Path(cfg.workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       // sidecar meta: the segment set is only reusable under the SAME
       // bucketing (host_bucket = hash % buckets) — a changed cfg.buckets
       // between runs can leave the per-segment bloom shape unchanged (the
@@ -503,12 +492,10 @@ object CrawlLoop {
       // key now maps to a different bucket, which would read as bloom
       // false NEGATIVES. loadSegments validates this file and rebuilds on
       // any mismatch.
-      val metaOut = fsB.create(new Path(s"${bloomDir(cfg.workDir, epoch)}/_graft_meta.json"), true)
-      metaOut.write(
-        s"""{"buckets":${cfg.buckets},"expectedPerBucket":$expectedPerBucket,"fpp":${cfg.bloomFpp}}"""
-          .getBytes("UTF-8"))
-      metaOut.close()
-      fsB.delete(new Path(bloomDir(cfg.workDir, epoch - 1)), true)
+      StoreFiles.writeJson(spark, s"${bloomDir(cfg.workDir, epoch)}/_graft_meta.json",
+        Seq("buckets" -> cfg.buckets, "expectedPerBucket" -> expectedPerBucket,
+          "fpp" -> java.math.BigDecimal.valueOf(cfg.bloomFpp)))
+      StoreFiles.fs(spark, cfg.workDir).delete(new Path(bloomDir(cfg.workDir, epoch - 1)), true)
     }
     spark.sparkContext.setJobDescription(s"epoch=$epoch carry-write")
 
@@ -600,31 +587,14 @@ object CrawlLoop {
     }
   }
 
-  private def commit(spark: SparkSession, workDir: String, m: EpochMetrics): Unit = {
-    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(s"$workDir/_commits"))
-    val tmp = new Path(s"$workDir/_commits/.epoch_${m.epoch}.json.tmp")
-    val fin = new Path(s"$workDir/_commits/epoch_${m.epoch}.json")
-    val out = fs.create(tmp, true)
-    out.write(
-      s"""{"epoch":${m.epoch},"candidates":${m.n_candidates},"admitted":${m.n_admitted},"processed":${m.n_processed}}"""
-        .getBytes("UTF-8"))
-    out.close()
-    if (fs.exists(fin)) fs.delete(fin, false)
-    fs.rename(tmp, fin)
-  }
+  private def commit(spark: SparkSession, workDir: String, m: EpochMetrics): Unit =
+    StoreFiles.publishJson(spark, s"$workDir/_commits/epoch_${m.epoch}.json",
+      Seq("epoch" -> m.epoch, "candidates" -> m.n_candidates,
+        "admitted" -> m.n_admitted, "processed" -> m.n_processed))
 
   private[graft] def bloomDir(workDir: String, epoch: Int): String =
     s"$workDir/seen_blooms/epoch=$epoch"
 
-  /** Load the persisted bloom segments written after `epoch`. Returns None
-    * — and the caller rebuilds from the store — unless the dir is a fully
-    * COMMITTED write (`_SUCCESS` present; a watchdog-cancelled or crashed
-    * epoch can leave a partial dir, and a silently-missing bucket would
-    * read as "no seen keys here" = a bloom false NEGATIVE, breaking
-    * byte-exact membership) with the shape the current config implies (a
-    * changed totalUrls/fpp between runs makes old segments un-mergeable).
-    * Any read failure likewise falls back rather than wedging resume. */
   /** [[loadSegmentsDs]] collected — test/diagnostic helper ONLY (the epoch
     * loop never collects segments outside the broadcast-tier probe). */
   private[graft] def loadSegments(spark: SparkSession, cfg: CrawlConfig,
@@ -632,7 +602,15 @@ object CrawlLoop {
     loadSegmentsDs(spark, cfg, epoch, expectedPerBucket)
       .map(_.collect().toSeq.sortBy(_._1))
 
-  /** The persisted segment store as a lazy Dataset (no job, no collect).
+  /** Load the persisted bloom segments written after `epoch` as a lazy
+    * Dataset (no job, no collect). Returns None — and the caller rebuilds
+    * from the store — unless the dir is a fully COMMITTED write
+    * (`_SUCCESS` present; a watchdog-cancelled or crashed epoch can leave
+    * a partial dir, and a silently-missing bucket would read as "no seen
+    * keys here" = a bloom false NEGATIVE, breaking byte-exact membership)
+    * with the shape the current config implies (a changed totalUrls/fpp
+    * between runs makes old segments un-mergeable). Any read failure
+    * likewise falls back rather than wedging resume.
     * Validation is metadata-only: the sidecar records the (buckets,
     * expectedPerBucket, fpp) the segments were built under, and only this
     * engine writes the dir — matching meta ⇒ matching per-segment shape.
@@ -645,20 +623,13 @@ object CrawlLoop {
       epoch: Int, expectedPerBucket: Long): Option[Dataset[(Int, Array[Byte])]] = {
     import spark.implicits._
     val dir = bloomDir(cfg.workDir, epoch)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$dir/_SUCCESS"))) return None
+    if (!StoreFiles.fs(spark, dir).exists(new Path(s"$dir/_SUCCESS"))) return None
     scala.util.Try {
-      val metaPath = new Path(s"$dir/_graft_meta.json")
-      if (!fs.exists(metaPath)) return None
-      val metaIn = fs.open(metaPath)
-      val metaStr = scala.io.Source.fromInputStream(metaIn, "UTF-8").mkString
-      metaIn.close()
-      def fld(name: String): Option[String] =
-        ("\"" + name + "\":([0-9.eE+-]+)").r
-          .findFirstMatchIn(metaStr).map(_.group(1))
-      val ok = fld("buckets").contains(cfg.buckets.toString) &&
-        fld("expectedPerBucket").contains(expectedPerBucket.toString) &&
-        fld("fpp").exists(_.toDouble == cfg.bloomFpp)
+      val ok = StoreFiles.readJson(spark, s"$dir/_graft_meta.json").exists { m =>
+        m.get("buckets").asLong == cfg.buckets &&
+        m.get("expectedPerBucket").asLong == expectedPerBucket &&
+        m.get("fpp").asDouble == cfg.bloomFpp
+      }
       if (!ok) None
       else Some(spark.read.parquet(dir)
         .select(col("host_bucket").cast("int"), col("bloom"))
@@ -671,7 +642,7 @@ object CrawlLoop {
     * epoch — seen.SeenDeletes); null if none. */
   def readSeen(spark: SparkSession, workDir: String, epoch: Int)
       : org.apache.spark.sql.DataFrame = {
-    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFiles.fs(spark, workDir)
     val dirs = (0 until epoch).map(e => s"$workDir/seen/epoch=$e")
       .filter(d => fs.exists(new Path(d)))
     if (dirs.isEmpty) null
@@ -691,8 +662,7 @@ object CrawlLoop {
     * empty carry must simply read back empty. */
   private[graft] def readCarried(spark: SparkSession, dir: String): Dataset[KeyedUrl] = {
     import spark.implicits._
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(dir)))
+    if (StoreFiles.fs(spark, dir).exists(new Path(dir)))
       spark.read.schema(implicitly[org.apache.spark.sql.Encoder[KeyedUrl]].schema)
         .parquet(dir)
         .select("url_canon", "url_hash", "docid", "court", "host",

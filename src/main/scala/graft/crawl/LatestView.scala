@@ -3,6 +3,7 @@ package graft.crawl
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.fs.StoreFiles
 
 /** Incrementally maintained latest-row-wins view — the J3 upsert READER
   * made cheap without taxing the crawl hot path.
@@ -30,25 +31,21 @@ import org.apache.spark.sql.functions._
   *    `latest/` dir: tail resolved within itself (max-epoch per key — the
   *    tail is K epochs, bounded), then the resolved store anti-joins the
   *    tail's keys (store SCANNED, never shuffled) and the staged result
-  *    swaps in under a crash-recoverable marker.
+  *    swaps in, with the folded deltas dropped, as one [[StoreFiles.swap]].
   *  - [[read]] = resolved scan when no tail exists; otherwise resolved
   *    anti-join broadcast(tail keys) ∪ tail-resolved — zero shuffle of
   *    the store, no Window anywhere, tail work bounded by the cadence.
   *
   * Idempotent replay: a replayed epoch's delta write is a dynamic
   * overwrite of its own dir; compaction merges by key (its own prior
-  * output anti-joined out), so every crash point converges; [[recover]]
-  * finishes a half-done swap from the staged files.
+  * output anti-joined out), so every crash point converges; the loop's
+  * [[StoreFiles.recover]] finishes a half-done swap from the staged files.
   */
 object LatestView {
 
   private def latestDir(workDir: String) = s"$workDir/latest"
   private def deltaRoot(workDir: String) = s"$workDir/latest_delta"
   private def stagingDir(workDir: String) = s"$workDir/latest_staging"
-  private def markerPath(workDir: String) = new Path(s"$workDir/_commits/latest_swap.json")
-
-  private def fsOf(spark: SparkSession, workDir: String) =
-    new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def pointerCols(written: DataFrame): DataFrame =
     written.select(col("url_hash"), col("status"),
@@ -63,7 +60,7 @@ object LatestView {
       .parquet(s"${deltaRoot(workDir)}/epoch=$epoch")
 
   private def listDeltaDirs(spark: SparkSession, workDir: String): Seq[String] = {
-    val fs = fsOf(spark, workDir)
+    val fs = StoreFiles.fs(spark, workDir)
     val root = new Path(deltaRoot(workDir))
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).filter(_.isDirectory)
@@ -85,19 +82,28 @@ object LatestView {
         col("r.host_bucket").as("host_bucket"), col("r.crawl_epoch").as("crawl_epoch"))
 
   /** Fold all outstanding deltas into the resolved `latest/` dir
-    * (staged write + marker + bucket-dir swap, then drop the deltas).
-    * Amortized: the crawl loop calls it every `latestCompactEvery`
-    * epochs; also safe to call on demand before heavy read workloads. */
-  def compact(spark: SparkSession, workDir: String): Unit = {
+    * (staged write, then one swap of the bucket dirs that drops the
+    * deltas). Amortized: the crawl loop calls it every
+    * `latestCompactEvery` epochs; also safe to call on demand before
+    * heavy read workloads. */
+  def compact(spark: SparkSession, workDir: String): Unit =
+    stageCompaction(spark, workDir)
+      .foreach(StoreFiles.swap(spark, StoreFiles.swapMarker(workDir), _))
+
+  /** Write the merged view to `latest_staging/` and return the swap that
+    * moves each staged bucket dir over `latest/` and then drops the
+    * staging dir and the folded deltas (oldest first); None without
+    * deltas. */
+  private[graft] def stageCompaction(spark: SparkSession, workDir: String)
+      : Option[StoreFiles.Swap] = {
     val deltaDirs = listDeltaDirs(spark, workDir)
-    if (deltaDirs.isEmpty) return
-    val fs = fsOf(spark, workDir)
+    if (deltaDirs.isEmpty) return None
+    val fs = StoreFiles.fs(spark, workDir)
     val tail = resolveTail(
       spark.read.option("basePath", deltaRoot(workDir)).parquet(deltaDirs: _*)
         .drop("epoch")) // crawl_epoch rides in the data; epoch= is just the dir key
-    val latest = new Path(latestDir(workDir))
     val merged =
-      if (!fs.exists(latest)) tail
+      if (!fs.exists(new Path(latestDir(workDir)))) tail
       else {
         val old = spark.read.parquet(latestDir(workDir)).select(tail.columns.map(col): _*)
         // the resolved store streams through a scan; only the bounded tail
@@ -107,55 +113,16 @@ object LatestView {
             Seq("url_hash"), "left_anti")
           .unionByName(tail)
       }
+    // cleared first: under dynamic partition overwrite a bucket dir left
+    // by an earlier, crashed staging would otherwise survive and swap in
     val staging = stagingDir(workDir)
     fs.delete(new Path(staging), true)
     merged.repartition(col("host_bucket"))
       .write.mode(SaveMode.Overwrite).partitionBy("host_bucket").parquet(staging)
-    // marker AFTER the staged write completes, BEFORE any swap: recovery
-    // semantics are "marker present ⇒ staged data is authoritative"
-    writeMarker(fs, workDir)
-    swapStaged(fs, workDir)
-    deltaDirs.foreach(d => fs.delete(new Path(d), true))
-  }
-
-  /** Finish (or discard) a half-done swap — called at crawl resume,
-    * mirroring SeenDeletes.recoverConsolidation. */
-  def recover(spark: SparkSession, workDir: String): Unit = {
-    val fs = fsOf(spark, workDir)
-    if (fs.exists(markerPath(workDir))) {
-      // staged write completed (marker written only after _SUCCESS):
-      // re-drive the swap from whatever staged bucket dirs remain; any
-      // deltas not yet deleted re-merge idempotently at the next compact
-      swapStaged(fs, workDir)
-    } else if (fs.exists(new Path(stagingDir(workDir)))) {
-      // crash mid-staging: resolved dir untouched, deltas still present —
-      // just drop the debris; the next compact redoes the merge
-      fs.delete(new Path(stagingDir(workDir)), true)
-    }
-  }
-
-  private def writeMarker(fs: org.apache.hadoop.fs.FileSystem, workDir: String): Unit = {
-    fs.mkdirs(new Path(s"$workDir/_commits"))
-    val out = fs.create(markerPath(workDir), true)
-    out.write("""{"state":"staged"}""".getBytes("UTF-8"))
-    out.close()
-  }
-
-  private def swapStaged(fs: org.apache.hadoop.fs.FileSystem, workDir: String): Unit = {
-    val staging = new Path(stagingDir(workDir))
-    val latest = new Path(latestDir(workDir))
-    fs.mkdirs(latest)
-    if (fs.exists(staging)) {
-      fs.listStatus(staging).filter(_.isDirectory)
-        .filter(_.getPath.getName.startsWith("host_bucket="))
-        .foreach { st =>
-          val dst = new Path(latest, st.getPath.getName)
-          fs.delete(dst, true)
-          fs.rename(st.getPath, dst)
-        }
-      fs.delete(staging, true)
-    }
-    fs.delete(markerPath(workDir), false)
+    val moves = fs.listStatus(new Path(staging)).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("host_bucket="))
+      .map(b => s"$staging/$b" -> s"${latestDir(workDir)}/$b")
+    Some(StoreFiles.Swap(moves, staging +: deltaDirs))
   }
 
   /** The latest-row-wins pointer view. Plan shape: resolved scan when the
@@ -163,7 +130,7 @@ object LatestView {
     * tail-resolved — the store is scanned, never shuffled, and there is
     * no Window anywhere. */
   def read(spark: SparkSession, workDir: String): DataFrame = {
-    val fs = fsOf(spark, workDir)
+    val fs = StoreFiles.fs(spark, workDir)
     val hasResolved = fs.exists(new Path(latestDir(workDir)))
     val deltaDirs = listDeltaDirs(spark, workDir)
     require(hasResolved || deltaDirs.nonEmpty,

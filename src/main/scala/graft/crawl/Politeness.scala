@@ -39,6 +39,23 @@ object Politeness {
     val Survivor = "SURVIVOR"
   }
 
+  /** Per-host effective budget: the global `budgetPerHost`, clamped by the
+    * host's robots `Crawl-delay` when the caller opts in with an epoch
+    * wall-clock window (`epochWindowSec > 0`): a host asking for N seconds
+    * between requests gets at most window/N slots this epoch — the
+    * row-denominated restatement of the reference's sleep-based rate
+    * limit (service/SitemapCrawlerService.java:82) for hosts that publish
+    * their own rate. 0 (the default everywhere) disables the clamp, which
+    * keeps the judged engine⇄simulator equivalence surface unchanged. */
+  private[graft] def effectiveBudget(rules: Map[String, RobotsRule],
+      host: String, budgetPerHost: Int, epochWindowSec: Long): Int =
+    if (epochWindowSec <= 0) budgetPerHost
+    else rules.get(host).flatMap(_.crawlDelaySec).filter(_ > 0) match {
+      case Some(d) =>
+        math.min(budgetPerHost.toLong, math.max(1L, epochWindowSec / d)).toInt
+      case None => budgetPerHost
+    }
+
   /** Fused per-host stage: robots admission + politeness ranking + budget.
     *
     * Phase 0 (map-side, NO shuffle): robots-deny with the broadcast rules,
@@ -72,23 +89,6 @@ object Politeness {
     * plan, the exchanges beneath it are deduplicated by ReuseExchange,
     * and the caller persists the unioned result anyway — one extra
     * narrow map pass beats caching a full epoch frontier. */
-  /** Per-host effective budget: the global `budgetPerHost`, clamped by the
-    * host's robots `Crawl-delay` when the caller opts in with an epoch
-    * wall-clock window (`epochWindowSec > 0`): a host asking for N seconds
-    * between requests gets at most window/N slots this epoch — the
-    * row-denominated restatement of the reference's sleep-based rate
-    * limit (service/SitemapCrawlerService.java:82) for hosts that publish
-    * their own rate. 0 (the default everywhere) disables the clamp, which
-    * keeps the judged engine⇄simulator equivalence surface unchanged. */
-  private[graft] def effectiveBudget(rules: Map[String, RobotsRule],
-      host: String, budgetPerHost: Int, epochWindowSec: Long): Int =
-    if (epochWindowSec <= 0) budgetPerHost
-    else rules.get(host).flatMap(_.crawlDelaySec).filter(_ > 0) match {
-      case Some(d) =>
-        math.min(budgetPerHost.toLong, math.max(1L, epochWindowSec / d)).toInt
-      case None => budgetPerHost
-    }
-
   def schedule(unseen: Dataset[KeyedUrl], rules: Map[String, RobotsRule],
       budgetPerHost: Int, epochWindowSec: Long = 0L): Dataset[(KeyedUrl, String, Int)] =
     scheduleTracked(unseen, rules, budgetPerHost, epochWindowSec)._1
@@ -133,13 +133,6 @@ object Politeness {
     (pre.filter(_._2 != Sched.Survivor).unionByName(ranked), bcRules)
   }
 
-  /** Phase 0 of [[schedule]]: streamed map-side pass. Emits
-    * DENIED/DEFERRED rows as they are decided (never buffered), keeps
-    * ≤ budget candidate rows per host per input partition in
-    * largest-on-top heaps, flushes heap survivors (state Survivor) when
-    * the input is exhausted (Iterator ++ is by-name, so the flush sees
-    * the final heaps). Package-visible so the skew spec can assert the
-    * survivor bound directly. */
   /** Heap-state ceiling per task: once this many hosts have live heaps,
     * rows of additional hosts bypass the prefilter (straight to
     * Survivor — always safe, phase 1 ranks them exactly). Bounds task
@@ -197,6 +190,13 @@ object Politeness {
     math.max(65536L, math.min(4000000L, byMem)).toInt
   }
 
+  /** Phase 0 of [[schedule]]: streamed map-side pass. Emits
+    * DENIED/DEFERRED rows as they are decided (never buffered), keeps
+    * ≤ budget candidate rows per host per input partition in
+    * largest-on-top heaps, flushes heap survivors (state Survivor) when
+    * the input is exhausted (Iterator ++ is by-name, so the flush sees
+    * the final heaps). Package-visible so the skew spec can assert the
+    * survivor bound directly. */
   private[graft] def prefilter(unseen: Dataset[KeyedUrl],
       rules: Map[String, RobotsRule], budgetPerHost: Int,
       maxHeapHosts: Int = MaxHeapHosts, epochWindowSec: Long = 0L,

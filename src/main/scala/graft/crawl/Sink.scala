@@ -1,7 +1,9 @@
 package graft.crawl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.fs.StoreFiles
 
 /** Storage abstraction for every crawl-side sink (payload, lineage,
   * metrics, seen deltas, carried work queues). The crawl loop only talks
@@ -77,9 +79,14 @@ object PayloadSink extends PayloadStore {
         col("mean_luma"), col("std_luma"), col("edge_energy"),
         col("host_bucket"), col("crawl_epoch"))
 
-  /** Back-compat alias (epoch rides on the rows' crawl_epoch column). */
-  def write(results: Dataset[FetchResult], workDir: String): Unit =
-    writePayload(results, workDir, -1)
+  /** This epoch's leaf dirs `host_bucket=b/crawl_epoch=epoch` under
+    * `payload/`, probed per bucket: O(buckets), never a tree listing. */
+  def epochLeaves(spark: SparkSession, workDir: String, buckets: Int,
+      epoch: Int): Seq[String] = {
+    val fs = StoreFiles.fs(spark, workDir)
+    (0 until buckets).map(b => s"host_bucket=$b/crawl_epoch=$epoch")
+      .filter(l => fs.exists(new Path(s"$workDir/payload/$l")))
+  }
 
   /** Per-(epoch, host_bucket) lineage from the WRITTEN payload frame
     * (columns: host_bucket, host, url_hash, n_bytes): which partition wrote

@@ -3,6 +3,7 @@ package graft.seen
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.fs.StoreFiles
 
 /** S10 delete pipeline for the URL-seen store (reference:
   * SolrDocumentRepository.deleteById/deleteByQuery,
@@ -41,10 +42,7 @@ import org.apache.spark.sql.functions._
 object SeenDeletes {
 
   private def tombDir(workDir: String) = s"$workDir/seen_tombstones"
-  private def cuckooPath(workDir: String) = new Path(s"$workDir/seen_tombstones.cuckoo")
-
-  private def fs(spark: SparkSession, workDir: String) =
-    new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def cuckooPath(workDir: String) = s"$workDir/seen_tombstones.cuckoo"
 
   /** Segment bucket of a key: pure function of the hash (NOT host_bucket —
     * tombstone inputs carry only url_hash), identical on the build and
@@ -68,7 +66,7 @@ object SeenDeletes {
 
   /** Rebuild the per-bucket cuckoo segments from the full tombstone table
     * (2-phase: shuffle by derived bucket, build per partition, write as a
-    * (bucket, seg) parquet replaced atomically via tmp+rename). O(total
+    * (bucket, seg) parquet staged and swapped into place). O(total
     * tombstones) of EXECUTOR work per delete batch — the table is cleared
     * by [[compact]], so it never grows past one maintenance cycle. */
   private def rebuildCuckooSegments(spark: SparkSession, workDir: String): Unit = {
@@ -102,11 +100,10 @@ object SeenDeletes {
           (b, k, f.serialize())
         }
       }.toDF("bucket", "nsegs", "seg")
-    val fsys = fs(spark, workDir)
-    val tmp = new Path(cuckooPath(workDir).toString + ".tmp")
-    segs.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fsys.delete(cuckooPath(workDir), true)
-    fsys.rename(tmp, cuckooPath(workDir))
+    val tmp = cuckooPath(workDir) + ".tmp"
+    segs.write.mode(SaveMode.Overwrite).parquet(tmp)
+    StoreFiles.swap(spark, StoreFiles.swapMarker(workDir),
+      StoreFiles.Swap(Seq(tmp -> cuckooPath(workDir)), Nil))
   }
 
   /** Load + OR-collect the segment map for broadcasting. Segment BYTES
@@ -117,10 +114,10 @@ object SeenDeletes {
   private def loadSegments(spark: SparkSession, workDir: String)
       : Option[(Int, Map[Int, CuckooFilter])] = {
     import spark.implicits._
-    val fsys = fs(spark, workDir)
+    val fsys = StoreFiles.fs(spark, workDir)
     if (!fsys.exists(new Path(tombDir(workDir)))) return None
-    if (!fsys.exists(cuckooPath(workDir))) rebuildCuckooSegments(spark, workDir)
-    val rows = spark.read.parquet(cuckooPath(workDir).toString)
+    if (!fsys.exists(new Path(cuckooPath(workDir)))) rebuildCuckooSegments(spark, workDir)
+    val rows = spark.read.parquet(cuckooPath(workDir))
       .select(col("bucket").cast("int"), col("nsegs").cast("int"), col("seg"))
       .as[(Int, Int, Array[Byte])].collect()
     // nsegs is persisted per row (empty buckets write no row, so the
@@ -173,24 +170,32 @@ object SeenDeletes {
     }
 
   /** Physically rewrite exactly the seen partitions that contain
-    * tombstoned keys, then clear the tombstones. `epochDirs` are the
-    * per-epoch seen directories ("$workDir/seen/epoch=N"). Victim
+    * tombstoned keys, then clear the tombstones (one swap). `epochDirs` are
+    * the per-epoch seen directories ("$workDir/seen/epoch=N"). Victim
     * detection per partition = cuckoo prefilter + inverted exact
     * confirm — a cuckoo false positive alone never triggers a rewrite,
     * and no tombstone key is ever collected. */
-  def compact(spark: SparkSession, workDir: String, epochDirs: Seq[String]): Unit = {
-    val fsys = fs(spark, workDir)
-    if (!fsys.exists(new Path(tombDir(workDir)))) return
+  def compact(spark: SparkSession, workDir: String, epochDirs: Seq[String]): Unit =
+    stageCompaction(spark, workDir, epochDirs)
+      .foreach(StoreFiles.swap(spark, StoreFiles.swapMarker(workDir), _))
+
+  /** Write the rewritten victim partitions next to their originals and
+    * return the swap that installs them and clears the tombstones; None
+    * without tombstones. */
+  private[graft] def stageCompaction(spark: SparkSession, workDir: String,
+      epochDirs: Seq[String]): Option[StoreFiles.Swap] = {
+    val fsys = StoreFiles.fs(spark, workDir)
+    if (!fsys.exists(new Path(tombDir(workDir)))) return None
     val (nSegs, segMap) = loadSegments(spark, workDir) match {
       case Some(s) => s
-      case None => return
+      case None => return None
     }
     val bc = spark.sparkContext.broadcast(segMap)
     val maybeVictim = udf((h: Long) =>
       bc.value.get(segBucket(h, nSegs)).exists(_.contains(h)))
     val tombs = spark.read.parquet(tombDir(workDir)).select(col("url_hash"))
     val tombCount = tombs.count()
-    epochDirs.filter(d => fsys.exists(new Path(d))).foreach { d =>
+    val moves = epochDirs.filter(d => fsys.exists(new Path(d))).flatMap { d =>
       val part = spark.read.parquet(d)
       val candidates = part.filter(maybeVictim(col("url_hash")))
         .select(col("url_hash"))
@@ -202,87 +207,44 @@ object SeenDeletes {
           candidates.join(broadcast(tombs), Seq("url_hash"), "left_semi")
         else candidates.join(tombs, Seq("url_hash"), "left_semi")
       ).limit(1).count() > 0
-      if (hit) {
+      if (!hit) None
+      else {
         val tmp = s"$d.compact.tmp"
         applyTombstones(spark, workDir, part)
           .write.mode(SaveMode.Overwrite).parquet(tmp)
-        fsys.delete(new Path(d), true)
-        fsys.rename(new Path(tmp), new Path(d))
+        Some(tmp -> d)
       }
     }
-    fsys.delete(new Path(tombDir(workDir)), true)
-    fsys.delete(cuckooPath(workDir), true)
+    Some(StoreFiles.Swap(moves, Seq(tombDir(workDir), cuckooPath(workDir))))
   }
 
   // ---- seen-store consolidation (small-files maintenance) ----------------
   // A long crawl accumulates one seen/epoch=N directory per epoch; at 10^4+
   // epochs the per-epoch file listing and tiny-file reads dominate readSeen.
   // Consolidation merges all epochs-so-far into the highest epoch directory
-  // (distinct rows — membership-identical), with a marker-file protocol that
-  // makes a crash at ANY step recoverable:
-  //   1. write the merged store to seen/.consolidate.tmp
-  //   2. atomically create seen/.consolidate.json naming target + sources
-  //   3. delete the source directories
-  //   4. rename .consolidate.tmp → seen/epoch=<target>
-  //   5. delete the marker
-  // Recovery (run at loop start): a marker with the tmp still present redoes
-  // 3-5; a marker whose tmp is gone redoes only the source deletes + 5.
-  // Before the marker exists nothing was deleted; after step 4 the merged
-  // data is live — no crash point loses membership.
-
-  private def consolidateTmp(workDir: String) = new Path(s"$workDir/seen/.consolidate.tmp")
-  private def consolidateMarker(workDir: String) = new Path(s"$workDir/seen/.consolidate.json")
+  // (distinct rows — membership-identical) with one StoreFiles.swap, so no
+  // crash point loses membership.
 
   /** Merge all existing seen/epoch=e (e < uptoEpoch) into the highest such
     * directory. No-op with <2 directories. Membership-identical (distinct
     * union); tombstones are untouched (they apply at read). */
-  def consolidate(spark: SparkSession, workDir: String, uptoEpoch: Int): Unit = {
-    val fsys = fs(spark, workDir)
-    val dirs = (0 until uptoEpoch).map(e => (e, s"$workDir/seen/epoch=$e"))
-      .filter { case (_, d) => fsys.exists(new Path(d)) }
-    if (dirs.size < 2) return
-    val target = dirs.map(_._1).max
-    val merged = spark.read.parquet(dirs.map(_._2): _*)
+  def consolidate(spark: SparkSession, workDir: String, uptoEpoch: Int): Unit =
+    stageConsolidation(spark, workDir, uptoEpoch)
+      .foreach(StoreFiles.swap(spark, StoreFiles.swapMarker(workDir), _))
+
+  /** Write the merged store to seen/.consolidate.tmp and return the swap
+    * that installs it; None with <2 directories. */
+  private[graft] def stageConsolidation(spark: SparkSession, workDir: String,
+      uptoEpoch: Int): Option[StoreFiles.Swap] = {
+    val fsys = StoreFiles.fs(spark, workDir)
+    val dirs = (0 until uptoEpoch).map(e => s"$workDir/seen/epoch=$e")
+      .filter(d => fsys.exists(new Path(d)))
+    if (dirs.size < 2) return None
+    val tmp = s"$workDir/seen/.consolidate.tmp"
+    spark.read.parquet(dirs: _*)
       .select(col("url_hash"), col("host_bucket")).distinct()
-    merged.write.mode(SaveMode.Overwrite).parquet(consolidateTmp(workDir).toString)
-    writeMarker(fsys, workDir, target, dirs.map(_._2))
-    finishConsolidation(fsys, workDir, target, dirs.map(_._2))
-  }
-
-  /** Crash recovery: finish a half-done consolidation if a marker exists.
-    * Safe to call unconditionally (no-op without a marker). */
-  def recoverConsolidation(spark: SparkSession, workDir: String): Boolean = {
-    val fsys = fs(spark, workDir)
-    val mk = consolidateMarker(workDir)
-    if (!fsys.exists(mk)) return false
-    val in = fsys.open(mk)
-    val len = fsys.getFileStatus(mk).getLen.toInt
-    val buf = new Array[Byte](len); in.readFully(buf); in.close()
-    val body = new String(buf, "UTF-8")
-    val target = "\"target\":(\\d+)".r.findFirstMatchIn(body).get.group(1).toInt
-    val sources = "\"src\":\\[([^\\]]*)\\]".r.findFirstMatchIn(body).get.group(1)
-      .split(',').map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-    finishConsolidation(fsys, workDir, target, sources)
-    true
-  }
-
-  private def writeMarker(fsys: org.apache.hadoop.fs.FileSystem, workDir: String,
-      target: Int, sources: Seq[String]): Unit = {
-    val tmp = new Path(consolidateMarker(workDir).toString + ".tmp")
-    val out = fsys.create(tmp, true)
-    out.write((s"""{"target":$target,"src":[""" +
-      sources.map(s => "\"" + s + "\"").mkString(",") + "]}").getBytes("UTF-8"))
-    out.close()
-    fsys.rename(tmp, consolidateMarker(workDir))
-  }
-
-  private def finishConsolidation(fsys: org.apache.hadoop.fs.FileSystem,
-      workDir: String, target: Int, sources: Seq[String]): Unit = {
-    sources.foreach(d => fsys.delete(new Path(d), true))
-    val tmp = consolidateTmp(workDir)
-    if (fsys.exists(tmp))
-      fsys.rename(tmp, new Path(s"$workDir/seen/epoch=$target"))
-    fsys.delete(consolidateMarker(workDir), false)
+      .write.mode(SaveMode.Overwrite).parquet(tmp)
+    Some(StoreFiles.Swap(Seq(tmp -> dirs.last), dirs.init))
   }
 
 }

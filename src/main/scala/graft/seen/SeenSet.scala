@@ -14,20 +14,17 @@ import graft.crawl.KeyedUrl
   * success-only and append-mostly; explicit deletes are served by the
   * delete-capable [[CuckooFilter]] path.
   *
-  * Two execution strategies:
-  *  1. [[unseenExact]] — plain `left_anti` join. Always correct; at scale
-  *     both sides shuffle on url_hash (AQE handles skew).
-  *  2. [[unseenTwoTier]] — per-host-bucket bloom segments pre-filter the
-  *     candidate side, exact anti-join confirms the (few) bloom positives.
-  *     Bloom negatives are *definitely new* (no false negatives), so
-  *     byte-identical membership is preserved while the expensive exact
-  *     join sees only ~fpp + true-dup fraction of candidates. Segments are
-  *     cogrouped with candidates on host_bucket — one bloom deserialization
-  *     per bucket per task, no driver collect, no broadcast-size ceiling —
-  *     so the strategy survives 10^10 seen keys (segments stay
-  *     distributed; at that scale also store `seen` bucketed-sorted by
-  *     url_hash so the confirm join shuffles only the surviving
-  *     candidates).
+  * [[unseenExact]] (plain `left_anti` join) is the reference. The epoch
+  * loop returns exactly its rows with a two-tier strategy: per-host-bucket
+  * bloom segments pre-filter the candidates and an exact anti-join
+  * confirms the (few) bloom positives — bloom negatives are *definitely
+  * new*, so membership stays byte-identical while the exact join sees only
+  * ~fpp + true-dup fraction of candidates. From the prior epoch's
+  * seen-skip fraction it picks [[unseenTwoTierBroadcast]] (segments
+  * broadcast, probe is a predicate, no shuffle) or [[unseenTwoTier]]
+  * (segments cogrouped on host_bucket, no driver collect, no broadcast
+  * ceiling — survives 10^10 seen keys; at that scale also store `seen`
+  * bucketed-sorted by url_hash so the confirm shuffles only survivors).
   */
 object SeenSet {
 
@@ -59,19 +56,6 @@ object SeenSet {
         blooms.iterator.map { case (b, f) => (b, f.serialize()) }
       }
   }
-
-  /** OR-merge two same-shape segment sets by bucket (driver-side — test/
-    * spec helper at broadcast scale; the epoch loop uses the fully
-    * distributed [[mergeDeltaIntoSegments]]). Since a bloom is an
-    * order-independent OR of bits, the incremental union is byte-identical
-    * to a fresh build over the whole store at the same shape (CrawlSpec
-    * asserts exactly that). */
-  def mergeSegmentArrays(a: Seq[(Int, Array[Byte])], b: Seq[(Int, Array[Byte])])
-      : Seq[(Int, Array[Byte])] =
-    (a ++ b).groupBy(_._1).map { case (bucket, segs) =>
-      bucket -> segs.map(s => LongBloom.deserialize(s._2))
-        .reduce(_ union _).serialize()
-    }.toSeq.sortBy(_._1)
 
   /** Fully distributed incremental bloom maintenance:
     * segments(epoch) = segments(epoch-1) ∪ bloom(delta), computed as ONE
@@ -114,8 +98,9 @@ object SeenSet {
     *
     * Scale envelope: at 10^9 seen keys the segment set is ~1.2 GB — still
     * broadcastable; beyond that use [[unseenTwoTier]] (cogrouped segments,
-    * fully distributed). */
-  /** Returns (unseen, cleanup). `cleanup()` must be called AFTER the
+    * fully distributed).
+    *
+    * Returns (unseen, cleanup). `cleanup()` must be called AFTER the
     * unseen rows are materialized downstream: it unpersists the shared
     * probe pass and destroys the bloom broadcast — without it an epoch
     * loop leaks one cached dataset + one broadcast per epoch. */

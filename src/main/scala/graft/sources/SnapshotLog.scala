@@ -69,7 +69,7 @@ class SnapshotLog(root: String, conf: Configuration) extends Serializable {
 
   import SnapshotLog._
 
-  private def fs: FileSystem = new Path(root).getFileSystem(conf)
+  private def fs: FileSystem = graft.fs.StoreFiles.fs(conf, root)
   private def metaDir = new Path(root, "_snapshots")
 
   /** Atomically claim `target` with `tmp`'s content — the

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.crawl.{EpochMetrics, FetchResult, PartitionLineage, PayloadSink, PayloadStore}
 
@@ -25,10 +24,7 @@ class SnapshotPayloadSink(buckets: Int) extends PayloadStore {
   def writePayload(results: Dataset[FetchResult], workDir: String, epoch: Int): Unit = {
     PayloadSink.writePayload(results, workDir, epoch)
     val spark = results.sparkSession
-    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val leaves = (0 until buckets)
-      .map(b => s"host_bucket=$b/crawl_epoch=$epoch")
-      .filter(l => fs.exists(new Path(s"$workDir/payload/$l")))
+    val leaves = PayloadSink.epochLeaves(spark, workDir, buckets, epoch)
     // commit() itself supersedes carried entries under the added leaves,
     // which is what makes a replayed epoch idempotent at the metadata level.
     // The read-back schema (partition columns last, their original types)

@@ -31,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final class SnapshotTail(log: SnapshotLog, cursorDir: String, conf: Configuration) {
 
-  private def fs = new Path(cursorDir).getFileSystem(conf)
+  private def fs = graft.fs.StoreFiles.fs(conf, cursorDir)
   private def cursorPath = new Path(cursorDir, "cursor")
 
   /** Last acknowledged snapshot id, or None before the first ack. */
