@@ -1,16 +1,14 @@
 package graft.crawl
 
-import org.apache.spark.sql.Dataset
 import graft.expressions.ExprOps
 
 /** robots.txt-aware admission (north rule). The reference *claims* robots
   * compliance but implements it as rate-limiting + a fixed UA
   * (README.md:386-388; no robots parsing anywhere in src/main — SURVEY.md
-  * §4 note). Our engine makes it a real stage: deny-by-default rules,
-  * broadcast to a `mapGroups`-per-host admission pass.
-  *
-  * `flatMapGroups` streams each host's rows through the group iterator, so
-  * a Zipf mega-host costs one task's time, never one task's memory.
+  * §4 note). Our engine makes it a real stage: parsed deny-by-default
+  * rules, checked per row by [[Robots.allows]] in a narrow pass
+  * ([[Politeness.prefilter]] in the crawl, with the rules broadcast) —
+  * no shuffle, so a Zipf mega-host costs no more than its rows.
   */
 case class RobotsRule(host: String, allowAll: Boolean,
     disallowPrefixes: Seq[String],
@@ -122,20 +120,5 @@ object Robots {
     case None => false // deny-by-default: unknown host not admitted
     case Some(r) =>
       r.allowAll && !r.disallowPrefixes.exists(p => path.startsWith(p))
-  }
-
-  /** Per-host mapGroups admission pass with the broadcast rules: every
-    * candidate row tagged admissible/denied in ONE streamed pass (no
-    * persist — single-consumer flag form; callers split or aggregate the
-    * flags downstream). */
-  def admitFlagged(candidates: Dataset[KeyedUrl], rules: Map[String, RobotsRule])
-      : Dataset[(KeyedUrl, Boolean)] = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(rules)
-    candidates.groupByKey(_.host).flatMapGroups { (host, rows) =>
-      val rule = bc.value.get(host)
-      rows.map(r => (r, Robots.allows(rule, r.path)))
-    }
   }
 }

@@ -104,15 +104,12 @@ case class WordNgramHashSeqExpr(child: Expression, n: Int)
   * position of the gram start) — the codegen replacement for the
   * interpreted `regexp_replace + split + filter (+ zip_with/slice)`
   * tokenize/n-gram chains on the corpus-scan hot path; see
-  * [[ExprOps.wordNgrams]] for the exact equivalence contract. */
-case class WordNgramsExpr(child: Expression, n: Int, lowercase: Boolean,
-    pinned: Boolean = false) extends UnaryExpression {
-  // `pinned` = the TextStatsExpr plan-shape pin (see there): declares
-  // non-determinism so a filter on a column derived from this array is
-  // not pushed below the projection with the kernel inlined per
-  // reference (q48's size(toks) > 0 guard). Kernel itself deterministic,
-  // so an unpinned instance is exactly as deterministic as its child.
-  override lazy val deterministic: Boolean = !pinned && children.forall(_.deterministic)
+  * [[ExprOps.wordNgrams]] for the exact equivalence contract. A full
+  * pass over the document: a site that filters on the array (or on a
+  * value derived from it) projects it behind [[KernelBarrier]], so the
+  * filter cannot inline a second tokenizer pass. */
+case class WordNgramsExpr(child: Expression, n: Int, lowercase: Boolean)
+    extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullSafeEval(v: Any): Any =
     ExprOps.wordNgrams(v.asInstanceOf[UTF8String], n, lowercase)
@@ -143,21 +140,11 @@ case class NgramMaxCountExpr(child: Expression, n: Int)
   * it replaces (TextFunctions quality/langid/token-count family). The
   * stopword inventories are part of the case-class identity, so plan
   * canonicalization treats distinct inventories as distinct
-  * expressions. */
+  * expressions. Sites that derive several counts from one row project
+  * the array once behind [[KernelBarrier]] (see
+  * `TextFunctions.textStatsCol`). */
 case class TextStatsExpr(child: Expression, en: Seq[String], de: Seq[String],
-    fr: Seq[String], pinned: Boolean = false) extends UnaryExpression {
-  // guide-§4.4 class of problem: a filter on columns DERIVED from this
-  // array is pushed below the projection with the alias INLINED ONCE PER
-  // REFERENCE — measured on q40: ~20 inlined kernel copies in the pushed
-  // Condition, 2.3× slower than the regex chains it replaced — and
-  // codegen subexpression elimination cannot rescue references sitting
-  // in CASE-WHEN branches. A `pinned` instance declares itself
-  // non-deterministic so PushPredicateThroughProject / CollapseProject
-  // refuse to duplicate it; the kernel itself IS deterministic — the
-  // flag is purely a plan-shape pin, used by TextFunctions.textStatsCol
-  // (the multi-consumer projection path). Inline single-use sites keep
-  // the default: deterministic iff the child is.
-  override lazy val deterministic: Boolean = !pinned && children.forall(_.deterministic)
+    fr: Seq[String]) extends UnaryExpression {
   @transient private lazy val enB: Array[Array[Byte]] =
     en.map(w => UTF8String.fromString(w).getBytes).toArray
   @transient private lazy val deB: Array[Array[Byte]] =
@@ -279,16 +266,15 @@ object GraftFunctions {
   def wordNgramHashSeq(text: Column, n: Int): Column =
     Bridge.column(WordNgramHashSeqExpr(Bridge.expression(text), n))
 
-  def wordNgrams(text: Column, n: Int, lowercase: Boolean = true,
-      pinned: Boolean = false): Column =
-    Bridge.column(WordNgramsExpr(Bridge.expression(text), n, lowercase, pinned))
+  def wordNgrams(text: Column, n: Int, lowercase: Boolean = true): Column =
+    Bridge.column(WordNgramsExpr(Bridge.expression(text), n, lowercase))
 
   def ngramMaxCount(text: Column, n: Int = 2): Column =
     Bridge.column(NgramMaxCountExpr(Bridge.expression(text), n))
 
   def textStats(text: Column, en: Seq[String], de: Seq[String],
-      fr: Seq[String], pinned: Boolean = false): Column =
-    Bridge.column(TextStatsExpr(Bridge.expression(text), en, de, fr, pinned))
+      fr: Seq[String]): Column =
+    Bridge.column(TextStatsExpr(Bridge.expression(text), en, de, fr))
 
   def termFreqs(text: Column, terms: Seq[String]): Column =
     Bridge.column(TermFreqsExpr(Bridge.expression(text), terms))

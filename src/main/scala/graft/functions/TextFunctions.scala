@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis columns for the training-data pipeline: token counting,
   * language-ID (stopword n-gram heuristic), quality scoring, and document
-  * fingerprinting. All except the fingerprint are pure built-in expression
-  * trees, deliberately written with DuckDB-mirrorable semantics so every
-  * query has a SQL oracle; the fingerprint uses the native codegen
-  * expression [[graft.expressions.GraftFunctions.rollingFingerprint]].
+  * fingerprinting. The counts come from one native codegen kernel,
+  * [[graft.expressions.TextStatsExpr]] (see [[textStatsCol]]); the
+  * arithmetic on top of them is built-in expression trees with
+  * DuckDB-mirrorable semantics, so every query has a SQL oracle. The
+  * fingerprint is the native
+  * [[graft.expressions.GraftFunctions.rollingFingerprint]].
   *
   * Reference analogues: full-text assembly + cleaning
   * (service/HtmlContentExtractionService.java:148-189), content analysis
@@ -22,45 +24,32 @@ object TextFunctions {
   val DeStop = Seq("der", "die", "das", "und", "ist", "nicht", "von", "mit", "für", "den")
   val FrStop = Seq("le", "la", "les", "et", "est", "dans", "pour", "que", "une", "des")
 
-  // r06: every count below comes from ONE fused native pass
-  // (ExprOps.textStats — [n_chars, n_alpha, n_punct, n_toks, n_bpe,
-  // en, de, fr]) instead of ~9 interpreted regex traversals per row;
-  // identical expression trees across the derived columns collapse to a
-  // single evaluation under whole-stage-codegen subexpression
-  // elimination. The double arithmetic and null behavior below are
-  // UNCHANGED — the kernel only replaces the integer counting, each
-  // count proven equal to its regex form (see the kernel's scaladoc;
-  // FunctionsSpec pins the whole family against the declarative chains
-  // on corpus + hostile rows).
-  private def stats(text: Column): Column =
+  /** The fused per-row stats array (ExprOps.textStats — `[n_chars,
+    * n_alpha, n_punct, n_toks, n_bpe, en, de, fr]`): ONE native pass
+    * instead of ~9 interpreted regex traversals per row. Every function
+    * below derives from it; the double arithmetic and null behavior are
+    * those of the regex chains it replaced (FunctionsSpec pins the whole
+    * family against them on corpus + hostile rows).
+    *
+    * Inline, the derived CASE expressions read the array from
+    * conditional branches, which codegen subexpression elimination does
+    * not share, so each such reference is its own kernel call. A query that
+    * derives SEVERAL of these functions from one row therefore projects
+    * the array once behind the plan barrier —
+    * `KernelBarrier.withKernel(df, "st__" -> textStatsCol(col("text")))`
+    * — and uses the `...FromStats` variants against the `st__` column. */
+  def textStatsCol(text: Column): Column =
     graft.expressions.GraftFunctions.textStats(text, EnStop, DeStop, FrStop)
 
-  /** The stats array as an explicit column, for query shapes that derive
-    * SEVERAL of the functions below from one text column: project this
-    * ONCE (`withColumn("st__", textStatsCol(...))`) and use the
-    * `...FromStats` variants against it. This matters because the
-    * derived CASE expressions reference the array from conditional
-    * branches, which whole-stage-codegen subexpression elimination does
-    * NOT extract — inlined, the kernel would run once per REFERENCE
-    * (measured: q40 2.3× slower) — while CollapseProject keeps a
-    * non-cheap multi-referenced projection in its own Project, so the
-    * named column pins exactly one evaluation per row. The instance is
-    * `pinned` (plan-shape non-determinism, see TextStatsExpr) so a
-    * FILTER on the derived columns cannot be pushed below the
-    * projection with the kernel inlined per reference. */
-  def textStatsCol(text: Column): Column =
-    graft.expressions.GraftFunctions.textStats(text, EnStop, DeStop, FrStop,
-      pinned = true)
-
   /** Whitespace token count; blank → 0. */
-  def tokenCount(text: Column): Column = tokenCountFromStats(stats(text))
+  def tokenCount(text: Column): Column = tokenCountFromStats(textStatsCol(text))
 
   def tokenCountFromStats(st: Column): Column =
     element_at(st, 4).cast("int")
 
   /** BPE-ish subword-count estimate: letter runs, digits, and individual
     * punctuation marks each count as one token. */
-  def bpeTokenCount(text: Column): Column = bpeTokenCountFromStats(stats(text))
+  def bpeTokenCount(text: Column): Column = bpeTokenCountFromStats(textStatsCol(text))
 
   def bpeTokenCountFromStats(st: Column): Column =
     element_at(st, 5).cast("int")
@@ -74,7 +63,7 @@ object TextFunctions {
 
   /** Language-ID by stopword evidence; ties / no evidence → "unknown".
     * Priority on exact ties: en > de > fr (deterministic). */
-  def langId(text: Column): Column = langIdFromStats(text, stats(text))
+  def langId(text: Column): Column = langIdFromStats(text, textStatsCol(text))
 
   def langIdFromStats(text: Column, st: Column): Column = {
     val en = element_at(st, 6)
@@ -91,10 +80,8 @@ object TextFunctions {
     * stopword evidence, and a length sanity term. Deterministic double,
     * rounded to 4 decimals so the DuckDB oracle hashes identically. */
   def qualityScore(text: Column): Column = {
-    val st = stats(text)
+    val st = textStatsCol(text)
     val len = element_at(st, 1).cast("double")
-    // (single-function call sites only — multi-function shapes go
-    // through textStatsCol + the FromStats variants, see above)
     val alpha = element_at(st, 2).cast("double")
     val punct = element_at(st, 3).cast("double")
     val toks = element_at(st, 4).cast("double")
@@ -119,7 +106,7 @@ object TextFunctions {
     * operation order (the r06 kernel swap changed only where the INTEGER
     * counts come from, not one double op). */
   def qualityScoreX1e4(text: Column): Column =
-    qualityScoreX1e4FromStats(stats(text))
+    qualityScoreX1e4FromStats(textStatsCol(text))
 
   def qualityScoreX1e4FromStats(st: Column): Column = {
     val len = element_at(st, 1).cast("double")

@@ -1,7 +1,7 @@
 package graft.readside
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.crawl._
 
@@ -54,19 +54,23 @@ object CrawlQueries {
       .orderBy(col("host_bucket"))
   }
 
-  /** Robots admission outcome counts per court (mapGroups stage) — one
-    * streamed pass over the flags, no persisted split. */
+  /** Robots admission outcome counts per court: one narrow map of
+    * [[Robots.allows]] over the keyed frontier (the 60 parsed rules ride
+    * in the task closure), then a two-phase count. */
   def c02RobotsAdmission(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val keyed = FrontierSynth.key(
-      FrontierSynth.frontier(s, 10000, 60, 42L, 0), 16)
-    Robots.admitFlagged(keyed, Robots.syntheticRules(60, 42L))
-      .map { case (k, ok) => (k.court, ok) }
+    val rules = Robots.syntheticRules(60, 42L)
+    c02Keyed(s)
+      .map(k => (k.court, Robots.allows(rules.get(k.host), k.path)))
       .toDF("court", "admitted")
       .groupBy(col("court"), col("admitted"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("court"), col("admitted"))
   }
+
+  /** c02's input: the keyed synthetic frontier. */
+  private[graft] def c02Keyed(s: SparkSession): Dataset[KeyedUrl] =
+    FrontierSynth.key(FrontierSynth.frontier(s, 10000, 60, 42L, 0), 16)
 
   /** The crawl's epoch metrics table (candidates → denied/dup/seen/
     * admitted/deferred → statuses). */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{EcliFunctions, SimilarityFunctions, TextFunctions, UrlFunctions}
 import graft.expressions.{CmsAggregator, GraftFunctions, KmvAggregator}
+import graft.expressions.KernelBarrier.withKernel
 
 /** The read-side query surface (SURVEY.md §2.4-§2.8 + the training-data
   * pipeline operators), one function per operator, each with a DuckDB
@@ -324,10 +325,8 @@ object Queries {
 
   /** Token counting (whitespace + BPE-ish) rolled up by language. */
   def q21TokenStats(s: SparkSession, dir: String): DataFrame =
-    fanout(t(s, dir, "documents"))
-      // ONE native text_stats pass per row (r06) — see textStatsCol's
-      // scaladoc for why the array is pinned as its own column
-      .withColumn("st__", TextFunctions.textStatsCol(col("text")))
+    withKernel(fanout(t(s, dir, "documents")),
+        "st__" -> TextFunctions.textStatsCol(col("text")))
       .select(col("lang"),
         TextFunctions.tokenCountFromStats(col("st__")).cast("bigint").as("toks"),
         TextFunctions.bpeTokenCountFromStats(col("st__")).cast("bigint").as("bpe"))
@@ -338,8 +337,8 @@ object Queries {
 
   /** Language-ID prediction distribution. */
   def q22LangId(s: SparkSession, dir: String): DataFrame =
-    fanout(t(s, dir, "documents"))
-      .withColumn("st__", TextFunctions.textStatsCol(col("text")))
+    withKernel(fanout(t(s, dir, "documents")),
+        "st__" -> TextFunctions.textStatsCol(col("text")))
       .select(TextFunctions.langIdFromStats(col("text"), col("st__"))
         .as("pred_lang"))
       .groupBy(col("pred_lang"))
@@ -349,8 +348,8 @@ object Queries {
   /** Per-document quality scores. Integer-scaled (×10⁴, explicit half-up
     * floor) so the DuckDB parity never depends on a round(double) tie. */
   def q23Quality(s: SparkSession, dir: String): DataFrame =
-    fanout(t(s, dir, "documents"))
-      .withColumn("st__", TextFunctions.textStatsCol(col("text")))
+    withKernel(fanout(t(s, dir, "documents")),
+        "st__" -> TextFunctions.textStatsCol(col("text")))
       .select(col("doc_id"),
         TextFunctions.qualityScoreX1e4FromStats(col("st__")).as("quality_x1e4"))
       .orderBy(col("doc_id"))
@@ -1734,11 +1733,8 @@ object Queries {
     val terms = Seq("spark", "window", "vector")
     // native codegen tokenizer (r06): null docs yield a null token array
     // here where normToks yielded [] — both are dropped by the
-    // size(hp) > 0 filter below, so the emitted rows are identical.
-    // Pinned: the hit-position filter otherwise pushes below this
-    // projection with the tokenizer inlined a second time per row
-    val toks = GraftFunctions.wordNgrams(col("text"), 1, lowercase = true,
-      pinned = true)
+    // size(hp) > 0 filter below, so the emitted rows are identical
+    val toks = GraftFunctions.wordNgrams(col("text"), 1, lowercase = true)
     val hitPos = filter(
       transform(col("t"), (x, i) =>
         when(x.isInCollection(terms), i.cast("long")).otherwise(lit(-1L))),
@@ -1750,9 +1746,9 @@ object Queries {
         when(c > acc.getField("cnt"),
           struct(c.as("cnt"), p.as("pos"))).otherwise(acc)
       })
-    fanout(t(s, dir, "documents"))
-      .select(col("doc_id"), toks.as("t"))
-      .withColumn("hp", hitPos)
+    // tokens and hit positions each behind a barrier: the size(hp) filter
+    // stays above both, so neither is evaluated a second time inside it
+    withKernel(withKernel(fanout(t(s, dir, "documents")), "t" -> toks), "hp" -> hitPos)
       .filter(size(col("hp")) > 0)
       .withColumn("best", best)
       .select(col("doc_id"),
@@ -2407,9 +2403,9 @@ object Queries {
     * (q21/q22/q23/q24/q33) can't give. Scale shape: one scan, one
     * hash-aggregate shuffle on 48-byte keys, no window, no driver state. */
   def q40CurationPipeline(s: SparkSession, dir: String): DataFrame =
-    fanout(t(s, dir, "documents"))
-      // ONE native text_stats pass feeds all three derived columns (r06)
-      .withColumn("st__", TextFunctions.textStatsCol(col("text")))
+    // ONE native text_stats pass feeds all three derived columns
+    withKernel(fanout(t(s, dir, "documents")),
+        "st__" -> TextFunctions.textStatsCol(col("text")))
       .select(col("doc_id"), col("text"),
         TextFunctions.langIdFromStats(col("text"), col("st__")).as("pred_lang"),
         TextFunctions.qualityScoreX1e4FromStats(col("st__")).as("quality_x1e4"),
@@ -2776,14 +2772,12 @@ object Queries {
     val seqLen = 512L
     // native codegen token count (r06): size(wordNgrams(text, 1)) ≡
     // size(array_remove(split(norm, " "), "")) — blank docs 0 both
-    // ways, null docs null both ways (filtered below either way);
-    // pinned so the n_tok guard is not pushed below this projection
-    // with the kernel inlined a second time (the q48 trap)
-    val perdoc = materialize(s, t(s, dir, "documents")
-      .select(col("doc_id"),
-        size(GraftFunctions.wordNgrams(col("text"), 1, lowercase = true,
-          pinned = true)).cast("bigint").as("n_tok"))
-      .filter(col("n_tok") > 0))
+    // ways, null docs null both ways (filtered below either way)
+    val perdoc = materialize(s, withKernel(t(s, dir, "documents"),
+        "n_tok" -> size(GraftFunctions.wordNgrams(col("text"), 1, lowercase = true))
+          .cast("bigint"))
+      .filter(col("n_tok") > 0)
+      .select(col("doc_id"), col("n_tok")))
     prefixStartTok(s, perdoc, nb)
       .select(col("doc_id"), col("n_tok"), col("start_tok"),
         expr(s"start_tok DIV $seqLen").as("first_seq"),
@@ -2848,13 +2842,9 @@ object Queries {
     val cw = 16
     // native codegen tokenizer (r06): wordNgrams(text, 1) ≡
     // array_remove(split(norm, " "), "") (null → null, dropped by the
-    // size filter in both shapes); pinned so the size guard is not
-    // pushed below the projection with the kernel inlined a second time
-    // per corpus scan (plan-verified: 4 → 2 kernel sites)
-    val d = t(s, dir, "documents")
-      .select(col("doc_id"),
-        GraftFunctions.wordNgrams(col("text"), 1, lowercase = true,
-          pinned = true).as("toks"))
+    // size filter in both shapes)
+    val d = withKernel(t(s, dir, "documents"),
+        "toks" -> GraftFunctions.wordNgrams(col("text"), 1, lowercase = true))
       .filter(size(col("toks")) > 0)
     val chunks = d
       .withColumn("chunk_id",
@@ -2938,12 +2928,13 @@ object Queries {
     val seqLen = 256L
     val target = 200L
     // native codegen token count (r06): ≡ size(array_remove(split(norm,
-    // " "), "")) — the q47 argument, incl. the pushdown pin
-    val base = materialize(s, t(s, dir, "documents").select(
-        col("doc_id"), col("source"),
-        size(GraftFunctions.wordNgrams(col("text"), 1, lowercase = true,
-          pinned = true)).cast("bigint").as("n_tok"),
-        GraftFunctions.ngramMaxCount(col("text"), 2).as("maxbg__"),
+    // " "), "")) — the q47 argument; both per-row kernels sit behind the
+    // barrier so the gate below evaluates neither a second time
+    val base = materialize(s, withKernel(t(s, dir, "documents"),
+        "n_tok" -> size(GraftFunctions.wordNgrams(col("text"), 1, lowercase = true))
+          .cast("bigint"),
+        "maxbg__" -> GraftFunctions.ngramMaxCount(col("text"), 2))
+      .select(col("doc_id"), col("source"), col("n_tok"), col("maxbg__"),
         xxhash64(col("text")).as("h1__"), md5(col("text")).as("h2__"))
       .filter(col("n_tok") >= 16 && col("maxbg__") * 10 < col("n_tok")))
     val wd = Window.partitionBy(col("h1__"), col("h2__"))

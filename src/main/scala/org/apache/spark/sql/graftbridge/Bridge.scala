@@ -1,14 +1,19 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal accessor for the `private[sql]` Column ⇄ Expression converters —
   * the standard pattern third-party Spark extension libraries use to expose
-  * native Catalyst expressions as user-facing `Column`s on Spark 4.x.
+  * native Catalyst expressions as user-facing `Column`s on Spark 4.x — and
+  * for wrapping a hand-built logical plan as a DataFrame.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
 }

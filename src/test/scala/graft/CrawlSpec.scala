@@ -93,6 +93,19 @@ class CrawlSpec extends SparkSpec {
     }
   }
 
+  test("c02: robots admission counts equal a driver-side Robots.allows recount") {
+    val rules = Robots.syntheticRules(60, 42L)
+    val want = readside.CrawlQueries.c02Keyed(spark).collect().toSeq
+      .groupBy(k => (k.court, Robots.allows(rules.get(k.host), k.path)))
+      .map { case ((court, ok), ks) => (court, ok, ks.size.toLong) }.toSeq
+      .sortBy { case (court, ok, _) => (Option(court), ok) }
+    val got = readside.CrawlQueries.c02RobotsAdmission(spark, "").collect().toSeq
+      .map(r => (r.getString(0), r.getBoolean(1), r.getLong(2)))
+    assert(got == want)
+    // both outcomes occur, over the whole 10k-URL frontier
+    assert(want.exists(_._2) && want.exists(!_._2) && want.map(_._3).sum == 10000L)
+  }
+
   test("c14: phash near-dup pairs equal brute force; mirror pairs exist") {
     val payload = spark.read.parquet(s"$wd/payload")
     val got = graft.readside.CrawlQueries.phashNearDupPairs(payload)

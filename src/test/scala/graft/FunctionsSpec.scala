@@ -313,8 +313,6 @@ class FunctionsSpec extends SparkSpec {
     assert(!TextStatsExpr(random, stops, stops, stops).deterministic)
     assert(WordNgramsExpr(fixed, 2, lowercase = true).deterministic)
     assert(TextStatsExpr(fixed, stops, stops, stops).deterministic)
-    assert(!WordNgramsExpr(fixed, 2, lowercase = true, pinned = true).deterministic)
-    assert(!TextStatsExpr(fixed, stops, stops, stops, pinned = true).deterministic)
     // the analyzed plan agrees: a projection of the kernel over rand() is
     // flagged non-deterministic
     val projected = Seq(1).toDF("x")

@@ -383,4 +383,58 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("bytes"),
       "payload bytes must not appear anywhere in the pair plan")
   }
+
+  // ---- the text-kernel plan barrier (graft.expressions.KernelBarrier) ----
+
+  private def sites(plan: String, fn: String): Int =
+    java.util.regex.Pattern.quote(fn + "(").r.findAllIn(plan).size
+
+  test("text kernels: one site each in the optimized plan, inside a codegen Project") {
+    val q40df = Queries.q40CurationPipeline(spark, dir)
+    val q40 = q40df.queryExecution
+    assert(sites(q40.optimizedPlan.toString, "text_stats") == 1)
+    val q48 = Queries.q48ChunkDedup(spark, dir).queryExecution.optimizedPlan.toString
+    // one per corpus scan: the decision stream and the text side
+    assert(sites(q48, "word_ngrams") == 2, q48)
+    val q70 = Queries.q70BestPassage(spark, dir).queryExecution.optimizedPlan.toString
+    assert(sites(q70, "word_ngrams") == 1, q70)
+    assert(sites(q70, "transform") == 1,
+      s"the hit-position filter must not inline the transform a second time:\n$q70")
+    // the barrier plans as an ordinary whole-stage-codegen ProjectExec
+    // (adaptive execution assigns codegen stages when the query runs)
+    q40df.collect()
+    val kernelLine = q40.executedPlan.toString.linesIterator
+      .find(_.contains("text_stats(")).getOrElse(fail("no text_stats site"))
+    assert(kernelLine.matches("""\W*\*\(\d+\) Project \[.*"""), kernelLine)
+  }
+
+  test("text kernels: a caller filter on a pass-through column reaches the scan") {
+    import org.apache.spark.sql.functions.col
+    // a fresh session: the barrier installs itself on the DataFrame's own
+    // session, with no spark.sql.extensions entry anywhere
+    val fresh = spark.newSession()
+    assert(fresh.conf.getOption("spark.sql.extensions").isEmpty)
+    for ((name, df) <- Seq(
+        "q70" -> Queries.q70BestPassage(fresh, dir),
+        "q23" -> Queries.q23Quality(fresh, dir))) {
+      val p = plan(df.filter(col("doc_id") < 100))
+      val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findFirstIn(p).getOrElse("")
+      assert(pushed.contains("LessThan(doc_id,100)"), s"$name:\n$p")
+    }
+  }
+
+  test("text kernels: the barrier keeps scan column pruning") {
+    val docText = "struct<doc_id:bigint,text:string>"
+    for ((q, df, schema) <- Seq(
+        ("q21", Queries.q21TokenStats(spark, dir), "struct<text:string,lang:string>"),
+        ("q22", Queries.q22LangId(spark, dir), "struct<text:string>"),
+        ("q23", Queries.q23Quality(spark, dir), docText),
+        ("q40", Queries.q40CurationPipeline(spark, dir), docText),
+        ("q48", Queries.q48ChunkDedup(spark, dir), docText),
+        ("q70", Queries.q70BestPassage(spark, dir), docText))) {
+      val got = "ReadSchema: (struct<[^>]*>)".r.findAllMatchIn(plan(df))
+        .map(_.group(1)).toSet
+      assert(got == Set(schema), s"$q read $got")
+    }
+  }
 }
