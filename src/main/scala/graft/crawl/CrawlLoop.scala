@@ -80,9 +80,11 @@ final class StuckEpochException(val epoch: Int, timeoutMs: Long)
   *  - deferred+retry land in ONE partitioned carry table, and the bloom
   *    segment store is maintained by a distributed cogroup merge
   *    ([[graft.seen.SeenSet.mergeDeltaIntoSegments]]) instead of a
-  *    driver round-trip — at 10^10 seen keys the segment set (~12 GB)
-  *    never touches the driver; it is collected ONLY under the
-  *    broadcast-tier gate.
+  *    driver round-trip. The broadcast-tier probe still collects the
+  *    whole segment set (~12 GB at 10^10 seen keys) to the driver, and
+  *    its tier gate reads only the prior epoch's seen fraction
+  *    (`maxSeenFracForBroadcast`), not the segment set's size: nothing
+  *    bounds that collect yet.
   */
 object CrawlLoop {
 
@@ -318,12 +320,12 @@ object CrawlLoop {
     // here) and only fall back to a full seen-store rebuild when it is
     // absent (first bloom epoch after resume-from-older-layout, a
     // preceding forceUpdate epoch, or a crash replay that already dropped
-    // it). The ONLY place segments are ever collected is inside the
-    // broadcast-tier probe, which is exactly the tier gated to stay under
-    // the driver/broadcast ceiling; the cogrouped tier and the segment
-    // WRITE below are distributed end-to-end (at 10^10 seen keys the
-    // segment set is ~12 GB — a per-epoch driver round-trip of it would
-    // be the scale killer).
+    // it). The ONLY place segments are collected is the broadcast-tier
+    // probe; the cogrouped tier and the segment WRITE below are
+    // distributed end-to-end. The tier choice below reads only the prior
+    // epoch's seen fraction, not the segment set's size, so that collect
+    // has no size ceiling (at 10^10 seen keys the set is ~12 GB — a
+    // per-epoch driver round-trip of it would be the scale killer).
     // lazy val + persist on the FALLBACK branch: the segment dataset has
     // two consumers (the probe and the bloom write below), and a `def`
     // would re-run the full-store rebuild once per consumer — the exact

@@ -1,6 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Row-level kernels referenced from generated (whole-stage codegen) Java as
@@ -119,114 +120,113 @@ object ExprOps {
     x
   }
 
-  /** Distinct 64-bit FNV hashes of the k-BYTE shingles of the normalized
-    * text (lowercased, ASCII whitespace runs collapsed to one space) —
-    * the hashed form of `SimilarityFunctions.charShingles`: shingle
-    * EQUALITY is all MinHash/Jaccard ever needs, and 8-byte hashes ship
-    * through the explode/shuffle instead of k-char strings (collisions
-    * at 64 bits are nil at any corpus size). Shorter-than-k text hashes
-    * whole; output order = first occurrence (deterministic). */
-  def shingleHashes(text: UTF8String, k: Int): ArrayData = {
-    val lower = text.toLowerCase.getBytes
-    val buf = new Array[Byte](lower.length)
+  /** A text after [[tokenize]]: `bytes(0 until len)` is the normalized
+    * text, `starts(0 until count)` the offset of each token in it. */
+  private final class Tokens(val bytes: Array[Byte], val len: Int,
+      val starts: Array[Int], val count: Int) {
+    /** Number of n-token grams: 0 when the text has fewer than n tokens. */
+    def grams(n: Int): Int = math.max(count - n + 1, 0)
+    /** End (exclusive) of the gram of `n` tokens starting at token `i`:
+      * the tokens and their single separating spaces, i.e. the
+      * `concat_ws(" ", ...)` form of the gram. */
+    def gramEnd(i: Int, n: Int): Int = if (i + n < count) starts(i + n) - 1 else len
+  }
+
+  /** The one tokenizer of the text kernels — the engine side of the
+    * read side's tokenization contract, which the DuckDB oracles restate
+    * in SQL: ASCII `\s` runs collapse to one space, the ends are
+    * trimmed, and the text splits on spaces; blank text has no tokens.
+    * `trim = false` keeps a leading and a trailing run as one space each
+    * (the character-shingle form). `lowercase` lowers with
+    * `UTF8String.toLowerCase`, the lowering Spark's `lower()` performs.
+    *
+    * Byte scanning is exact: Java's `\s` is exactly the six ASCII bytes
+    * [[isWs]] tests, those bytes never occur inside a multi-byte UTF-8
+    * sequence (continuation bytes are >= 0x80), and no Unicode lowering
+    * maps a non-whitespace char onto ASCII whitespace. So the tokens are
+    * those of `filter(split(trim(regexp_replace([lower(]text[)], "\\s+",
+    * " ")), " "), x -> x != "")`, without regex or String churn. */
+  private def tokenize(text: UTF8String, lowercase: Boolean, trim: Boolean): Tokens = {
+    val src = (if (lowercase) text.toLowerCase else text).getBytes
+    val buf = new Array[Byte](src.length)
+    val starts = new Array[Int]((src.length + 1) / 2)
     var m = 0
-    var i = 0
+    var count = 0
     var inWs = false
-    while (i < lower.length) {
-      val b = lower(i)
-      if (isWs(b)) {
-        if (!inWs) { buf(m) = ' '; m += 1 }
-        inWs = true
-      } else { buf(m) = b; m += 1; inWs = false }
-      i += 1
-    }
-    if (m < k)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array(fnv64(buf, 0, m)))
-    val nWin = m - k + 1
-    val cap = tableCap(nWin)
-    val table = new Array[Long](cap) // open addressing; 0 = empty slot
-    val out = new Array[Long](nWin)
-    var cnt = 0
-    i = 0
-    while (i < nWin) {
-      var h = fnv64(buf, i, i + k)
-      if (h == 0L) h = 1L
-      var idx = (mix(h) & (cap - 1)).toInt
-      var seen = false
-      while (!seen && table(idx) != 0L) {
-        if (table(idx) == h) seen = true
-        else idx = (idx + 1) & (cap - 1)
-      }
-      if (!seen) { table(idx) = h; out(cnt) = h; cnt += 1; checkTableFull(cnt, cap) }
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(java.util.Arrays.copyOf(out, cnt))
-  }
-
-  /** Distinct 64-bit FNV hashes of the word n-grams of the normalized
-    * text (lowercased, ASCII whitespace runs collapsed to single spaces) —
-    * the hashed form of `SimilarityFunctions.wordNgrams`: each hash
-    * covers the byte span of n consecutive tokens INCLUDING the single
-    * separating spaces, which equals hashing the `concat_ws(" ", ...)`
-    * string form. Fewer than n tokens → whole text hashes as one gram.
-    * Output order = first occurrence. */
-  def wordNgramHashes(text: UTF8String, n: Int): ArrayData = {
-    val lower = text.toLowerCase.getBytes
-    // normalize: collapse ws runs to ' ', drop leading/trailing ws
-    val buf = new Array[Byte](lower.length)
-    var m = 0
     var i = 0
-    var inWs = true // leading ws dropped
-    while (i < lower.length) {
-      val b = lower(i)
-      if (isWs(b)) { if (!inWs && m > 0) { buf(m) = ' '; m += 1 }; inWs = true }
-      else { buf(m) = b; m += 1; inWs = false }
-      i += 1
-    }
-    if (m > 0 && buf(m - 1) == ' ') m -= 1 // trailing collapsed ws
-    // token start offsets
-    val starts = scala.collection.mutable.ArrayBuffer[Int](0)
-    i = 0
-    while (i < m) { if (buf(i) == ' ') starts += i + 1; i += 1 }
-    val nTok = if (m == 0) 0 else starts.length
-    if (nTok < n)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array(fnv64(buf, 0, m)))
-    val nGrams = nTok - n + 1
-    val cap = tableCap(nGrams)
-    val table = new Array[Long](cap)
-    val out = new Array[Long](nGrams)
-    var cnt = 0
-    i = 0
-    while (i < nGrams) {
-      val from = starts(i)
-      val until = if (i + n < nTok) starts(i + n) - 1 else m // excl. trailing space
-      var h = fnv64(buf, from, until)
-      if (h == 0L) h = 1L
-      var idx = (mix(h) & (cap - 1)).toInt
-      var seen = false
-      while (!seen && table(idx) != 0L) {
-        if (table(idx) == h) seen = true
-        else idx = (idx + 1) & (cap - 1)
+    while (i < src.length) {
+      val b = src(i)
+      if (isWs(b)) {
+        if (!inWs && (m > 0 || !trim)) { buf(m) = ' '; m += 1 }
+        inWs = true
+      } else {
+        if (inWs || m == 0) { starts(count) = m; count += 1 }
+        buf(m) = b; m += 1; inWs = false
       }
-      if (!seen) { table(idx) = h; out(cnt) = h; cnt += 1; checkTableFull(cnt, cap) }
       i += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(java.util.Arrays.copyOf(out, cnt))
+    if (trim && m > 0 && buf(m - 1) == ' ') m -= 1
+    new Tokens(buf, m, starts, count)
   }
 
-  /** ALL word n-gram hashes of the normalized text in POSITIONAL order
-    * (index i = the gram starting at token i) — the positional sibling of
-    * [[wordNgramHashes]]: same normalization, same byte spans (n tokens
-    * including single separating spaces), same FNV-1a, but occurrences are
-    * KEPT (duplicates not collapsed) so `posexplode` recovers (position,
-    * gram) pairs. Fewer than n tokens (or empty text) → EMPTY array: a
-    * doc too short to hold one window contributes no spans to
-    * substring-duplication analysis (q65); whole-short-doc identity is
-    * exact dedup's job (q24).
+  /** FNV-1a hash of every n-token gram of `t`, in token order. */
+  private def gramHashes(t: Tokens, n: Int): Array[Long] = {
+    val out = new Array[Long](t.grams(n))
+    var i = 0
+    while (i < out.length) { out(i) = fnv64(t.bytes, t.starts(i), t.gramEnd(i, n)); i += 1 }
+    out
+  }
+
+  /** The distinct values of `h` in first-occurrence order, a hash of 0
+    * remapped to 1 (0 marks an empty slot of the open-addressing table).
+    * Reuses `h` as the output buffer. */
+  private def distinctHashes(h: Array[Long]): ArrayData = {
+    val cap = tableCap(h.length)
+    val table = new Array[Long](cap)
+    var cnt = 0
+    var i = 0
+    while (i < h.length) {
+      val x = if (h(i) == 0L) 1L else h(i)
+      var idx = (mix(x) & (cap - 1)).toInt
+      while (table(idx) != 0L && table(idx) != x) idx = (idx + 1) & (cap - 1)
+      if (table(idx) == 0L) { table(idx) = x; h(cnt) = x; cnt += 1; checkTableFull(cnt, cap) }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(h, cnt))
+  }
+
+  /** Distinct 64-bit FNV hashes of the k-BYTE shingles of the lowered,
+    * whitespace-collapsed (untrimmed) text — the hashed form of
+    * `SimilarityFunctions.charShingles`: shingle EQUALITY is all
+    * MinHash/Jaccard ever needs, and 8-byte hashes ship through the
+    * explode/shuffle instead of k-char strings (collisions at 64 bits are
+    * nil at any corpus size). Shorter-than-k text hashes whole; output
+    * order = first occurrence (deterministic). */
+  def shingleHashes(text: UTF8String, k: Int): ArrayData = {
+    val t = tokenize(text, lowercase = true, trim = false)
+    if (t.len < k) return UnsafeArrayData.fromPrimitiveArray(Array(fnv64(t.bytes, 0, t.len)))
+    val h = new Array[Long](t.len - k + 1)
+    var i = 0
+    while (i < h.length) { h(i) = fnv64(t.bytes, i, i + k); i += 1 }
+    distinctHashes(h)
+  }
+
+  /** Distinct 64-bit FNV hashes of the lowered word n-grams — the hashed
+    * form of `SimilarityFunctions.wordNgrams`. Fewer than n tokens → the
+    * whole normalized text hashes as one gram. Output order = first
+    * occurrence. */
+  def wordNgramHashes(text: UTF8String, n: Int): ArrayData = {
+    val t = tokenize(text, lowercase = true, trim = true)
+    if (t.count < n) UnsafeArrayData.fromPrimitiveArray(Array(fnv64(t.bytes, 0, t.len)))
+    else distinctHashes(gramHashes(t, n))
+  }
+
+  /** ALL lowered word n-gram hashes in POSITIONAL order (index i = the
+    * gram starting at token i) — [[wordNgramHashes]] with occurrences
+    * KEPT, so `posexplode` recovers (position, gram) pairs. Fewer than n
+    * tokens (or empty text) → EMPTY array: a doc too short to hold one
+    * window contributes no spans to substring-duplication analysis
+    * (q65); whole-short-doc identity is exact dedup's job (q24).
     *
     * Shared caveat (ADVICE r05): [[wordNgramHashes]]/[[shingleHashes]]
     * remap an FNV hash of exactly 0 to 1 (0 is their open-addressing
@@ -240,134 +240,47 @@ object ExprOps {
     * results, and removing it from the distinct-form would break its
     * sentinel. */
   def wordNgramHashSeq(text: UTF8String, n: Int): ArrayData = {
-    val lower = text.toLowerCase.getBytes
-    val buf = new Array[Byte](lower.length)
-    var m = 0
-    var i = 0
-    var inWs = true // leading ws dropped
-    while (i < lower.length) {
-      val b = lower(i)
-      if (isWs(b)) { if (!inWs && m > 0) { buf(m) = ' '; m += 1 }; inWs = true }
-      else { buf(m) = b; m += 1; inWs = false }
-      i += 1
-    }
-    if (m > 0 && buf(m - 1) == ' ') m -= 1 // trailing collapsed ws
-    val starts = scala.collection.mutable.ArrayBuffer[Int](0)
-    i = 0
-    while (i < m) { if (buf(i) == ' ') starts += i + 1; i += 1 }
-    val nTok = if (m == 0) 0 else starts.length
-    if (nTok < n)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array.emptyLongArray)
-    val nGrams = nTok - n + 1
-    val out = new Array[Long](nGrams)
-    i = 0
-    while (i < nGrams) {
-      val from = starts(i)
-      val until = if (i + n < nTok) starts(i + n) - 1 else m
-      out(i) = fnv64(buf, from, until)
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
+    val t = tokenize(text, lowercase = true, trim = true)
+    UnsafeArrayData.fromPrimitiveArray(gramHashes(t, n))
   }
 
-  /** All word n-grams of the normalized text as STRINGS in positional
-    * order — the string-valued sibling of [[wordNgramHashSeq]]: identical
-    * normalization (ASCII-\s runs collapsed to one 0x20, leading/trailing
-    * runs dropped, `lowercase` via UTF8String.toLowerCase — the same
-    * lowering Spark's `lower()` performs) and identical byte spans
-    * (n tokens incl. single separating spaces), occurrences KEPT.
-    * Emits row-for-row what the declarative chain
-    * `explode(filter(split(trim(regexp_replace([lower(]text[)], "\\s+",
-    * " ")), " "), x -> x != ""))` (n = 1) / its zip_with-sliced n-gram
-    * build (n > 1) emits: Java's `\s` is exactly the 6 ASCII bytes
-    * [[isWs]] tests, those bytes never occur inside a multi-byte UTF-8
-    * sequence (continuation bytes are ≥ 0x80), and no Unicode lowering
-    * maps a non-whitespace char onto ASCII whitespace — so byte-level
-    * scanning of the lowered text is exact, with zero regex/String
-    * churn and no interpreted higher-order functions (the measured
-    * per-row cost of the q56/q66/q74-class text operators, r06).
-    * Fewer than n tokens (or empty text) → EMPTY array (the
-    * [[wordNgramHashSeq]] convention). NULL text → NULL via the
-    * expression's null-safety: adoption sites that relied on
-    * `normToks`'s null→[] coercion must coalesce explicitly. */
+  /** All word n-grams as STRINGS in positional order — the string-valued
+    * sibling of [[wordNgramHashSeq]], occurrences KEPT, optionally
+    * case-preserving. Emits row-for-row what the declarative chain in
+    * [[tokenize]]'s doc (n = 1) / its zip_with-sliced n-gram build
+    * (n > 1) emits, with no interpreted higher-order functions (the
+    * measured per-row cost of the q56/q66/q74-class text operators, r06).
+    * Fewer than n tokens (or empty text) → EMPTY array. NULL text → NULL
+    * via the expression's null-safety: a site that needs [] must coalesce. */
   def wordNgrams(text: UTF8String, n: Int, lowercase: Boolean): ArrayData = {
-    val src = (if (lowercase) text.toLowerCase else text).getBytes
-    val buf = new Array[Byte](src.length)
-    var m = 0
+    val t = tokenize(text, lowercase, trim = true)
+    val out = new Array[Any](t.grams(n))
     var i = 0
-    var inWs = true // leading ws dropped
-    while (i < src.length) {
-      val b = src(i)
-      if (isWs(b)) { if (!inWs && m > 0) { buf(m) = ' '; m += 1 }; inWs = true }
-      else { buf(m) = b; m += 1; inWs = false }
+    while (i < out.length) {
+      // fromBytes shares t.bytes (no copy); it is never mutated after tokenize
+      out(i) = UTF8String.fromBytes(t.bytes, t.starts(i), t.gramEnd(i, n) - t.starts(i))
       i += 1
     }
-    if (m > 0 && buf(m - 1) == ' ') m -= 1 // trailing collapsed ws
-    val starts = scala.collection.mutable.ArrayBuffer[Int](0)
-    i = 0
-    while (i < m) { if (buf(i) == ' ') starts += i + 1; i += 1 }
-    val nTok = if (m == 0) 0 else starts.length
-    if (nTok < n)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Any])
-    val nGrams = nTok - n + 1
-    val out = new Array[Any](nGrams)
-    i = 0
-    while (i < nGrams) {
-      val from = starts(i)
-      val until = if (i + n < nTok) starts(i + n) - 1 else m
-      // fromBytes shares `buf` (no copy); buf is never mutated after this
-      out(i) = UTF8String.fromBytes(buf, from, until - from)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
-  /** Max occurrence count of any word n-gram in the normalized text
-    * (same tokenization as [[wordNgramHashes]]) — the Gopher/C4-style
+  /** Max occurrence count of any lowered word n-gram — the Gopher/C4-style
     * repetition signal: a doc whose most common 2-gram covers a large
     * fraction of it is boilerplate/spam. Counts OCCURRENCES (not the
     * distinct set); fewer than n tokens → the whole text is one gram,
     * count 1. Collisions of the 64-bit gram hash could only ever
     * overcount, and at 64 bits are nil at any document length. */
   def ngramMaxCount(text: UTF8String, n: Int): Long = {
-    val lower = text.toLowerCase.getBytes
-    val buf = new Array[Byte](lower.length)
-    var m = 0
-    var i = 0
-    var inWs = true // leading ws dropped
-    while (i < lower.length) {
-      val b = lower(i)
-      if (isWs(b)) { if (!inWs && m > 0) { buf(m) = ' '; m += 1 }; inWs = true }
-      else { buf(m) = b; m += 1; inWs = false }
-      i += 1
-    }
-    if (m > 0 && buf(m - 1) == ' ') m -= 1
-    val starts = scala.collection.mutable.ArrayBuffer[Int](0)
-    i = 0
-    while (i < m) { if (buf(i) == ' ') starts += i + 1; i += 1 }
-    val nTok = if (m == 0) 0 else starts.length
-    if (nTok < n) return 1L
-    val nGrams = nTok - n + 1
-    val cap = tableCap(nGrams)
-    val table = new Array[Long](cap) // open addressing; 0 = empty slot
-    val counts = new Array[Long](cap)
-    var filled = 0
-    var best = 0L
-    i = 0
-    while (i < nGrams) {
-      val from = starts(i)
-      val until = if (i + n < nTok) starts(i + n) - 1 else m
-      var h = fnv64(buf, from, until)
-      if (h == 0L) h = 1L
-      var idx = (mix(h) & (cap - 1)).toInt
-      while (table(idx) != 0L && table(idx) != h) idx = (idx + 1) & (cap - 1)
-      if (table(idx) == 0L) { filled += 1; checkTableFull(filled, cap) }
-      table(idx) = h
-      counts(idx) += 1L
-      if (counts(idx) > best) best = counts(idx)
+    val t = tokenize(text, lowercase = true, trim = true)
+    if (t.count < n) return 1L
+    val h = gramHashes(t, n)
+    java.util.Arrays.sort(h)
+    var best = 1L
+    var run = 1L
+    var i = 1
+    while (i < h.length) {
+      run = if (h(i) == h(i - 1)) run + 1 else 1L
+      if (run > best) best = run
       i += 1
     }
     best
@@ -514,7 +427,7 @@ object ExprOps {
       else { bpe += 1; i += UTF8String.numBytesForFirstByte(b) }
     }
     val low = text.toLowerCase.getBytes
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
+    UnsafeArrayData.fromPrimitiveArray(
       Array(chars, alpha, punct, toks, bpe,
         stopScan(low, en), stopScan(low, de), stopScan(low, fr)))
   }
@@ -552,7 +465,7 @@ object ExprOps {
         }
       }
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    UnsafeArrayData
       .fromPrimitiveArray(out)
   }
 

@@ -68,11 +68,6 @@ object EcliFunctions {
     ecli.isNotNull && length(trim(ecli)) > lit(0) && formatOk && countryOk && yearOk
   }
 
-  /** German-court predicate (country == DE), valid ECLIs only. */
-  def isGermanCourt(ecli: Column, referenceYear: Int = 2026): Column =
-    isValidEcli(ecli, referenceYear) &&
-      parseEcli(normalizeEcli(ecli)).getField("country") === "DE"
-
   /** Extract all valid, normalized, distinct ECLIs from free text
     * (reference: validator/EcliValidator.java:102-125). Pure expressions:
     * regexp_extract_all → normalize → filter(valid) → array_distinct. */

@@ -54,13 +54,6 @@ object TextFunctions {
   def bpeTokenCountFromStats(st: Column): Column =
     element_at(st, 5).cast("int")
 
-  /** Generic stopword-hit count (regex form — kept for ad-hoc
-    * inventories; the fixed en/de/fr inventories go through the fused
-    * native pass instead). */
-  def stopwordHits(text: Column, words: Seq[String]): Column =
-    size(regexp_extract_all(lower(text),
-      lit("\\b(" + words.mkString("|") + ")\\b"), lit(0)))
-
   /** Language-ID by stopword evidence; ties / no evidence → "unknown".
     * Priority on exact ties: en > de > fr (deterministic). */
   def langId(text: Column): Column = langIdFromStats(text, textStatsCol(text))

@@ -26,17 +26,6 @@ import graft.expressions.KernelBarrier.withKernel
   */
 object Queries {
 
-  /** Shared tokenization discipline (the engine side of the oracle
-    * parity contract, duplicated per-oracle in SQL): collapse \\s+ runs
-    * to single spaces, trim, split on ' '; null/blank text yields an
-    * EMPTY array, never a [""] singleton. */
-  private def normToks(lowercase: Boolean) = {
-    val base = if (lowercase) lower(col("text")) else col("text")
-    val norm = trim(regexp_replace(base, "\\s+", " "))
-    when(col("text").isNull || norm === "",
-      array().cast("array<string>")).otherwise(split(norm, " "))
-  }
-
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
@@ -1496,10 +1485,10 @@ object Queries {
     // fix): Spark's trim strips only 0x20 spaces, so a tab/newline-only
     // document passed the old raw-text trim test and got n_tokens = 1
     // (split of "" yields [""]) while the oracle, the spec's driver
-    // reimplementation (String.trim), and the shared normToks discipline
-    // all yield 0 — a latent engine⇄oracle divergence the fixture never
-    // hit. Collapse-then-trim matches all three; fixture outputs
-    // unchanged (verified bit-identical).
+    // reimplementation (String.trim), and the shared tokenizer
+    // (ExprOps.tokenize) all yield 0 — a latent engine⇄oracle divergence
+    // the fixture never hit. Collapse-then-trim matches all three;
+    // fixture outputs unchanged (verified bit-identical).
     val base = docs.select(col("doc_id"),
       when(col("text").isNull ||
           trim(regexp_replace(col("text"), "\\s+", " ")) === "", 0L)
@@ -1687,8 +1676,8 @@ object Queries {
     * assembly exactly ([[SemOracleSql.q69Sql]]). */
   def q69FimSplit(s: SparkSession, dir: String): DataFrame = {
     fanout(t(s, dir, "documents"))
-      // native codegen tokenizer (r06), case-preserving; coalesce keeps
-      // normToks's null→[] coercion (a null doc must still emit its
+      // native codegen tokenizer (ExprOps.tokenize), case-preserving;
+      // coalesce maps a null doc to [] (it must still emit its
       // "<PRE><SUF><MID>" sentinel row, not a null)
       .select(col("doc_id"),
         coalesce(GraftFunctions.wordNgrams(col("text"), 1, lowercase = false),
@@ -1731,9 +1720,9 @@ object Queries {
     * integer counts, exact snippet strings. */
   def q70BestPassage(s: SparkSession, dir: String): DataFrame = {
     val terms = Seq("spark", "window", "vector")
-    // native codegen tokenizer (r06): null docs yield a null token array
-    // here where normToks yielded [] — both are dropped by the
-    // size(hp) > 0 filter below, so the emitted rows are identical
+    // native codegen tokenizer (ExprOps.tokenize): null docs yield a null
+    // token array, which the size(hp) > 0 filter below drops like an
+    // empty one
     val toks = GraftFunctions.wordNgrams(col("text"), 1, lowercase = true)
     val hitPos = filter(
       transform(col("t"), (x, i) =>
@@ -1854,7 +1843,7 @@ object Queries {
   def q73TfidfTerms(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("source").isNotNull)
     val tf = docs
-      // native codegen tokenizer (r06): ≡ explode(normToks(true))
+      // one row per lowered token of ExprOps.tokenize (native, r06)
       .select(col("source"),
         explode(GraftFunctions.wordNgrams(col("text"), 1)).as("tok"))
       .groupBy(col("source"), col("tok"))
@@ -1894,8 +1883,8 @@ object Queries {
     * declaratively. Oracle is the plain relational form. */
   def q74InvertedIndex(s: SparkSession, dir: String): DataFrame =
     fanout(t(s, dir, "documents"))
-      // native codegen tokenizer (r06): ≡ explode(normToks(true)) —
-      // null/blank docs emit no rows in both shapes
+      // one row per lowered token of ExprOps.tokenize (native, r06);
+      // null/blank docs emit no rows
       .select(col("doc_id"),
         explode(GraftFunctions.wordNgrams(col("text"), 1)).as("term"))
       .groupBy(col("term"), col("doc_id"))
@@ -1919,7 +1908,7 @@ object Queries {
   def q75VocabGrowth(s: SparkSession, dir: String): DataFrame =
     fanout(t(s, dir, "documents"))
       .filter(col("source").isNotNull)
-      // native codegen tokenizer (r06): ≡ explode(normToks(true))
+      // one row per lowered token of ExprOps.tokenize (native, r06)
       .select(col("source"),
         explode(GraftFunctions.wordNgrams(col("text"), 1)).as("tok"))
       .groupBy(col("source"), col("tok"))
@@ -1952,8 +1941,8 @@ object Queries {
     val wHead = Window.partitionBy(col("w1"))
     // native codegen bigram stream (r06): "w1 w2" gram strings split at
     // their single space via substring_index — row-for-row equal to the
-    // former normToks + zip_with/slice struct chain (docs under 2 tokens
-    // emit nothing in both shapes)
+    // zip_with/slice struct chain over ExprOps.tokenize's tokens (docs
+    // under 2 tokens emit nothing in both shapes)
     fanout(t(s, dir, "documents"))
       .select(explode(GraftFunctions.wordNgrams(col("text"), 2)).as("g"))
       .select(substring_index(col("g"), " ", 1).as("w1"),
@@ -2034,7 +2023,7 @@ object Queries {
     val docs = t(s, dir, "documents")
     val nDocs = docs.count() // driver scalar: idf's corpus constant
     val tf = docs
-      // native codegen tokenizer (r06): ≡ explode(normToks(true))
+      // one row per lowered token of ExprOps.tokenize (native, r06)
       .select(col("doc_id"),
         explode(GraftFunctions.wordNgrams(col("text"), 1)).as("term"))
       .groupBy(col("term"), col("doc_id"))

@@ -97,8 +97,10 @@ object SeenSet {
     * Returns exactly `unseenExact`'s rows.
     *
     * Scale envelope: at 10^9 seen keys the segment set is ~1.2 GB — still
-    * broadcastable; beyond that use [[unseenTwoTier]] (cogrouped segments,
-    * fully distributed).
+    * broadcastable; beyond that only [[unseenTwoTier]] (cogrouped
+    * segments, fully distributed) keeps it off the driver. The crawl loop
+    * does not switch tiers on that size: it picks this tier on the prior
+    * epoch's seen fraction alone.
     *
     * Returns (unseen, cleanup). `cleanup()` must be called AFTER the
     * unseen rows are materialized downstream: it unpersists the shared

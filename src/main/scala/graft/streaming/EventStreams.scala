@@ -4,6 +4,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.expressions.ExprOps
 
 /** Structured Streaming surface (SURVEY.md §2.9). The reference streams by
   * cron re-runs (service/ScheduledCrawlerService.java:35-126); the Spark
@@ -187,14 +189,10 @@ object EventStreams {
   case class MgState(grams: Map[String, Long], n: Long)
   case class MgCandidates(shard: Int, version: Long, g: String, mg_count: Long)
 
-  /** q56's trigram tokenization in local Scala (lower → split on \s+ →
-    * drop empties → word trigrams). ASCII-equivalent to the SQL form;
-    * Locale.ROOT so the twin is machine-independent. */
+  /** q56's lowered word trigrams: the batch query's own kernel. */
   def trigrams(text: String): Iterator[String] = {
-    val toks = text.toLowerCase(java.util.Locale.ROOT)
-      .split("\\s+").iterator.filter(_.nonEmpty).toArray
-    if (toks.length < 3) Iterator.empty
-    else toks.sliding(3).map(_.mkString(" "))
+    val grams = ExprOps.wordNgrams(UTF8String.fromString(text), 3, lowercase = true)
+    Iterator.tabulate(grams.numElements())(grams.getUTF8String(_).toString)
   }
 
   /** The streaming twin of [[graft.readside.Queries.q56HeavyHitters]]:

@@ -302,6 +302,84 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("text kernels ≡ a plain-Scala reference tokenizer on hostile input") {
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.expressions.ExprOps
+    // the tokenization contract: ASCII \s runs collapse to one space, the
+    // ends are trimmed, the text splits on spaces; lowering is Spark's
+    // lower() (UTF8String.toLowerCase), which the kernels document as theirs
+    val sep = "[ \t\n\u000b\f\r]+"
+    def low(t: String) = UTF8String.fromString(t).toLowerCase.toString
+    def toks(t: String, lc: Boolean): Seq[String] =
+      (if (lc) low(t) else t).split(sep).toSeq.filter(_.nonEmpty)
+    def grams(t: String, n: Int, lc: Boolean): Seq[String] = {
+      val ts = toks(t, lc)
+      if (ts.length < n) Seq.empty else ts.sliding(n).map(_.mkString(" ")).toSeq
+    }
+    def fnvBytes(b: Array[Byte]): Long = {
+      var h = 0xcbf29ce484222325L
+      b.foreach { x => h ^= (x & 0xffL); h *= 0x100000001b3L }
+      h
+    }
+    def fnv(s: String): Long = fnvBytes(s.getBytes("UTF-8"))
+    def nz(h: Long) = if (h == 0L) 1L else h
+    def refHashes(t: String, n: Int): Seq[Long] =
+      if (toks(t, true).length < n) Seq(fnv(toks(t, true).mkString(" ")))
+      else grams(t, n, true).map(g => nz(fnv(g))).distinct
+    def refMaxCount(t: String, n: Int): Long =
+      if (toks(t, true).length < n) 1L
+      else grams(t, n, true).groupBy(identity).values.map(_.size).max.toLong
+    def refShingles(t: String, k: Int): Seq[Long] = {
+      val b = low(t).replaceAll(sep, " ").getBytes("UTF-8")
+      if (b.length < k) Seq(fnvBytes(b))
+      else b.sliding(k).map(w => nz(fnvBytes(w))).toSeq.distinct
+    }
+
+    val fixed = Seq("", " ", "\t", "\u000b", "\f", "\r\n", " \t\n\u000b\f\r ",
+      "a", " a", "a ", "\t\ta\r\n", "a b", "a\tb", "a\nb", "a\u000bb", "a\fb",
+      "a\rb", "a\r\nb", "a \t\n\u000b\f\r b", "  lead run x y z", "x y z trail run \n\t ",
+      "nbsp\u00a0is\u00a0not a separator", "em\u2003space too", "\u00a0", "\u2003 \u2003",
+      "Café CAFÉ café", "日本語 テキスト 日本語 テキスト", "emoji 😀 😀x 😀",
+      "Straße STRASSE ÄÖÜ äöü", "The  quick\tBrown fox\n\nthe QUICK brown fox",
+      "a a a a a a", "x y x y x y z")
+    val rnd = new scala.util.Random(17L)
+    val pieces = Array("a", "B", "bb", "Café", "日本", "😀", "x1", "the", "THE",
+      " ", "  ", "\t", "\n", "\u000b", "\f", "\r", "\r\n", "\u00a0", "\u2003")
+    val random = Seq.fill(400)(Seq.fill(rnd.nextInt(14))(pieces(rnd.nextInt(pieces.length))).mkString)
+    def strs(a: org.apache.spark.sql.catalyst.util.ArrayData) =
+      a.toSeq[UTF8String](StringType).map(_.toString)
+
+    // the reference itself: NBSP/U+2003 stay inside tokens, \r\n is one run
+    assert(toks("a\u00a0b\r\n\u2003c ", false) == Seq("a\u00a0b", "\u2003c"))
+
+    for (t <- fixed ++ random) {
+      val u = UTF8String.fromString(t)
+      val shown = t.flatMap(c => if (c < ' ') s"<${c.toInt}>" else c.toString)
+      for (n <- 1 to 4) {
+        val ctx = s"text='$shown' n=$n"
+        for (lc <- Seq(true, false))
+          assert(strs(ExprOps.wordNgrams(u, n, lc)) == grams(t, n, lc), s"wordNgrams $ctx lc=$lc")
+        assert(ExprOps.wordNgramHashSeq(u, n).toLongArray().toSeq == grams(t, n, true).map(fnv),
+          s"wordNgramHashSeq $ctx")
+        assert(ExprOps.wordNgramHashes(u, n).toLongArray().toSeq == refHashes(t, n),
+          s"wordNgramHashes $ctx")
+        assert(ExprOps.ngramMaxCount(u, n) == refMaxCount(t, n), s"ngramMaxCount $ctx")
+        assert(ExprOps.shingleHashes(u, n + 2).toLongArray().toSeq == refShingles(t, n + 2),
+          s"shingleHashes $ctx k=${n + 2}")
+      }
+      // q56's pass-1/pass-2 invariant: a gram string hashed alone gives
+      // the hash its position had in the whole text
+      val gs = ExprOps.wordNgrams(u, 3, lowercase = true)
+      val hs = ExprOps.wordNgramHashSeq(u, 3).toLongArray()
+      assert(gs.numElements() == hs.length, s"q56 text='$shown'")
+      hs.indices.foreach { i =>
+        assert(hs(i) == ExprOps.wordNgramHashSeq(gs.getUTF8String(i), 3).toLongArray()(0),
+          s"q56 pass-2 text='$shown' i=$i")
+      }
+    }
+  }
+
   test("unpinned text kernels inherit child non-determinism; pinned stay non-deterministic") {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Rand}
     import org.apache.spark.sql.types.StringType
