@@ -94,8 +94,8 @@ object CrawlLoop {
   def run(spark: SparkSession, cfg: CrawlConfig,
       stopAfter: Int = Int.MaxValue,
       store: PayloadStore = PayloadSink): Seq[EpochMetrics] = {
-    // finish any half-done store rewrite (seen consolidation or
-    // compaction, cuckoo segments, latest view) before reading the store
+    // finish any half-done store rewrite (seen consolidation, latest
+    // view) before reading the store
     StoreFiles.recover(spark, StoreFiles.swapMarker(cfg.workDir))
     val resumeFrom = lastCommittedEpoch(spark, cfg.workDir) + 1
     val until = math.min(cfg.epochs.toLong, resumeFrom.toLong + stopAfter.toLong).toInt
@@ -644,17 +644,14 @@ object CrawlLoop {
     * epoch — seen.SeenDeletes); null if none. */
   def readSeen(spark: SparkSession, workDir: String, epoch: Int)
       : org.apache.spark.sql.DataFrame = {
-    val fs = StoreFiles.fs(spark, workDir)
-    val dirs = (0 until epoch).map(e => s"$workDir/seen/epoch=$e")
-      .filter(d => fs.exists(new Path(d)))
-    if (dirs.isEmpty) null
-    else graft.seen.SeenDeletes.applyTombstones(spark, workDir,
-      spark.read.parquet(dirs: _*))
+    val dirs = seenEpochDirs(spark, workDir, epoch)
+    if (dirs.isEmpty) null else graft.seen.SeenDeletes.read(spark, workDir, dirs)
   }
 
-  /** All existing per-epoch seen directories (compaction targets). */
-  def seenEpochDirs(spark: SparkSession, workDir: String, epochs: Int): Seq[String] =
-    (0 until epochs).map(e => s"$workDir/seen/epoch=$e")
+  /** The existing seen/epoch=N directories with N < `below`, ascending. */
+  def seenEpochDirs(spark: SparkSession, workDir: String, below: Int): Seq[String] =
+    StoreFiles.epochs(spark, s"$workDir/seen").filter(_ < below)
+      .map(e => s"$workDir/seen/epoch=$e")
 
   /** Read the previous epoch's carry table (both queues — partition
     * pruning makes per-queue reads equally cheap if a caller wants one).

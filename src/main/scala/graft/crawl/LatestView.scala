@@ -59,18 +59,12 @@ object LatestView {
     pointerCols(written).write.mode(SaveMode.Overwrite)
       .parquet(s"${deltaRoot(workDir)}/epoch=$epoch")
 
-  private def listDeltaDirs(spark: SparkSession, workDir: String): Seq[String] = {
-    val fs = StoreFiles.fs(spark, workDir)
-    val root = new Path(deltaRoot(workDir))
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath.toString).filter(_.contains("epoch="))
-      // numeric ascending — compaction deletes OLDEST first, so a crash
-      // mid-deletion always leaves the NEWEST dirs and the next compact's
-      // tail max still equals the resolved value (lexicographic order
-      // would delete epoch=10 before epoch=2 and could regress a pointer)
-      .sortBy(_.split("epoch=").last.toInt).toSeq
-  }
+  // numeric ascending — compaction deletes OLDEST first, so a crash
+  // mid-deletion always leaves the NEWEST dirs and the next compact's
+  // tail max still equals the resolved value (lexicographic order
+  // would delete epoch=10 before epoch=2 and could regress a pointer)
+  private def listDeltaDirs(spark: SparkSession, workDir: String): Seq[String] =
+    StoreFiles.epochs(spark, deltaRoot(workDir)).map(e => s"${deltaRoot(workDir)}/epoch=$e")
 
   /** Resolve a pointer frame to one row per url_hash (max crawl_epoch
     * wins — epochs are unique per key). max(struct) keeps the plan
@@ -87,14 +81,14 @@ object LatestView {
     * `latestCompactEvery` epochs; also safe to call on demand before
     * heavy read workloads. */
   def compact(spark: SparkSession, workDir: String): Unit =
-    stageCompaction(spark, workDir)
+    stageFold(spark, workDir)
       .foreach(StoreFiles.swap(spark, StoreFiles.swapMarker(workDir), _))
 
   /** Write the merged view to `latest_staging/` and return the swap that
     * moves each staged bucket dir over `latest/` and then drops the
     * staging dir and the folded deltas (oldest first); None without
     * deltas. */
-  private[graft] def stageCompaction(spark: SparkSession, workDir: String)
+  private[graft] def stageFold(spark: SparkSession, workDir: String)
       : Option[StoreFiles.Swap] = {
     val deltaDirs = listDeltaDirs(spark, workDir)
     if (deltaDirs.isEmpty) return None
@@ -119,8 +113,7 @@ object LatestView {
     fs.delete(new Path(staging), true)
     merged.repartition(col("host_bucket"))
       .write.mode(SaveMode.Overwrite).partitionBy("host_bucket").parquet(staging)
-    val moves = fs.listStatus(new Path(staging)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("host_bucket="))
+    val moves = StoreFiles.list(spark, staging).filter(_.startsWith("host_bucket="))
       .map(b => s"$staging/$b" -> s"${latestDir(workDir)}/$b")
     Some(StoreFiles.Swap(moves, staging +: deltaDirs))
   }

@@ -23,6 +23,18 @@ object StoreFiles {
   def fs(spark: SparkSession, path: String): FileSystem =
     fs(spark.sparkContext.hadoopConfiguration, path)
 
+  /** The names under directory `dir` (one listing); empty when it does not
+    * exist. */
+  def list(spark: SparkSession, dir: String): Seq[String] =
+    try fs(spark, dir).listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  private val EpochDir = "epoch=(\\d+)".r
+
+  /** The N of every `epoch=N` directory under `dir`, ascending. */
+  def epochs(spark: SparkSession, dir: String): Seq[Int] =
+    list(spark, dir).collect { case EpochDir(n) => n.toInt }.sorted
+
   /** `staged → target` moves, then paths to drop. */
   final case class Swap(moves: Seq[(String, String)], drops: Seq[String])
 

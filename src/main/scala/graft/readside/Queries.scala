@@ -1116,7 +1116,7 @@ object Queries {
         Iterator((0L, n, true))
     }.toDF("h", "cnt", "sentinel"))
     val cands = sketch.filter(!col("sentinel")).select(col("h")).distinct()
-    // COUNT-GATED broadcast (the Deletes.applyTombstones discipline): the
+    // COUNT-GATED broadcast (q63 gates its sliver the same way): the
     // candidate bound is k·P, which at φ=4096 × thousands of partitions
     // can reach tens of millions of rows — an unconditional broadcast()
     // hint would collect that to the driver. Counting the materialized
@@ -1373,8 +1373,8 @@ object Queries {
     *
     * Scale shape: everything rides the 48-byte (xxhash64, md5) content
     * fingerprint, q24's collision-proof key — text never shuffles. The
-    * incoming sliver is distinct-ed and COUNT-GATED (the q56 /
-    * Deletes.applyTombstones discipline): under the cap it broadcasts into
+    * incoming sliver is distinct-ed and COUNT-GATED (the q56
+    * discipline): under the cap it broadcasts into
     * a semi-join probe of the raw history fingerprint stream — history is
     * scanned narrowly ONCE and never exchanged, the inverted-broadcast
     * shape of `SeenSet` — and only the matched-fingerprint sliver

@@ -73,122 +73,3 @@ object LongBloom {
     f
   }
 }
-
-/** Delete-capable cuckoo filter over Long keys — the fallback the north
-  * rule requires where the seen-set must honor deletes (reference: Solr
-  * deleteById/deleteByQuery, repository/SolrDocumentRepository.java:159-203,
-  * and FAILED-retry eligibility making "seen" non-append-only).
-  *
-  * 16-bit fingerprints, 4-slot buckets, standard partial-key cuckoo
-  * hashing (Fan et al., "Cuckoo Filter: Practically Better Than Bloom",
-  * CoNEXT 2014). No false negatives for present keys; deletes only for
-  * previously-inserted keys (standard cuckoo contract).
-  */
-final class CuckooFilter(val numBuckets: Int, val maxKicks: Int = 500)
-    extends Serializable {
-  require(numBuckets > 0 && (numBuckets & (numBuckets - 1)) == 0,
-    "numBuckets must be a power of two")
-  private val SlotsPerBucket = 4
-  // fingerprints packed 4 × 16-bit per long
-  private val table = new Array[Long](numBuckets)
-  private var count = 0L
-
-  @inline private def fingerprint(x: Long): Int = {
-    val f = (ExprOps.mix(x) & 0xffffL).toInt
-    if (f == 0) 1 else f // 0 means empty slot
-  }
-  @inline private def bucketOf(x: Long): Int =
-    (ExprOps.mix(x ^ 0xc2b2ae3d27d4eb4fL) & (numBuckets - 1)).toInt
-  @inline private def altBucket(b: Int, fp: Int): Int =
-    (b ^ (ExprOps.mix(fp.toLong) & (numBuckets - 1))).toInt
-
-  @inline private def slotGet(b: Int, s: Int): Int =
-    ((table(b) >>> (s * 16)) & 0xffffL).toInt
-  @inline private def slotSet(b: Int, s: Int, fp: Int): Unit =
-    table(b) = (table(b) & ~(0xffffL << (s * 16))) | (fp.toLong << (s * 16))
-
-  private def tryInsert(b: Int, fp: Int): Boolean = {
-    var s = 0
-    while (s < SlotsPerBucket) {
-      if (slotGet(b, s) == 0) { slotSet(b, s, fp); return true }
-      s += 1
-    }
-    false
-  }
-
-  def insert(x: Long): Boolean = {
-    val fp = fingerprint(x)
-    val b1 = bucketOf(x)
-    if (tryInsert(b1, fp) || tryInsert(altBucket(b1, fp), fp)) { count += 1; return true }
-    // displacement loop; deterministic victim slot derived from kick index
-    var b = if ((ExprOps.mix(x) & 1L) == 0L) b1 else altBucket(b1, fp)
-    var f = fp
-    var kick = 0
-    while (kick < maxKicks) {
-      val victim = (ExprOps.mix(b.toLong ^ (kick.toLong << 32) ^ f.toLong) & 3L).toInt
-      val old = slotGet(b, victim)
-      slotSet(b, victim, f)
-      f = old
-      b = altBucket(b, f)
-      if (tryInsert(b, f)) { count += 1; return true }
-      kick += 1
-    }
-    false // table too full
-  }
-
-  private def findSlot(b: Int, fp: Int): Int = {
-    var s = 0
-    while (s < SlotsPerBucket) {
-      if (slotGet(b, s) == fp) return s
-      s += 1
-    }
-    -1
-  }
-
-  def contains(x: Long): Boolean = {
-    val fp = fingerprint(x)
-    val b1 = bucketOf(x)
-    findSlot(b1, fp) >= 0 || findSlot(altBucket(b1, fp), fp) >= 0
-  }
-
-  /** Delete one copy of the key's fingerprint. True if removed. */
-  def delete(x: Long): Boolean = {
-    val fp = fingerprint(x)
-    val b1 = bucketOf(x)
-    val s1 = findSlot(b1, fp)
-    if (s1 >= 0) { slotSet(b1, s1, 0); count -= 1; return true }
-    val b2 = altBucket(b1, fp)
-    val s2 = findSlot(b2, fp)
-    if (s2 >= 0) { slotSet(b2, s2, 0); count -= 1; return true }
-    false
-  }
-
-  def size: Long = count
-
-  def serialize(): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(16 + table.length * 8)
-    bb.putInt(numBuckets); bb.putInt(maxKicks); bb.putLong(count)
-    table.foreach(bb.putLong)
-    bb.array()
-  }
-}
-
-object CuckooFilter {
-  /** Capacity-sized filter: numBuckets ≥ expected/(4·0.95), pow2. */
-  def create(expectedItems: Long): CuckooFilter = {
-    val needed = math.max(16L, math.ceil(expectedItems / (4 * 0.95)).toLong)
-    var b = 16
-    while (b < needed && b < (1 << 30)) b <<= 1
-    new CuckooFilter(b)
-  }
-
-  def deserialize(bytes: Array[Byte]): CuckooFilter = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val nb = bb.getInt(); val mk = bb.getInt(); val cnt = bb.getLong()
-    val f = new CuckooFilter(nb, mk)
-    var i = 0
-    while (i < nb) { f.table(i) = bb.getLong(); i += 1 }
-    f.count = cnt
-    f
-  }
-}

@@ -11,8 +11,8 @@ import graft.crawl.KeyedUrl
   * (service/CrawlerOrchestrationService.java:112-117): seen ⇔ the URL was
   * stored with terminal-success status, and ¬forceUpdate. FAILED rows are
   * NOT seen (they become retry-eligible), so the seen store is
-  * success-only and append-mostly; explicit deletes are served by the
-  * delete-capable [[CuckooFilter]] path.
+  * success-only and append-mostly; explicit deletes are tombstones that
+  * [[SeenDeletes]] merges on read.
   *
   * [[unseenExact]] (plain `left_anti` join) is the reference. The epoch
   * loop returns exactly its rows with a two-tier strategy: per-host-bucket

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions.col
   * [[vacuum]] materializes them.
   *
   * Division of labor inside S10: `graft.seen.SeenDeletes` removes keys
-  * from the URL-SEEN set (tombstones + per-bucket cuckoo segments) so a
-  * purged document becomes re-crawlable; THIS object removes the stored
-  * document rows themselves from the payload table. The two compose into
+  * from the URL-SEEN set (sequence-numbered tombstones, the same
+  * merge-on-read rule as this table's) so a purged document becomes
+  * re-crawlable; THIS object removes the stored document rows themselves
+  * from the payload table. The two compose into
   * the reference's full delete semantics (document gone from the store,
   * URL re-admitted by the frontier).
   *

@@ -479,15 +479,24 @@ class CrawlSpec extends SparkSpec {
       val got = tt.select("url_hash").as[Long].collect().toSet
       cleanup()
       assert(got == exact, s"frac=$frac: |got|=${got.size} |exact|=${exact.size}")
-      // tombstone merge on a random victim subset of the seen rows
-      val wdT = tmpDir()
-      val victims = seenRows.filter(_ => rnd.nextBoolean()).map(_.url_hash)
-      if (victims.nonEmpty) {
-        graft.seen.SeenDeletes.delete(spark, wdT, victims.toDF("url_hash"))
-        val merged = graft.seen.SeenDeletes.applyTombstones(spark, wdT, seen)
+      // tombstone merge: the seen rows spread over 3 epoch dirs, a random
+      // victim subset deleted after each; a tombstone hides exactly the
+      // rows written before it (the sequence-number rule)
+      if (seenRows.nonEmpty) {
+        val wdT = tmpDir()
+        val epochOf = seenRows.map(r => r.url_hash -> rnd.nextInt(3)).toMap
+        val tombs = (0 until 3).flatMap { e =>
+          spark.createDataset(seenRows.filter(r => epochOf(r.url_hash) == e))
+            .select($"url_hash", $"host_bucket").write.parquet(s"$wdT/seen/epoch=$e")
+          val victims = seenRows.map(_.url_hash).filter(_ => rnd.nextInt(3) == 0)
+          SeenDeletes.delete(spark, wdT, victims.toDF("url_hash"))
+          victims.map(_ -> (e + 1))
+        }
+        val merged = CrawlLoop.readSeen(spark, wdT, 3)
           .select("url_hash").as[Long].collect().toSet
-        assert(merged == seenRows.map(_.url_hash).toSet -- victims.toSet,
-          s"frac=$frac: tombstone merge diverged from plain anti-join")
+        val model = epochOf.keySet.filterNot(h =>
+          tombs.exists { case (t, seq) => t == h && epochOf(h) < seq })
+        assert(merged == model, s"frac=$frac: tombstone merge diverged from the sequence model")
       }
     }
   }
@@ -867,7 +876,49 @@ class CrawlSpec extends SparkSpec {
     assert(ctrlRows == 0, "undeleted seen URL was re-crawled")
   }
 
-  test("S10 compaction rewrites only affected partitions and clears tombstones") {
+  test("S10 re-crawl after a delete: the re-crawled URL is seen again") {
+    val wd = tmpDir()
+    def writeSeen(epoch: Int, hashes: Long*): Unit =
+      hashes.map(h => (h, (h % 8).toInt)).toDF("url_hash", "host_bucket")
+        .write.parquet(s"$wd/seen/epoch=$epoch")
+    writeSeen(0, 1L, 2L)
+    SeenDeletes.delete(spark, wd, Seq(1L).toDF("url_hash"))
+    assert(CrawlLoop.readSeen(spark, wd, 1).select("url_hash").as[Long]
+      .collect().toSet == Set(2L))
+    writeSeen(1, 1L) // the next epoch re-crawls 1 successfully
+    assert(seenMembers(wd) == Set(1L, 2L), "the delete hid a URL crawled after it")
+  }
+
+  test("S10 re-crawl after a delete: a deleted URL is fetched again at most once") {
+    val wd = tmpDir()
+    val cf = cfg.copy(workDir = wd, totalUrls = 12000, epochs = 6,
+      budgetPerHost = 1000, consolidateEvery = 2)
+    CrawlLoop.run(spark, cf, stopAfter = 2) // epochs 0..1
+    val seen01 = CrawlLoop.readSeen(spark, wd, 2).select("url_hash").as[Long].collect().toSet
+    // delete the seen URLs that come back in at least two later frontiers
+    val rules = Robots.syntheticRules(cf.numHosts, cf.seed)
+    val later = (2 until cf.epochs).flatMap { e =>
+      FrontierSynth.key(FrontierSynth.frontier(spark, cf.urlsPerEpoch, cf.numHosts,
+          cf.seed, e, epochOffset = e * cf.urlsPerEpoch), cf.buckets)
+        .filter(k => Robots.allows(rules.get(k.host), k.path))
+        .select("url_hash").as[Long].collect().distinct
+    }
+    val victims = later.groupBy(identity).collect {
+      case (h, hs) if hs.size >= 2 && seen01(h) => h
+    }.toSeq
+    assert(victims.size >= 5, s"fixture yielded ${victims.size} recurring seen URLs")
+    SeenDeletes.delete(spark, wd, victims.toDF("url_hash"))
+    CrawlLoop.run(spark, cf) // epochs 2..5
+    val fetched = spark.read.parquet(s"$wd/payload")
+      .filter($"crawl_epoch" >= 2 && $"status" === Status.Processed)
+      .select("url_hash").as[Long].collect().groupBy(identity)
+      .map { case (h, hs) => h -> hs.length }
+    val counts = victims.map(h => fetched.getOrElse(h, 0))
+    assert(counts.forall(_ <= 1), s"re-fetch counts of deleted URLs: ${counts.sorted.reverse.take(5)}")
+    assert(counts.contains(1), "no deleted URL was re-crawled")
+  }
+
+  test("S10 compaction: consolidation applies the tombstones and drops them") {
     val wd4 = tmpDir()
     val cf = cfg.copy(workDir = wd4)
     CrawlLoop.run(spark, cf, stopAfter = 2) // epochs 0..1
@@ -875,25 +926,31 @@ class CrawlSpec extends SparkSpec {
       .select("url_hash").as[Long].collect()
     val victims = seenAll.sorted.take(3).toSeq
     SeenDeletes.delete(spark, wd4, victims.toDF("url_hash"))
+    assert(file(s"$wd4/seen_tombstones/seq=2").exists)
     // merge-on-read view already excludes them
     val mor = CrawlLoop.readSeen(spark, wd4, 2)
       .select("url_hash").as[Long].collect().toSet
     assert(victims.forall(v => !mor.contains(v)))
     assert(mor.size == seenAll.toSet.size - victims.toSet.size)
-    // compaction: physical rewrite + tombstone clear
-    SeenDeletes.compact(spark, wd4, CrawlLoop.seenEpochDirs(spark, wd4, 2))
+    // consolidation: physical rewrite + tombstone clear
+    SeenDeletes.consolidate(spark, wd4, 2)
     val physical = spark.read.parquet(s"$wd4/seen/epoch=*")
       .select("url_hash").as[Long].collect().toSet
     assert(physical == mor)
-    assert(!new java.io.File(s"$wd4/seen_tombstones").exists)
-    assert(!new java.io.File(s"$wd4/seen_tombstones.cuckoo").exists)
+    assert(file(s"$wd4/seen_tombstones").list().isEmpty)
+    // a single seen dir is rewritten when tombstones apply to it
+    SeenDeletes.delete(spark, wd4, Seq(physical.min).toDF("url_hash"))
+    SeenDeletes.consolidate(spark, wd4, 2)
+    assert(spark.read.parquet(s"$wd4/seen/epoch=1").select("url_hash").as[Long]
+      .collect().toSet == physical - physical.min)
+    assert(file(s"$wd4/seen_tombstones").list().isEmpty)
   }
 
   test("S10 mass delete: 150k tombstones stay distributed end-to-end (no key ever on the driver)") {
     val wd = tmpDir()
     // deleteByQuery-scale purge: the victim set is a DataFrame predicate
-    // result, never a driver Seq; delete + merge-on-read + compact must
-    // all run with only counts/filter-bytes reaching the driver
+    // result, never a driver Seq; delete + merge-on-read + consolidate
+    // must all run with only counts reaching the driver
     val seen = spark.range(400000).select(
       (col("id") * 2654435761L).as("url_hash"),
       (col("id") % 8).cast("int").as("host_bucket"))
@@ -906,27 +963,35 @@ class CrawlSpec extends SparkSpec {
     val deleted = SeenDeletes.delete(spark, wd, victims)
     assert(deleted == nVictims)
     // merge-on-read ≡ plain anti-join, value-exact at this volume
-    val mor = SeenDeletes.applyTombstones(spark, wd, store)
+    val mor = CrawlLoop.readSeen(spark, wd, 1)
+    assert(mor.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
     val expect = store.join(victims, Seq("url_hash"), "left_anti")
     assert(mor.count() == expect.count())
     assert(mor.join(victims, Seq("url_hash"), "left_semi").count() == 0,
       "a tombstoned key survived the merge-on-read view")
-    // BEYOND-broadcast tier: forcing the shuffle confirm (tomb gate = 0,
-    // the deleteByQuery-scale path where nothing is broadcast at all)
-    // must be value-identical to the broadcast-tier view
-    val morShuffle = SeenDeletes.applyTombstones(spark, wd, store,
-      broadcastTombMax = 0L)
-    assert(morShuffle.exceptAll(mor).count() == 0 &&
-      mor.exceptAll(morShuffle).count() == 0,
-      "shuffle-confirm tier diverges from the broadcast tier")
-    // compaction rewrites the partition and the physical store matches
+    // the shuffle join (the plan Spark picks for a tombstone table past
+    // the broadcast threshold) must give the broadcast join's rows; the
+    // broadcast result is written out first, since a lazy frame would be
+    // re-planned under the changed setting
+    mor.write.parquet(s"$wd/mor_broadcast")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val morShuffle = CrawlLoop.readSeen(spark, wd, 1)
+      assert(morShuffle.queryExecution.executedPlan.toString.contains("SortMergeJoin"))
+      val morBroadcast = spark.read.parquet(s"$wd/mor_broadcast")
+      assert(morShuffle.exceptAll(morBroadcast).count() == 0 &&
+        morBroadcast.exceptAll(morShuffle).count() == 0,
+        "shuffle join diverges from the broadcast join")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // consolidation rewrites the dir and the physical store matches
     // (victim check re-derived from the predicate — the lazy `victims`
     // frame would re-read the now-rewritten store and assert vacuously)
-    SeenDeletes.compact(spark, wd, Seq(s"$wd/seen/epoch=0"))
+    SeenDeletes.consolidate(spark, wd, 1)
     val physical = spark.read.parquet(s"$wd/seen/epoch=0")
     assert(physical.count() == 400000L - nVictims)
     assert(physical.filter(pmod(col("url_hash"), lit(8L)) < 3).count() == 0)
-    assert(!new java.io.File(s"$wd/seen_tombstones").exists)
+    assert(file(s"$wd/seen_tombstones").list().isEmpty)
   }
 
   test("mega-host skew: prefilter bounds the shuffle input; schedule stays exact") {
@@ -1053,23 +1118,22 @@ class CrawlSpec extends SparkSpec {
     assert(seenMembers(sibling) == expectSibling, "a sibling of the work dir was deleted")
   }
 
-  test("crash between SeenDeletes.compact's delete and rename: recovery finishes the rewrite") {
+  test("crash in consolidation with tombstones: recovery drops the spent tombstones") {
     val wdC = tmpDir()
     val victims = Seq(3L, 150L, 199L)
     val expect = rangeSeen(wdC) -- victims
     SeenDeletes.delete(spark, wdC, victims.toDF("url_hash"))
-    val plan = SeenDeletes.stageCompaction(spark, wdC,
-      CrawlLoop.seenEpochDirs(spark, wdC, 2)).get
-    assert(plan.moves.size == 2)
+    val plan = SeenDeletes.stageConsolidation(spark, wdC, 2).get
+    assert(plan.drops.contains(s"$wdC/seen_tombstones/seq=2"))
     StoreFiles.begin(spark, StoreFiles.swapMarker(wdC), plan)
-    // crash: the first target deleted, its staged copy not yet renamed
-    org.apache.commons.io.FileUtils.deleteDirectory(file(plan.moves.head._2))
+    plan.moves.foreach(moveByHand) // crash after the rename, before the drops
+    assert(seenMembers(wdC) == expect)
     assert(StoreFiles.recover(spark, StoreFiles.swapMarker(wdC)))
     val physical = spark.read.parquet(s"$wdC/seen/epoch=*")
       .select("url_hash").as[Long].collect().toSet
     assert(physical == expect)
     assert(seenMembers(wdC) == expect)
-    assert(!file(s"$wdC/seen_tombstones").exists)
+    assert(file(s"$wdC/seen_tombstones").list().isEmpty)
   }
 
   test("crash midway through the latest-view bucket swap: the view still equals the window reader") {
@@ -1088,7 +1152,7 @@ class CrawlSpec extends SparkSpec {
       LatestView.appendDelta(spark, wdD, e, rows)
       if (e == 1) LatestView.compact(spark, wdD)
     }
-    val plan = LatestView.stageCompaction(spark, wdD).get
+    val plan = LatestView.stageFold(spark, wdD).get
     assert(plan.moves.size == 8)
     StoreFiles.begin(spark, StoreFiles.swapMarker(wdD), plan)
     // crash: half the buckets moved, the next target deleted but not renamed

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.seen.{CuckooFilter, LongBloom}
+import graft.seen.LongBloom
 
 class FiltersSpec extends AnyFunSuite {
 
@@ -64,36 +64,5 @@ class FiltersSpec extends AnyFunSuite {
     // cogrouped per-bucket variant (SeenSet.unseenTwoTier) must exist for
     // this regime; this assert documents the threshold arithmetic.
     assert(bytes * buckets.toLong > 8L * 1024 * 1024 * 1024)
-  }
-
-  test("cuckoo: insert/contains, no false negatives at 90% load") {
-    val n = 10000
-    val f = CuckooFilter.create(n)
-    val keys = (0 until n).map(i => i.toLong * 6364136223846793005L + 1442695040888963407L)
-    val inserted = keys.filter(f.insert)
-    assert(inserted.size == n, "insertions failed below design load")
-    assert(inserted.forall(f.contains))
-  }
-
-  test("cuckoo: deletes are honored (the bloom can't do this)") {
-    val f = CuckooFilter.create(1000)
-    val keys = (0 until 1000).map(i => i.toLong * 2862933555777941757L + 3037000493L)
-    keys.foreach(f.insert)
-    val (del, keep) = keys.splitAt(500)
-    del.foreach(k => assert(f.delete(k)))
-    assert(keep.forall(f.contains))
-    // deleted keys may still false-positive, but the rate must collapse
-    val resurrect = del.count(f.contains)
-    assert(resurrect < 25, s"deletes not honored: $resurrect/500 still present")
-    assert(f.size == 500)
-  }
-
-  test("cuckoo: retry semantics — delete makes a URL re-crawlable") {
-    val f = CuckooFilter.create(100)
-    val h = 0x1234567890abcdefL
-    assert(f.insert(h))
-    assert(f.contains(h)) // seen → would be skipped
-    assert(f.delete(h)) // FAILED after 1h → eligible again
-    assert(!f.contains(h) || { f.insert(h); true })
   }
 }

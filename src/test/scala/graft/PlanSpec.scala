@@ -319,6 +319,25 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("LeftSemi") && p.contains("LeftAnti"))
   }
 
+  test("seen tombstones: broadcast anti-join under epoch < seq, seen store never shuffled") {
+    import org.apache.spark.sql.functions._
+    val wd = java.nio.file.Files.createTempDirectory("plan-tombstones").toString
+    (0 until 2).foreach { e =>
+      spark.range(e * 1000L, e * 1000L + 1000L).select(col("id").as("url_hash"),
+        (col("id") % 8).cast("int").as("host_bucket"))
+        .write.parquet(s"$wd/seen/epoch=$e")
+    }
+    graft.seen.SeenDeletes.delete(spark, wd,
+      spark.range(0L, 2000L, 7L).select(col("id").as("url_hash")))
+    val seen = graft.crawl.CrawlLoop.readSeen(spark, wd, 2)
+    seen.write.format("noop").mode("overwrite").save()
+    val p = planExec(seen)
+    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"))
+    assert("\\(epoch#\\d+ < seq#\\d+\\)".r.findFirstIn(p).nonEmpty, "no epoch < seq condition")
+    assert(!p.contains("Exchange hashpartitioning"), "seen store shuffled")
+    assert(seen.columns.toSeq == Seq("url_hash", "host_bucket"))
+  }
+
   test("latest-view read: resolved store scanned (broadcast tail anti-join), tail-only shuffle, no Window") {
     import org.apache.spark.sql.functions._
     val wd = java.nio.file.Files.createTempDirectory("plan-latest").toString
