@@ -20,7 +20,6 @@ case class CrawlConfig(
     buckets: Int,
     budgetPerHost: Int,
     seed: Long = 42L,
-    bloomFpp: Double = 0.01,
     forceUpdate: Boolean = false,
     /** ST5 watchdog: an epoch running longer than this is cancelled and
       * marked FAILED (reference: 6 h stuck-operation timeout,
@@ -33,16 +32,11 @@ case class CrawlConfig(
     /** Cadence of the latest-view ([[LatestView]]) delta→resolved
       * compaction (bounds the read-time tail at K epochs of pointers).
       * 0 = never (readers resolve from deltas alone). */
-    latestCompactEvery: Int = 8,
-    /** Steady-state guard for the broadcast confirm: when the PREVIOUS
-      * epoch skipped more than this fraction of its candidates as already
-      * seen, the maybe-seen sliver is no longer "small" (it approaches the
-      * full candidate set on recrawl-heavy frontiers) and broadcasting it
-      * would hit the driver/broadcast ceiling — fall back to the fully
-      * distributed cogrouped confirm for the next epoch. Uses the prior
-      * epoch's state counts: zero extra jobs. */
-    maxSeenFracForBroadcast: Double = 0.5) {
+    latestCompactEvery: Int = 8) {
   def urlsPerEpoch: Long = totalUrls / epochs
+  /** False-positive rate of the seen-set bloom segments (recorded in each
+    * segment dir's `_graft_meta.json`). */
+  def bloomFpp: Double = 0.01
 }
 
 /** Thrown when the ST5 watchdog reaps a stuck epoch. */
@@ -80,11 +74,11 @@ final class StuckEpochException(val epoch: Int, timeoutMs: Long)
   *  - deferred+retry land in ONE partitioned carry table, and the bloom
   *    segment store is maintained by a distributed cogroup merge
   *    ([[graft.seen.SeenSet.mergeDeltaIntoSegments]]) instead of a
-  *    driver round-trip. The broadcast-tier probe still collects the
-  *    whole segment set (~12 GB at 10^10 seen keys) to the driver, and
-  *    its tier gate reads only the prior epoch's seen fraction
-  *    (`maxSeenFracForBroadcast`), not the segment set's size: nothing
-  *    bounds that collect yet.
+  *    driver round-trip. The broadcast-tier probe collects the whole
+  *    segment set, so the epoch picks that tier only when the set's
+  *    upper bound (and the sliver's) fits under Spark's own caps on a
+  *    driver round-trip ([[graft.seen.SeenSet.broadcastTierFits]]); at
+  *    10^10 seen keys (~12 GB of segments) it runs the cogrouped tier.
   */
 object CrawlLoop {
 
@@ -119,20 +113,12 @@ object CrawlLoop {
         case CrawlControl.Paused =>
           halted = true // no marker: pause is silent, resume just continues
         case CrawlControl.Running =>
-          // steady-state dup fraction from the previous epoch's state
-          // counts — drives the broadcast-vs-distributed confirm choice
-          // with no extra job
-          val priorSeenFrac = prior
-            .filter(_.n_candidates > 0)
-            .map(p => p.n_seen_skipped.toDouble / p.n_candidates)
-            .getOrElse(0.0)
           // carried-row estimate for the frontier-cache tier: the cached
           // frame is newKeyed ∪ deferred ∪ retry, which under tight host
           // budgets exceeds urlsPerEpoch by the carried share
           val priorCarried = prior.map(p => p.n_deferred + p.n_failed)
             .getOrElse(0L)
-          val m = runEpochWatched(spark, cfg, e, store, priorSeenFrac,
-            priorCarried, bcRules)
+          val m = runEpochWatched(spark, cfg, e, store, priorCarried, bcRules)
           prior = Some(m)
           out += m
           // automatic small-files maintenance: without it a 10^4-epoch
@@ -161,17 +147,17 @@ object CrawlLoop {
     * write a FAILED marker (no commit marker — resume replays the epoch
     * idempotently) and raise. */
   def runEpochWatched(spark: SparkSession, cfg: CrawlConfig, epoch: Int,
-      store: PayloadStore, priorSeenFrac: Double, priorCarried: Long,
+      store: PayloadStore, priorCarried: Long,
       rules: Broadcast[Map[String, RobotsRule]]): EpochMetrics = {
     if (cfg.stuckTimeoutMs == Long.MaxValue)
-      return runEpoch(spark, cfg, epoch, store, priorSeenFrac, priorCarried, rules)
+      return runEpoch(spark, cfg, epoch, store, priorCarried, rules)
     val group = s"graft-epoch-$epoch"
     import scala.concurrent.{Await, Future, TimeoutException}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val fut = Future {
       spark.sparkContext.setJobGroup(group, s"epoch $epoch", interruptOnCancel = true)
-      try runEpoch(spark, cfg, epoch, store, priorSeenFrac, priorCarried, rules)
+      try runEpoch(spark, cfg, epoch, store, priorCarried, rules)
       finally spark.sparkContext.clearJobGroup()
     }
     try Await.result(fut, cfg.stuckTimeoutMs.millis)
@@ -198,7 +184,7 @@ object CrawlLoop {
   /** One epoch. `rules` is the run's robots-rules broadcast, shared by
     * every epoch and released by [[run]]. */
   def runEpoch(spark: SparkSession, cfg: CrawlConfig, epoch: Int,
-      store: PayloadStore, priorSeenFrac: Double, priorCarried: Long,
+      store: PayloadStore, priorCarried: Long,
       rules: Broadcast[Map[String, RobotsRule]]): EpochMetrics = {
     import spark.implicits._
     import org.apache.spark.sql.Observation
@@ -246,12 +232,13 @@ object CrawlLoop {
     // + object headers, ~96 B/row serialized); thresholds leave the
     // unified pool to execution. Degrade, never die: DISK_ONLY completes
     // at any input size (local-disk blocks, zero storage-pool pressure).
+    // footprint = new slice + CARRIED rows (deferred+retry from the prior
+    // epoch's counts — under tight/zero host budgets the carry dominates
+    // urlsPerEpoch, and sizing on the slice alone kept MEMORY_AND_DISK in
+    // exactly the GC-overhead regime this tier switch exists to prevent)
+    val estRows = cfg.urlsPerEpoch + priorCarried
     val frontierCacheLevel = {
-      // footprint = new slice + CARRIED rows (deferred+retry from the
-      // prior epoch's counts — under tight/zero host budgets the carry
-      // dominates urlsPerEpoch, and sizing on the slice alone kept
-      // MEMORY_AND_DISK in exactly the GC-overhead regime this tier
-      // switch exists to prevent); memory = where the blocks LIVE —
+      // memory = where the blocks LIVE —
       // this JVM's heap when the driver IS the executor (master "local"
       // or "local[N]"; NOT local-cluster, which forks real executor
       // JVMs), else the AGGREGATE executor budget: per-executor heap ×
@@ -259,7 +246,6 @@ object CrawlLoop {
       // defaultParallelism / executor cores) — the cached rows spread
       // across the fleet, so comparing global rows to ONE executor's
       // heap was over-conservative tiering.
-      val estRows = cfg.urlsPerEpoch + priorCarried
       val conf = spark.sparkContext.getConf
       val master = conf.get("spark.master", "local")
       val heap =
@@ -304,11 +290,10 @@ object CrawlLoop {
       .as[KeyedUrl]
 
     // 3. URL-seen anti-join (success-only store; forceUpdate bypasses).
-    // Two-tier: broadcast bloom probe (no shuffle) + exact confirm of the
-    // positives; segments stay distributed (cogroup path) only when too
-    // big to broadcast. No count job here: the seen-skip count is the
-    // residual of the state aggregation (every candidate is exactly one
-    // of dup/seen-skipped/denied/admitted/deferred).
+    // Two-tier: bloom probe + exact confirm of the positives. No count job
+    // here: the seen-skip count is the residual of the state aggregation
+    // (every candidate is exactly one of dup/seen-skipped/denied/admitted/
+    // deferred).
     val seen = readSeen(spark, cfg.workDir, epoch)
     // fixed plan-size bloom shape: every epoch's segments share it, so the
     // persisted segment store can be OR-merged incrementally across epochs
@@ -322,10 +307,7 @@ object CrawlLoop {
     // preceding forceUpdate epoch, or a crash replay that already dropped
     // it). The ONLY place segments are collected is the broadcast-tier
     // probe; the cogrouped tier and the segment WRITE below are
-    // distributed end-to-end. The tier choice below reads only the prior
-    // epoch's seen fraction, not the segment set's size, so that collect
-    // has no size ceiling (at 10^10 seen keys the set is ~12 GB — a
-    // per-epoch driver round-trip of it would be the scale killer).
+    // distributed end-to-end.
     // lazy val + persist on the FALLBACK branch: the segment dataset has
     // two consumers (the probe and the bloom write below), and a `def`
     // would re-run the full-store rebuild once per consumer — the exact
@@ -341,19 +323,18 @@ object CrawlLoop {
           segsFallback = Some(rebuilt)
           rebuilt
         }
+    // tier from sizes known before any job runs: the segment set at its
+    // fixed shape, and a sliver of every candidate (16 B each)
+    val sql = spark.sessionState.conf
+    val broadcastTier = SeenSet.broadcastTierFits(
+      SeenSet.segmentSetBytes(cfg.buckets, expectedPerBucket, cfg.bloomFpp),
+      16L * estRows, sql.autoBroadcastJoinThreshold,
+      spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g"),
+      sql.maxBroadcastTableSizeInBytes)
     val (unseen, seenCleanup): (Dataset[KeyedUrl], () => Unit) =
       if (cfg.forceUpdate || seen == null) (deduped, () => ())
-      // broadcast confirm only while the maybe-seen sliver is provably
-      // small: its size tracks the TRUE-duplicate fraction of candidates
-      // (not the bloom fpp), so at steady-state recrawl ratios it
-      // approaches the full candidate set and would blow the broadcast /
-      // driver ceiling. The prior epoch's seen-skip fraction is the
-      // zero-cost estimator; past the threshold, the cogrouped two-tier
-      // keeps everything distributed (same rows, graceful degradation).
-      else if (priorSeenFrac <= cfg.maxSeenFracForBroadcast)
-        SeenSet.unseenTwoTierBroadcast(deduped, seen, segmentsDs)
-      else
-        SeenSet.unseenTwoTier(deduped, seen, segmentsDs)
+      else if (broadcastTier) SeenSet.unseenTwoTierBroadcast(deduped, seen, segmentsDs)
+      else SeenSet.unseenTwoTier(deduped, seen, segmentsDs)
 
     // 4. fused host stage: robots admission + politeness rank + budget —
     // map-side deny/top-k prefilter, then one repartition(host)+sort pass.
@@ -644,14 +625,9 @@ object CrawlLoop {
     * epoch — seen.SeenDeletes); null if none. */
   def readSeen(spark: SparkSession, workDir: String, epoch: Int)
       : org.apache.spark.sql.DataFrame = {
-    val dirs = seenEpochDirs(spark, workDir, epoch)
+    val dirs = StoreFiles.epochDirs(spark, s"$workDir/seen", epoch)
     if (dirs.isEmpty) null else graft.seen.SeenDeletes.read(spark, workDir, dirs)
   }
-
-  /** The existing seen/epoch=N directories with N < `below`, ascending. */
-  def seenEpochDirs(spark: SparkSession, workDir: String, below: Int): Seq[String] =
-    StoreFiles.epochs(spark, s"$workDir/seen").filter(_ < below)
-      .map(e => s"$workDir/seen/epoch=$e")
 
   /** Read the previous epoch's carry table (both queues — partition
     * pruning makes per-queue reads equally cheap if a caller wants one).

@@ -64,7 +64,7 @@ object LatestView {
   // tail max still equals the resolved value (lexicographic order
   // would delete epoch=10 before epoch=2 and could regress a pointer)
   private def listDeltaDirs(spark: SparkSession, workDir: String): Seq[String] =
-    StoreFiles.epochs(spark, deltaRoot(workDir)).map(e => s"${deltaRoot(workDir)}/epoch=$e")
+    StoreFiles.epochDirs(spark, deltaRoot(workDir))
 
   /** Resolve a pointer frame to one row per url_hash (max crawl_epoch
     * wins — epochs are unique per key). max(struct) keeps the plan

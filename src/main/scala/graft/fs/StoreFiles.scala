@@ -35,6 +35,10 @@ object StoreFiles {
   def epochs(spark: SparkSession, dir: String): Seq[Int] =
     list(spark, dir).collect { case EpochDir(n) => n.toInt }.sorted
 
+  /** The existing `dir/epoch=N` directories with N < `below`, ascending. */
+  def epochDirs(spark: SparkSession, dir: String, below: Int = Int.MaxValue): Seq[String] =
+    epochs(spark, dir).filter(_ < below).map(e => s"$dir/epoch=$e")
+
   /** `staged → target` moves, then paths to drop. */
   final case class Swap(moves: Seq[(String, String)], drops: Seq[String])
 

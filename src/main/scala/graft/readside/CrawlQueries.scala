@@ -72,16 +72,19 @@ object CrawlQueries {
   private[graft] def c02Keyed(s: SparkSession): Dataset[KeyedUrl] =
     FrontierSynth.key(FrontierSynth.frontier(s, 10000, 60, 42L, 0), 16)
 
+  /** Every `epoch=N` dir of the fixture's `table` as explicit paths: no
+    * partition column, and no glob path probed for a streaming sink log. */
+  private def epochTable(s: SparkSession, table: String): DataFrame =
+    s.read.parquet(graft.fs.StoreFiles.epochDirs(s, s"${crawlDir(s)}/$table"): _*)
+
   /** The crawl's epoch metrics table (candidates → denied/dup/seen/
     * admitted/deferred → statuses). */
   def c03EpochMetrics(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${crawlDir(s)}/metrics/epoch=*")
-      .orderBy(col("epoch"))
+    epochTable(s, "metrics").orderBy(col("epoch"))
 
   /** Per-partition lineage of the payload sink. */
   def c04Lineage(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${crawlDir(s)}/lineage/epoch=*")
-      .orderBy(col("epoch"), col("host_bucket"))
+    epochTable(s, "lineage").orderBy(col("epoch"), col("host_bucket"))
 
   /** Payload invariants rollup: per (fmt, status) counts + PSNR floor. */
   def c05PayloadInvariants(s: SparkSession, dir: String): DataFrame =
@@ -167,7 +170,7 @@ object CrawlQueries {
     val segs = s.read.parquet(s"$wd/seen_blooms/epoch=${cfgBase.epochs - 1}")
       .select(col("host_bucket").cast("int"), col("bloom"))
       .as[(Int, Array[Byte])]
-    val exact = s.read.parquet(s"$wd/seen/epoch=*")
+    val exact = epochTable(s, "seen")
       .groupBy(col("host_bucket").cast("int").as("host_bucket"))
       .agg(countDistinct(col("url_hash")).as("n_exact"))
     segs.map { case (b, bytes) =>

@@ -2,7 +2,6 @@ package graft.seen
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.crawl.CrawlLoop
 import graft.fs.StoreFiles
 
 /** S10 delete pipeline for the URL-seen store (reference:
@@ -74,7 +73,7 @@ object SeenDeletes {
     * that installs it; None when there is nothing to merge or apply. */
   private[graft] def stageConsolidation(spark: SparkSession, workDir: String,
       uptoEpoch: Int): Option[StoreFiles.Swap] = {
-    val dirs = CrawlLoop.seenEpochDirs(spark, workDir, uptoEpoch)
+    val dirs = StoreFiles.epochDirs(spark, s"$workDir/seen", uptoEpoch)
     val spent = StoreFiles.list(spark, tombDir(workDir))
       .collect { case d @ SeqDir(s) if s.toInt <= uptoEpoch => s"${tombDir(workDir)}/$d" }
     if (dirs.isEmpty || (dirs.size < 2 && spent.isEmpty)) return None

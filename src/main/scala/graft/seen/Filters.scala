@@ -54,12 +54,18 @@ final class LongBloom(val numBits: Long, val numHashes: Int) extends Serializabl
 }
 
 object LongBloom {
-  /** Size for `expectedItems` at `fpp` (standard formulas), rounded up to
-    * a multiple of 64 bits. */
-  def create(expectedItems: Long, fpp: Double): LongBloom = {
+  /** Bits for `expectedItems` at `fpp` (m = -n ln(fpp)/ln(2)^2), rounded
+    * up to a multiple of 64. */
+  def numBits(expectedItems: Long, fpp: Double): Long = {
     val n = math.max(1L, expectedItems)
     val m0 = math.ceil(-n * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    val m = ((m0 + 63) / 64) * 64
+    ((m0 + 63) / 64) * 64
+  }
+
+  /** Size for `expectedItems` at `fpp` (standard formulas). */
+  def create(expectedItems: Long, fpp: Double): LongBloom = {
+    val n = math.max(1L, expectedItems)
+    val m = numBits(n, fpp)
     val k = math.max(1, math.round((m.toDouble / n) * math.log(2)).toInt)
     new LongBloom(m, k)
   }

@@ -19,12 +19,11 @@ import graft.crawl.KeyedUrl
   * bloom segments pre-filter the candidates and an exact anti-join
   * confirms the (few) bloom positives — bloom negatives are *definitely
   * new*, so membership stays byte-identical while the exact join sees only
-  * ~fpp + true-dup fraction of candidates. From the prior epoch's
-  * seen-skip fraction it picks [[unseenTwoTierBroadcast]] (segments
-  * broadcast, probe is a predicate, no shuffle) or [[unseenTwoTier]]
-  * (segments cogrouped on host_bucket, no driver collect, no broadcast
-  * ceiling — survives 10^10 seen keys; at that scale also store `seen`
-  * bucketed-sorted by url_hash so the confirm shuffles only survivors).
+  * ~fpp + true-dup fraction of candidates. [[broadcastTierFits]] picks
+  * [[unseenTwoTierBroadcast]] (segments collected and broadcast, the store
+  * scanned once and never shuffled) while its driver round-trips fit
+  * Spark's caps, else [[unseenTwoTier]] (segments cogrouped on
+  * host_bucket, no driver collect — survives 10^10 seen keys).
   */
 object SeenSet {
 
@@ -89,18 +88,29 @@ object SeenSet {
       }
   }
 
+  /** The segment set's bytes at its fixed bloom shape (none allocated). */
+  def segmentSetBytes(buckets: Int, expectedPerBucket: Long, fpp: Double): Long =
+    buckets * (12L + LongBloom.numBits(expectedPerBucket, fpp) / 8)
+
+  /** The tier rule: [[unseenTwoTierBroadcast]] only while broadcasting is
+    * on (the switch `readSeen`'s tombstone join follows) and both upper
+    * bounds — segment set, and sliver at 16 B (one single-`long`
+    * UnsafeRow) per candidate — fit `maxResultSize` (0 = no cap) and
+    * `maxBroadcastTableSize`. */
+  def broadcastTierFits(segmentSetBytes: Long, sliverBytes: Long,
+      autoBroadcastThreshold: Long, maxResultSize: Long,
+      maxBroadcastTableSize: Long): Boolean = {
+    def fits(b: Long) = (maxResultSize == 0 || b <= maxResultSize) && b <= maxBroadcastTableSize
+    autoBroadcastThreshold >= 0 && fits(segmentSetBytes) && fits(sliverBytes)
+  }
+
   /** Two-tier unseen with a BROADCAST bloom probe: segments are collected
     * (they are tiny relative to the seen set — ~1.2 bytes/key at 1% fpp),
     * broadcast, and probed by a predicate on (host_bucket, url_hash) —
     * no shuffle, rows stay in Tungsten format. Bloom positives are
     * confirmed by the exact anti-join; negatives are definitely new.
-    * Returns exactly `unseenExact`'s rows.
-    *
-    * Scale envelope: at 10^9 seen keys the segment set is ~1.2 GB — still
-    * broadcastable; beyond that only [[unseenTwoTier]] (cogrouped
-    * segments, fully distributed) keeps it off the driver. The crawl loop
-    * does not switch tiers on that size: it picks this tier on the prior
-    * epoch's seen fraction alone.
+    * Returns exactly `unseenExact`'s rows. The crawl loop enters this tier
+    * only when [[broadcastTierFits]] bounds the collect under Spark's caps.
     *
     * Returns (unseen, cleanup). `cleanup()` must be called AFTER the
     * unseen rows are materialized downstream: it unpersists the shared
@@ -136,10 +146,9 @@ object SeenSet {
     // one narrow columnar scan, zero exchange, emitting only the keys that
     // are genuinely seen (≤ sliver); (2) the sliver anti-joins that tiny
     // hit set, also broadcast. The per-epoch store cost drops from a full
-    // shuffle+sort to one scan. Valid exactly in this path's broadcast
-    // tier (sliver = fp-rate + true-dup fraction of candidates, same
-    // envelope as the bloom broadcast itself); beyond it, [[unseenTwoTier]]
-    // keeps everything distributed.
+    // shuffle+sort to one scan. Valid while the sliver's bound fits the
+    // broadcast caps ([[broadcastTierFits]]); beyond it, [[unseenTwoTier]]
+    // confirms with a plain anti-join that Spark plans by size.
     val sliverKeys = maybeSeen.select(col("url_hash"))
     val hits = seen.select(col("url_hash"))
       .join(broadcast(sliverKeys), Seq("url_hash"), "left_semi")

@@ -1269,15 +1269,21 @@ class CrawlSpec extends SparkSpec {
   }
 
   test("cogrouped seen tier: full loop with segments never collected reproduces the run") {
-    // maxSeenFracForBroadcast = -1 forces the fully distributed two-tier
+    // autoBroadcastJoinThreshold = -1 turns broadcasting off, so the tier
+    // rule (SeenSet.broadcastTierFits) picks the fully distributed two-tier
     // confirm (cogrouped segments + exact anti-join) for every epoch with
     // a seen store: the ONLY code path that collects segments is the
     // broadcast probe, and this run never enters it — so the loop runs
     // start-to-finish with bloom segments living exclusively in executors
     // (the 10^10-seen-keys shape). Membership and metrics must equal the
     // broadcast-tier run bit for bit.
-    val c = cfg.copy(workDir = tmpDir(), maxSeenFracForBroadcast = -1.0)
-    val mCg = CrawlLoop.run(spark, c)
+    val c = cfg.copy(workDir = tmpDir())
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val mCg =
+      try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        CrawlLoop.run(spark, c)
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     val seenCg = spark.read.parquet(s"${c.workDir}/seen/epoch=*")
       .select("url_hash").as[Long].collect().toSet
     assert(seenCg == sim.seen, "cogroup tier diverged from simulator membership")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.seen.LongBloom
+import graft.seen.{LongBloom, SeenSet}
 
 class FiltersSpec extends AnyFunSuite {
 
@@ -49,7 +49,8 @@ class FiltersSpec extends AnyFunSuite {
     // the north-rule design point: 10^10 URLs sharded over 4096
     // host_buckets at fpp 0.01 → each bucket's segment must be a small,
     // independently loadable unit (one per task in the cogrouped two-tier
-    // probe; broadcast only when the WHOLE store fits). Pin the formula:
+    // probe; the broadcast tier runs only when the WHOLE segment set fits
+    // Spark's driver round-trip caps, see the tier-rule test). Pin the formula:
     // m = -n ln(fpp)/ln(2)^2 ≈ 9.585 bits/key at 0.01.
     val buckets = 4096
     val perBucket = 10000000000L / buckets // ≈ 2.44M keys
@@ -64,5 +65,36 @@ class FiltersSpec extends AnyFunSuite {
     // cogrouped per-bucket variant (SeenSet.unseenTwoTier) must exist for
     // this regime; this assert documents the threshold arithmetic.
     assert(bytes * buckets.toLong > 8L * 1024 * 1024 * 1024)
+    // the allocation-free bound the tier rule uses is this exact size
+    assert(SeenSet.segmentSetBytes(buckets, perBucket, 0.01) == bytes * buckets)
+  }
+
+  test("seen-probe tier rule: broadcast only while both bounds fit Spark's caps (no bloom allocated)") {
+    // Spark's defaults: autoBroadcastJoinThreshold 10 MiB,
+    // maxBroadcastTableSize 8 GiB, spark.driver.maxResultSize 1 GiB
+    val sql = new org.apache.spark.sql.internal.SQLConf
+    val threshold = sql.autoBroadcastJoinThreshold
+    val maxTable = sql.maxBroadcastTableSizeInBytes
+    val maxResult = 1L << 30
+    // (totalUrls, buckets, rows per epoch) → the rule's verdict
+    def broadcast(totalUrls: Long, buckets: Int, perEpoch: Long,
+        threshold: Long = threshold, maxResult: Long = maxResult): Boolean =
+      SeenSet.broadcastTierFits(
+        SeenSet.segmentSetBytes(buckets, math.max(64L, totalUrls / buckets), 0.01),
+        16L * perEpoch, threshold, maxResult, maxTable)
+    // the 10^10-URL, 4096-bucket design point (1000 epochs): ~12 GB of
+    // segments
+    assert(!broadcast(10000000000L, 4096, 10000000000L / 1000))
+    // perfbench's shape: ~288 KB of segments
+    assert(SeenSet.segmentSetBytes(32, 240000L / 32, 0.01) < 300000L)
+    assert(broadcast(240000L, 32, 20000L))
+    // CrawlBench's 16M-URL, 2-epoch shape: ~19 MB of segments
+    assert(broadcast(16000000L, 32, 8000000L))
+    // a 1M-URL, 8-bucket, 2-epoch crawl under a 1 MiB result cap: the
+    // ~1.2 MB segment set no longer fits
+    assert(broadcast(1000000L, 8, 500000L, maxResult = 0L))
+    assert(!broadcast(1000000L, 8, 500000L, maxResult = 1L << 20))
+    // broadcasting switched off
+    assert(!broadcast(240000L, 32, 20000L, threshold = -1L))
   }
 }
