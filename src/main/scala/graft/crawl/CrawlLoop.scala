@@ -2,8 +2,9 @@ package graft.crawl
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.fs.StoreFiles
 import graft.seen.SeenSet
@@ -58,12 +59,22 @@ final class StuckEpochException(val epoch: Int, timeoutMs: Long)
   * the fused robots+politeness stage, fed by a map-side per-host top-k
   * prefilter so a Zipf mega-host ships ≤ budget×partitions rows into the
   * shuffle (and the streamed run-length pass bounds task memory);
-  * (3) the partitioned write. Everything else is narrow. PlanSpec pins
-  * this shape.
+  * (3) the partitioned write. After the write only slim O(epoch) rows
+  * shuffle: the per-bucket lineage aggregate and the bloom-delta cogroup
+  * onto the segment set. Everything else is narrow. PlanSpec pins this
+  * shape.
   *
-  * Fixed per-epoch driver cost is engineered down three ways (round-5;
+  * Fixed per-epoch driver cost is engineered down four ways (round-5;
   * the measured baseline was ~12.5 s/epoch of pure driver time,
   * BASELINE.md round-4 addendum):
+  *  - the epoch runs as a DAG, not a queue: the five sinks after the
+  *    payload write (lineage, latest delta, seen delta, bloom segments,
+  *    carry) read only cached frames and none reads another's output, so
+  *    they run as concurrent jobs ([[Concurrent.all]]); the metrics row
+  *    and the commit marker wait for all five. The post-commit seen
+  *    consolidation and latest-view fold likewise stage concurrently and
+  *    install under one swap. The store's own tables are read under
+  *    declared schemas, so no read runs a schema-inference job;
   *  - epoch-varying values enter plans as [[graft.expressions.ParamLit]]
   *    bound parameters, so every epoch re-uses the compiled whole-stage
   *    code (epoch literals previously busted the codegen cache);
@@ -121,17 +132,7 @@ object CrawlLoop {
           val m = runEpochWatched(spark, cfg, e, store, priorCarried, bcRules)
           prior = Some(m)
           out += m
-          // automatic small-files maintenance: without it a 10^4-epoch
-          // crawl accumulates one seen dir per epoch and readSeen's
-          // listing + tiny-file reads grow with crawl age. Runs AFTER the
-          // epoch's commit (membership-identical merge under a swap marker —
-          // a kill mid-consolidation is finished by the recovery call above).
-          if (cfg.consolidateEvery > 0 && (e + 1) % cfg.consolidateEvery == 0)
-            graft.seen.SeenDeletes.consolidate(spark, cfg.workDir, e + 1)
-          // latest-view compaction on its own cadence (after the commit:
-          // replay-safe — the merge is idempotent by key)
-          if (cfg.latestCompactEvery > 0 && (e + 1) % cfg.latestCompactEvery == 0)
-            LatestView.compact(spark, cfg.workDir)
+          maintain(spark, cfg, e)
           e += 1
       }
     } finally {
@@ -140,6 +141,25 @@ object CrawlLoop {
       bcRules.unpersist()
     }
     out.toSeq
+  }
+
+  /** Post-commit store maintenance after `epoch`, each rewrite on its own
+    * cadence: seen-store consolidation (without it a 10^4-epoch crawl
+    * keeps one seen dir per epoch and readSeen's listing and tiny-file
+    * reads grow with crawl age) and the latest-view fold (idempotent by
+    * key, so replay-safe). The two read and stage disjoint dirs, so they
+    * stage concurrently; both install under ONE swap marker, which the
+    * recovery call in [[run]] finishes after a kill. */
+  private def maintain(spark: SparkSession, cfg: CrawlConfig, epoch: Int): Unit = {
+    def due(every: Int) = every > 0 && (epoch + 1) % every == 0
+    val stages = Seq[(Boolean, () => Option[StoreFiles.Swap])](
+      due(cfg.consolidateEvery) ->
+        (() => graft.seen.SeenDeletes.stageConsolidation(spark, cfg.workDir, epoch + 1)),
+      due(cfg.latestCompactEvery) -> (() => LatestView.stageFold(spark, cfg.workDir)))
+      .collect { case (true, stage) => s"epoch=$epoch maintenance" -> stage }
+    Concurrent.all(spark)(stages: _*).flatten
+      .reduceOption((a, b) => StoreFiles.Swap(a.moves ++ b.moves, a.drops ++ b.drops))
+      .foreach(StoreFiles.swap(spark, StoreFiles.swapMarker(cfg.workDir), _))
   }
 
   /** ST5 stuck-operation watchdog (driver-side): run the epoch under a
@@ -182,8 +202,18 @@ object CrawlLoop {
   }
 
   /** One epoch. `rules` is the run's robots-rules broadcast, shared by
-    * every epoch and released by [[run]]. */
+    * every epoch and released by [[run]]. Every job the epoch runs on this
+    * thread carries an `epoch=N <phase>` description, `pre` until the
+    * payload write; the description is cleared on return. */
   def runEpoch(spark: SparkSession, cfg: CrawlConfig, epoch: Int,
+      store: PayloadStore, priorCarried: Long,
+      rules: Broadcast[Map[String, RobotsRule]]): EpochMetrics = {
+    spark.sparkContext.setJobDescription(s"epoch=$epoch pre")
+    try epochJobs(spark, cfg, epoch, store, priorCarried, rules)
+    finally spark.sparkContext.setJobDescription(null)
+  }
+
+  private def epochJobs(spark: SparkSession, cfg: CrawlConfig, epoch: Int,
       store: PayloadStore, priorCarried: Long,
       rules: Broadcast[Map[String, RobotsRule]]): EpochMetrics = {
     import spark.implicits._
@@ -373,7 +403,8 @@ object CrawlLoop {
 
     // 7. sinks (idempotent per epoch), all behind the PayloadStore trait.
     // This write is the job that materializes BOTH frontier caches, so
-    // the dedup/schedule observations complete with it.
+    // the dedup/schedule observations complete with it, before any
+    // concurrent reader of those caches starts.
     spark.sparkContext.setJobDescription(s"epoch=$epoch payload-write")
     store.writePayload(results, cfg.workDir, epoch)
     // scheduled is materialized: release everything upstream of it
@@ -381,15 +412,16 @@ object CrawlLoop {
     dedupTagged.unpersist()
     // read back ONLY this epoch's partition directories (listing the whole
     // payload tree would grow linearly with crawl age; at 10^4+ epochs the
-    // file listing, not the data, becomes the cost)
+    // file listing, not the data, becomes the cost), under the declared
+    // schema: inferring it would run a footer-reading job per epoch
     val writtenFull = {
       val leaves = PayloadSink.epochLeaves(spark, cfg.workDir, cfg.buckets, epoch)
         .map(l => s"${cfg.workDir}/payload/$l")
+      val read = spark.read.schema(PayloadSink.schema)
       if (leaves.isEmpty)
-        spark.read.parquet(s"${cfg.workDir}/payload")
+        read.parquet(s"${cfg.workDir}/payload")
           .filter(col("crawl_epoch") === epoch) // degenerate epoch: fall back
-      else spark.read.option("basePath", s"${cfg.workDir}/payload")
-        .parquet(leaves: _*)
+      else read.option("basePath", s"${cfg.workDir}/payload").parquet(leaves: _*)
     }
     // ONE slim read shared by every post-write consumer (lineage, latest
     // delta, seen delta, retry keys, result metrics). Re-reading the
@@ -399,43 +431,41 @@ object CrawlLoop {
     // BLOCKED monitor in 32-core stack samples once the chmod forks were
     // gone. The slim projection (6 narrow columns, no payload bytes) is
     // cheap to cache; the binaries still never enter the block manager.
-    // status counts + byte sum ride as observed aggregates on the cache
-    // materialization (the lineage write below is the first action)
-    val obsWritten = Observation(s"graft_written_$epoch")
     val written = writtenFull
       .select(col("url_hash"), col("status"), col("n_bytes"), col("host"),
         col("host_bucket"), col("crawl_epoch"))
-      .observe(obsWritten,
-        count(when(col("status") === Status.Processed, 1)).as("p"),
-        count(when(col("status") === Status.Failed, 1)).as("f"),
-        count(when(col("status") === Status.Rejected, 1)).as("r"),
-        coalesce(sum(col("n_bytes")), lit(0L)).as("b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // n_hosts = Σ per-bucket exact distinct-host counts (hosts never span
-    // buckets), observed on the lineage output — the countDistinct job
-    // this replaces was the epoch's only remaining dedicated metrics scan
-    spark.sparkContext.setJobDescription(s"epoch=$epoch lineage-write")
+    // The five sinks below read only cached frames (`written`, and
+    // `scheduled` through admitted/deferred) and none reads another's
+    // output, so they run as concurrent jobs; the metrics and the commit
+    // marker follow only once every sink has joined, so a replay still
+    // rewrites each sink idempotently.
+    //
+    // Status counts + byte sum are observed on the LINEAGE query's own
+    // plan, above the cache scan: the sinks race to fill the `written`
+    // cache, and an observation inside the cached plan would be reported
+    // by whichever reader finished first, possibly before every
+    // partition was counted. n_hosts = Σ per-bucket exact distinct-host
+    // counts (hosts never span buckets), observed on the lineage output.
+    val obsWritten = Observation(s"graft_written_$epoch")
     val obsLineage = Observation(s"graft_lineage_$epoch")
-    store.writeLineage(
-      PayloadSink.lineage(written, epoch)
+    def writeLineage(): Unit = store.writeLineage(
+      PayloadSink.lineage(written.observe(obsWritten,
+          count(when(col("status") === Status.Processed, 1)).as("p"),
+          count(when(col("status") === Status.Failed, 1)).as("f"),
+          count(when(col("status") === Status.Rejected, 1)).as("r"),
+          coalesce(sum(col("n_bytes")), lit(0L)).as("b")), epoch)
         .observe(obsLineage, coalesce(sum(col("n_hosts")), lit(0L)).as("hosts")),
       cfg.workDir, epoch)
 
-    // J3 upsert-reader maintenance: append this epoch's pointer delta
-    // (O(epoch) — one slim columnar write); the fold into the resolved
-    // latest/ dir happens on the latestCompactEvery cadence below, so
-    // "current rows" consumers never pay a full-store window per read
-    spark.sparkContext.setJobDescription(s"epoch=$epoch latest-delta")
-    LatestView.appendDelta(spark, cfg.workDir, epoch, written)
-
     // seen delta = terminal-success rows only (reference guard:
     // status==DOWNLOADED ⇒ skip; CrawlerOrchestrationService.java:114-115)
-    spark.sparkContext.setJobDescription(s"epoch=$epoch seen-write")
-    store.writeSeenDelta(
+    def writeSeen(): Unit = store.writeSeenDelta(
       written.filter(col("status") === Status.Processed)
         .select(col("url_hash"), col("host_bucket").cast("int").as("host_bucket")),
       cfg.workDir, epoch)
+
     // incremental bloom maintenance: segments(epoch) = segments(epoch-1)
     // (≡ blooms of seen < epoch) ∪ bloom(this epoch's delta) — an O(delta)
     // scan, never a store rescan, and fully DISTRIBUTED: the delta keys
@@ -447,8 +477,7 @@ object CrawlLoop {
     // BEFORE the commit marker so a replayed epoch rewrites it
     // idempotently; the previous epoch's segment dir is then dropped so
     // the store stays O(1) dirs regardless of crawl age.
-    if (!cfg.forceUpdate) {
-      spark.sparkContext.setJobDescription(s"epoch=$epoch seen-bloom-write")
+    def writeBlooms(): Unit = {
       val deltaKeys = written.filter(col("status") === Status.Processed)
         .select(col("host_bucket").cast("int").as("host_bucket"),
           col("url_hash"))
@@ -480,7 +509,6 @@ object CrawlLoop {
           "fpp" -> java.math.BigDecimal.valueOf(cfg.bloomFpp)))
       StoreFiles.fs(spark, cfg.workDir).delete(new Path(bloomDir(cfg.workDir, epoch - 1)), true)
     }
-    spark.sparkContext.setJobDescription(s"epoch=$epoch carry-write")
 
     // carry = retry ∪ deferred in ONE partitioned write (queue=retry |
     // queue=deferred). Retry rows = transient/corrupt FAILED rows,
@@ -489,23 +517,39 @@ object CrawlLoop {
     // no shuffle), never recomputed from expected outcomes: if validation
     // ever disagreed with the expectation table, the engine would
     // otherwise put one URL in BOTH the seen store and the retry queue
-    // and drift from itself.
-    val failedKeys = written.filter(col("status") === Status.Failed)
-      .select("url_hash")
-    val retryRows = admitted.toDF()
-      .join(broadcast(failedKeys), Seq("url_hash"), "left_semi")
-      .as[AdmittedUrl]
-      .map(_.toKeyed)
-    store.writeCarry(
-      deferred.toDF().withColumn("queue", lit("deferred"))
-        .unionByName(retryRows.toDF().withColumn("queue", lit("retry"))),
-      s"${cfg.workDir}/carry/epoch=$epoch")
+    // and drift from itself. Both queues are column projections of the
+    // cached schedule: no typed hop, no per-row object churn.
+    def writeCarry(): Unit = {
+      val failedKeys = written.filter(col("status") === Status.Failed)
+        .select("url_hash")
+      val retryRows = admitted.toDF()
+        .join(broadcast(failedKeys), Seq("url_hash"), "left_semi")
+        .select(KeyedCols.map(col): _*)
+      store.writeCarry(
+        deferred.toDF().withColumn("queue", lit("deferred"))
+          .unionByName(retryRows.withColumn("queue", lit("retry"))),
+        s"${cfg.workDir}/carry/epoch=$epoch")
+    }
+
+    // J3 upsert-reader maintenance: append this epoch's pointer delta
+    // (O(epoch) — one slim columnar write); the fold into the resolved
+    // latest/ dir happens on the latestCompactEvery cadence in [[run]],
+    // so "current rows" consumers never pay a full-store window per read
+    val sinks = Seq[(String, () => Unit)](
+      "lineage-write" -> writeLineage _,
+      "latest-delta" -> (() => LatestView.appendDelta(spark, cfg.workDir, epoch, written)),
+      "seen-write" -> writeSeen _,
+      "carry-write" -> writeCarry _) ++
+      (if (cfg.forceUpdate) None else Some("seen-bloom-write" -> writeBlooms _))
+    // the sinks are the last readers of both caches, also when one fails:
+    // a replay in this session must not find the failed attempt's blocks
+    try Concurrent.all(spark)(sinks.map { case (phase, sink) => s"epoch=$epoch $phase" -> sink }: _*)
+    finally { written.unpersist(); scheduled.unpersist() }
 
     // all outcome metrics were observed on jobs this epoch already ran:
     // dup/total on the dedup cache, scheduling states on the schedule
-    // cache (both filled by the payload write), status counts + bytes on
-    // the written cache and the host sum on the lineage output (both
-    // filled by the lineage write). Zero dedicated metric jobs.
+    // cache (both filled by the payload write), status counts + bytes and
+    // the host sum on the lineage write. Zero dedicated metric jobs.
     val dRow = awaitObserved(obsDedup, "dedup", epoch)
     val sRow = awaitObserved(obsSched, "sched", epoch)
     val wRow = awaitObserved(obsWritten, "written", epoch)
@@ -517,7 +561,6 @@ object CrawlLoop {
     val nAdmitted = sRow.getAs[Long]("admitted")
     val nDeferred = sRow.getAs[Long]("deferred")
     val nSeenSkipped = nLive - nDenied - nAdmitted - nDeferred
-    written.unpersist()
     val durationMs = (System.nanoTime() - tEpoch0) / 1000000L
     // A8/A9/A11 derived metrics (BulkCrawlProgress.java:254-329 analogue):
     // rate over this epoch, % of the configured frontier consumed, ETA for
@@ -542,13 +585,12 @@ object CrawlLoop {
       urls_per_sec = rate,
       progress_pct = progressPct,
       eta_ms = etaMs)
+    spark.sparkContext.setJobDescription(s"epoch=$epoch metrics-write")
     store.writeMetrics(m, cfg.workDir, spark)
 
     // 8. atomic commit marker — everything above is replayable; the marker
     // flips the epoch to "done" (Iceberg-snapshot stand-in)
     commit(spark, cfg.workDir, m)
-
-    scheduled.unpersist()
     m
   }
 
@@ -574,6 +616,12 @@ object CrawlLoop {
     StoreFiles.publishJson(spark, s"$workDir/_commits/epoch_${m.epoch}.json",
       Seq("epoch" -> m.epoch, "candidates" -> m.n_candidates,
         "admitted" -> m.n_admitted, "processed" -> m.n_processed))
+
+  /** The [[KeyedUrl]] columns in field order: a carry row's columns. */
+  private val KeyedCols: Seq[String] = Encoders.product[KeyedUrl].schema.fieldNames.toSeq
+
+  /** Schema of a bloom segment dir (`seen_blooms/epoch=N`). */
+  private[graft] val SegmentSchema = StructType.fromDDL("host_bucket INT, bloom BINARY")
 
   private[graft] def bloomDir(workDir: String, epoch: Int): String =
     s"$workDir/seen_blooms/epoch=$epoch"
@@ -614,9 +662,7 @@ object CrawlLoop {
         m.get("fpp").asDouble == cfg.bloomFpp
       }
       if (!ok) None
-      else Some(spark.read.parquet(dir)
-        .select(col("host_bucket").cast("int"), col("bloom"))
-        .as[(Int, Array[Byte])])
+      else Some(spark.read.schema(SegmentSchema).parquet(dir).as[(Int, Array[Byte])])
     }.getOrElse(None)
   }
 
@@ -638,11 +684,8 @@ object CrawlLoop {
   private[graft] def readCarried(spark: SparkSession, dir: String): Dataset[KeyedUrl] = {
     import spark.implicits._
     if (StoreFiles.fs(spark, dir).exists(new Path(dir)))
-      spark.read.schema(implicitly[org.apache.spark.sql.Encoder[KeyedUrl]].schema)
-        .parquet(dir)
-        .select("url_canon", "url_hash", "docid", "court", "host",
-          "host_bucket", "path", "sitemap_seq", "entry_seq",
-          "discovered_epoch", "lastmod")
+      spark.read.schema(Encoders.product[KeyedUrl].schema).parquet(dir)
+        .select(KeyedCols.map(col): _*)
         .as[KeyedUrl]
     else spark.emptyDataset[KeyedUrl]
   }

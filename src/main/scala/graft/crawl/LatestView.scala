@@ -3,6 +3,7 @@ package graft.crawl
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.fs.StoreFiles
 
 /** Incrementally maintained latest-row-wins view — the J3 upsert READER
@@ -46,6 +47,24 @@ object LatestView {
   private def latestDir(workDir: String) = s"$workDir/latest"
   private def deltaRoot(workDir: String) = s"$workDir/latest_delta"
   private def stagingDir(workDir: String) = s"$workDir/latest_staging"
+
+  /** Schemas of the delta dirs (read with their `epoch` partition column)
+    * and of the resolved view (`host_bucket` is its partition column):
+    * declared, because inferring them runs a footer-reading job per read. */
+  private[graft] val DeltaSchema =
+    StructType.fromDDL("url_hash BIGINT, status STRING, host_bucket INT, crawl_epoch INT, epoch INT")
+  private[graft] val ResolvedSchema =
+    StructType.fromDDL("url_hash BIGINT, status STRING, crawl_epoch INT, host_bucket INT")
+
+  /** The pointer rows of the delta dirs `dirs`, without their dir key. */
+  private def readDeltas(spark: SparkSession, workDir: String, dirs: Seq[String]): DataFrame =
+    spark.read.schema(DeltaSchema).option("basePath", deltaRoot(workDir))
+      .parquet(dirs: _*)
+      .drop("epoch") // crawl_epoch rides in the data; epoch= is just the dir key
+
+  private def readResolved(spark: SparkSession, workDir: String): DataFrame =
+    spark.read.schema(ResolvedSchema).parquet(latestDir(workDir))
+      .select(col("url_hash"), col("status"), col("host_bucket"), col("crawl_epoch"))
 
   private def pointerCols(written: DataFrame): DataFrame =
     written.select(col("url_hash"), col("status"),
@@ -93,13 +112,11 @@ object LatestView {
     val deltaDirs = listDeltaDirs(spark, workDir)
     if (deltaDirs.isEmpty) return None
     val fs = StoreFiles.fs(spark, workDir)
-    val tail = resolveTail(
-      spark.read.option("basePath", deltaRoot(workDir)).parquet(deltaDirs: _*)
-        .drop("epoch")) // crawl_epoch rides in the data; epoch= is just the dir key
+    val tail = resolveTail(readDeltas(spark, workDir, deltaDirs))
     val merged =
       if (!fs.exists(new Path(latestDir(workDir)))) tail
       else {
-        val old = spark.read.parquet(latestDir(workDir)).select(tail.columns.map(col): _*)
+        val old = readResolved(spark, workDir)
         // the resolved store streams through a scan; only the bounded tail
         // shuffles (shuffle-hash: the tail's key set is epochs×admissions —
         // too big to broadcast cheaply, small enough to shuffle)
@@ -130,17 +147,13 @@ object LatestView {
       s"no latest view under $workDir — run the crawl first")
     val tailOpt =
       if (deltaDirs.isEmpty) None
-      else Some(resolveTail(
-        spark.read.option("basePath", deltaRoot(workDir)).parquet(deltaDirs: _*)
-          .drop("epoch")))
+      else Some(resolveTail(readDeltas(spark, workDir, deltaDirs)))
     (tailOpt, hasResolved) match {
-      case (None, _) => spark.read.parquet(latestDir(workDir))
-        .select(col("url_hash"), col("status"), col("host_bucket"), col("crawl_epoch"))
+      case (None, _) => readResolved(spark, workDir)
       case (Some(tail), false) => tail
       case (Some(tail), true) =>
-        val resolved = spark.read.parquet(latestDir(workDir))
-          .select(tail.columns.map(col): _*)
-        resolved.join(broadcast(tail.select(col("url_hash"))), Seq("url_hash"), "left_anti")
+        readResolved(spark, workDir)
+          .join(broadcast(tail.select(col("url_hash"))), Seq("url_hash"), "left_anti")
           .unionByName(tail)
     }
   }

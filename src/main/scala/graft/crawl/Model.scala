@@ -53,10 +53,7 @@ case class AdmittedUrl(
     entry_seq: Long,
     discovered_epoch: Int,
     lastmod: Timestamp,
-    slot: Int) {
-  def toKeyed: KeyedUrl = KeyedUrl(url_canon, url_hash, docid, court, host,
-    host_bucket, path, sitemap_seq, entry_seq, discovered_epoch, lastmod)
-}
+    slot: Int)
 
 /** Crawl status machine — reference
   * model/LegalDocument.java:129-131 (PENDING→DOWNLOADED→PROCESSED/FAILED)

@@ -3,6 +3,7 @@ package graft.crawl
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.fs.StoreFiles
 
 /** Storage abstraction for every crawl-side sink (payload, lineage,
@@ -78,6 +79,14 @@ object PayloadSink extends PayloadStore {
         col("status"), col("psnr"), col("reject_reason"),
         col("mean_luma"), col("std_luma"), col("edge_energy"),
         col("host_bucket"), col("crawl_epoch"))
+
+  /** Schema of the payload table as read back from `payload/`: the
+    * [[payloadFrame]] columns with the partition columns last. */
+  val schema: StructType = StructType.fromDDL(
+    "image_id STRING, bytes BINARY, n_bytes BIGINT, w INT, h INT, fmt STRING, " +
+      "caption STRING, phash BIGINT, url_hash BIGINT, url_canon STRING, host STRING, " +
+      "slot INT, status STRING, psnr DOUBLE, reject_reason STRING, mean_luma DOUBLE, " +
+      "std_luma DOUBLE, edge_energy DOUBLE, host_bucket INT, crawl_epoch INT")
 
   /** This epoch's leaf dirs `host_bucket=b/crawl_epoch=epoch` under
     * `payload/`, probed per bucket: O(buckets), never a tree listing. */

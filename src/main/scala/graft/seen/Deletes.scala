@@ -2,6 +2,7 @@ package graft.seen
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.fs.StoreFiles
 
 /** S10 delete pipeline for the URL-seen store (reference:
@@ -27,6 +28,12 @@ object SeenDeletes {
   private def tombDir(workDir: String) = s"$workDir/seen_tombstones"
   private val SeqDir = "seq=(\\d+)".r
 
+  /** Schemas of the seen dirs (read with their `epoch` partition column)
+    * and of the tombstone dirs: declared, because inferring them runs a
+    * footer-reading job on every read. */
+  private[graft] val SeenSchema = StructType.fromDDL("url_hash BIGINT, host_bucket INT, epoch INT")
+  private[graft] val TombSchema = StructType.fromDDL("url_hash BIGINT, seq INT")
+
   /** Tombstone the given url_hashes (column "url_hash") for every seen row
     * written so far. Idempotent; returns the number of hashes. */
   def delete(spark: SparkSession, workDir: String, hashes: DataFrame): Long = {
@@ -42,11 +49,12 @@ object SeenDeletes {
   /** The rows of the seen dirs `dirs` (`seen/epoch=N`) that no later
     * tombstone hides, as (url_hash, host_bucket). */
   private[graft] def read(spark: SparkSession, workDir: String, dirs: Seq[String]): DataFrame = {
-    val seen = spark.read.option("basePath", s"$workDir/seen").parquet(dirs: _*)
+    val seen = spark.read.schema(SeenSchema).option("basePath", s"$workDir/seen")
+      .parquet(dirs: _*)
     val live =
       if (StoreFiles.list(spark, tombDir(workDir)).isEmpty) seen
       else {
-        val tombs = spark.read.parquet(tombDir(workDir))
+        val tombs = spark.read.schema(TombSchema).parquet(tombDir(workDir))
           .select(col("url_hash").as("tomb_hash"), col("seq"))
         seen.join(tombs,
           col("url_hash") === col("tomb_hash") && col("epoch") < col("seq"), "left_anti")

@@ -41,8 +41,28 @@ class CrawlSpec extends SparkSpec {
 
   lazy val (metrics, sim, wd) = runBoth(cfg)
 
+  /** The seen dirs under `workDir`, read as explicit paths (a glob read
+    * makes Spark stat the literal glob path and log a warning). */
+  private def seenDirs(workDir: String) =
+    spark.read.parquet(StoreFiles.epochDirs(spark, s"$workDir/seen"): _*)
+
+  /** A store that delegates every write to [[PayloadSink]]; a test
+    * overrides the one write it breaks. */
+  private class DelegatingStore extends PayloadStore {
+    def writePayload(r: org.apache.spark.sql.Dataset[FetchResult], w: String, e: Int): Unit =
+      PayloadSink.writePayload(r, w, e)
+    def writeLineage(l: org.apache.spark.sql.Dataset[PartitionLineage], w: String, e: Int): Unit =
+      PayloadSink.writeLineage(l, w, e)
+    def writeMetrics(m: EpochMetrics, w: String, s: org.apache.spark.sql.SparkSession): Unit =
+      PayloadSink.writeMetrics(m, w, s)
+    def writeSeenDelta(d: org.apache.spark.sql.DataFrame, w: String, e: Int): Unit =
+      PayloadSink.writeSeenDelta(d, w, e)
+    def writeCarry(c: org.apache.spark.sql.DataFrame, dir: String): Unit =
+      PayloadSink.writeCarry(c, dir)
+  }
+
   test("URL-seen membership is byte-identical to the simulator") {
-    val engineSeen = spark.read.parquet(s"$wd/seen/epoch=*")
+    val engineSeen = seenDirs(wd)
       .select("url_hash").as[Long].collect().toSet
     assert(engineSeen == sim.seen,
       s"engine=${engineSeen.size} sim=${sim.seen.size} " +
@@ -343,7 +363,7 @@ class CrawlSpec extends SparkSpec {
     val persisted = CrawlLoop.loadSegments(spark, cfg.copy(workDir = wd),
       cfg.epochs - 1, expected).get.toMap
     val fresh = SeenSet.bloomSegments(
-      spark.read.parquet(s"$wd/seen/epoch=*").select("url_hash", "host_bucket"),
+      seenDirs(wd).select("url_hash", "host_bucket"),
       cfg.buckets, expected, cfg.bloomFpp).collect().toMap
     assert(persisted.keySet == fresh.keySet)
     persisted.foreach { case (b, bytes) =>
@@ -355,7 +375,7 @@ class CrawlSpec extends SparkSpec {
     CrawlLoop.run(spark, c2, stopAfter = 2)
     fs.delete(new org.apache.hadoop.fs.Path(s"${c2.workDir}/seen_blooms"), true)
     CrawlLoop.run(spark, c2)
-    val seen2 = spark.read.parquet(s"${c2.workDir}/seen/epoch=*")
+    val seen2 = seenDirs(c2.workDir)
       .select("url_hash").as[Long].collect().toSet
     assert(seen2 == sim.seen)
     // a PARTIAL store (crashed/cancelled write: files but no _SUCCESS)
@@ -368,7 +388,7 @@ class CrawlSpec extends SparkSpec {
     assert(CrawlLoop.loadSegments(spark, c3.copy(workDir = c3.workDir), 1,
       expected).isEmpty, "uncommitted segment dir must load as None")
     CrawlLoop.run(spark, c3)
-    val seen3 = spark.read.parquet(s"${c3.workDir}/seen/epoch=*")
+    val seen3 = seenDirs(c3.workDir)
       .select("url_hash").as[Long].collect().toSet
     assert(seen3 == sim.seen)
   }
@@ -507,7 +527,7 @@ class CrawlSpec extends SparkSpec {
       spark.conf.set("spark.sql.shuffle.partitions", "5")
       val c = cfg.copy(workDir = tmpDir())
       CrawlLoop.run(spark, c)
-      val seen5 = spark.read.parquet(s"${c.workDir}/seen/epoch=*")
+      val seen5 = seenDirs(c.workDir)
         .select("url_hash").as[Long].collect().toSet
       assert(seen5 == sim.seen, "seen membership depends on partition count")
       val traces5 = spark.read.parquet(s"${c.workDir}/payload")
@@ -564,7 +584,7 @@ class CrawlSpec extends SparkSpec {
     val dirs = (0 until c.epochs).count(e =>
       fs.exists(new org.apache.hadoop.fs.Path(s"${c.workDir}/seen/epoch=$e")))
     assert(dirs < c.epochs, s"expected a merged store, still $dirs per-epoch dirs")
-    val seenC = spark.read.parquet(s"${c.workDir}/seen/epoch=*")
+    val seenC = seenDirs(c.workDir)
       .select("url_hash").as[Long].collect().toSet
     assert(seenC == sim.seen)
   }
@@ -575,9 +595,9 @@ class CrawlSpec extends SparkSpec {
     CrawlLoop.run(spark, cfg.copy(workDir = wd2), stopAfter = 2) // "crash" after epoch 1
     val resumed = CrawlLoop.run(spark, cfg.copy(workDir = wd2)) // resume → epoch 2
     assert(resumed.map(_.epoch) == Seq(2), "resume must start after last commit")
-    val seenA = spark.read.parquet(s"$wd/seen/epoch=*")
+    val seenA = seenDirs(wd)
       .select("url_hash").as[Long].collect().sorted
-    val seenB = spark.read.parquet(s"$wd2/seen/epoch=*")
+    val seenB = seenDirs(wd2)
       .select("url_hash").as[Long].collect().sorted
     assert(seenA.toSeq == seenB.toSeq)
     val payA = spark.read.parquet(s"$wd/payload").select("image_id", "status")
@@ -623,7 +643,7 @@ class CrawlSpec extends SparkSpec {
     val simF = Simulator.run(simEntries(cf), cf.epochs, cf.budgetPerHost,
       Robots.syntheticRules(cf.numHosts, cf.seed), forceUpdate = true)
     mF.foreach(m => assert(m.n_seen_skipped == 0, "force must bypass the seen skip"))
-    val engineSeen = spark.read.parquet(s"${cf.workDir}/seen/epoch=*")
+    val engineSeen = seenDirs(cf.workDir)
       .select("url_hash").as[Long].collect().toSet
     assert(engineSeen == simF.seen)
     // trace equivalence under force
@@ -777,19 +797,11 @@ class CrawlSpec extends SparkSpec {
     val wdP = tmpDir()
     // a store hook that raises the pause flag DURING epoch 0 (the flag is
     // polled between epochs, as the reference polls between dates)
-    object PausingStore extends PayloadStore {
-      def writePayload(r: org.apache.spark.sql.Dataset[FetchResult], w: String, e: Int): Unit =
-        PayloadSink.writePayload(r, w, e)
-      def writeLineage(l: org.apache.spark.sql.Dataset[PartitionLineage], w: String, e: Int): Unit =
-        PayloadSink.writeLineage(l, w, e)
-      def writeMetrics(m: EpochMetrics, w: String, s: org.apache.spark.sql.SparkSession): Unit = {
+    object PausingStore extends DelegatingStore {
+      override def writeMetrics(m: EpochMetrics, w: String, s: org.apache.spark.sql.SparkSession): Unit = {
         if (m.epoch == 0) CrawlControl.requestPause(s, w)
         PayloadSink.writeMetrics(m, w, s)
       }
-      def writeSeenDelta(d: org.apache.spark.sql.DataFrame, w: String, e: Int): Unit =
-        PayloadSink.writeSeenDelta(d, w, e)
-      def writeCarry(c: org.apache.spark.sql.DataFrame, dir: String): Unit =
-        PayloadSink.writeCarry(c, dir)
     }
     val cf = cfg.copy(workDir = wdP)
     val ran = CrawlLoop.run(spark, cf, store = PausingStore)
@@ -798,7 +810,7 @@ class CrawlSpec extends SparkSpec {
     // resume: clear the flag, run to completion, compare to the uninterrupted run
     CrawlControl.resume(spark, wdP)
     CrawlLoop.run(spark, cf)
-    val pausedSeen = spark.read.parquet(s"$wdP/seen/epoch=*")
+    val pausedSeen = seenDirs(wdP)
       .select("url_hash").as[Long].collect().toSet
     assert(pausedSeen == sim.seen, "pause+resume diverged from the uninterrupted crawl")
   }
@@ -816,7 +828,7 @@ class CrawlSpec extends SparkSpec {
     // the store is RESUMABLE: acknowledge + rerun reproduces the full crawl
     CrawlControl.resume(spark, wdC)
     CrawlLoop.run(spark, cf)
-    val seenAfter = spark.read.parquet(s"$wdC/seen/epoch=*")
+    val seenAfter = seenDirs(wdC)
       .select("url_hash").as[Long].collect().toSet
     assert(seenAfter == sim.seen, "cancel+resume diverged from the uninterrupted crawl")
   }
@@ -922,7 +934,7 @@ class CrawlSpec extends SparkSpec {
     val wd4 = tmpDir()
     val cf = cfg.copy(workDir = wd4)
     CrawlLoop.run(spark, cf, stopAfter = 2) // epochs 0..1
-    val seenAll = spark.read.parquet(s"$wd4/seen/epoch=*")
+    val seenAll = seenDirs(wd4)
       .select("url_hash").as[Long].collect()
     val victims = seenAll.sorted.take(3).toSeq
     SeenDeletes.delete(spark, wd4, victims.toDF("url_hash"))
@@ -934,7 +946,7 @@ class CrawlSpec extends SparkSpec {
     assert(mor.size == seenAll.toSet.size - victims.toSet.size)
     // consolidation: physical rewrite + tombstone clear
     SeenDeletes.consolidate(spark, wd4, 2)
-    val physical = spark.read.parquet(s"$wd4/seen/epoch=*")
+    val physical = seenDirs(wd4)
       .select("url_hash").as[Long].collect().toSet
     assert(physical == mor)
     assert(file(s"$wd4/seen_tombstones").list().isEmpty)
@@ -1045,7 +1057,7 @@ class CrawlSpec extends SparkSpec {
     assert(after == before)
     // the crawl continues over the consolidated store and still matches
     CrawlLoop.run(spark, cf) // epoch 2
-    val seenAll = spark.read.parquet(s"$wd6/seen/epoch=*")
+    val seenAll = seenDirs(wd6)
       .select("url_hash").as[Long].collect().toSet
     assert(seenAll == sim.seen)
 
@@ -1053,7 +1065,7 @@ class CrawlSpec extends SparkSpec {
     // renamed — recovery must finish the swap without losing membership
     val wd7 = tmpDir()
     CrawlLoop.run(spark, cfg.copy(workDir = wd7), stopAfter = 2)
-    val expect = spark.read.parquet(s"$wd7/seen/epoch=*")
+    val expect = seenDirs(wd7)
       .select("url_hash").as[Long].collect().toSet
     spark.read.parquet(s"$wd7/seen/epoch=0", s"$wd7/seen/epoch=1")
       .select("url_hash", "host_bucket").distinct()
@@ -1064,7 +1076,7 @@ class CrawlSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(s"$wd7/seen/epoch=0")) // crash mid-delete
     assert(StoreFiles.recover(spark, StoreFiles.swapMarker(wd7)))
-    val recovered = spark.read.parquet(s"$wd7/seen/epoch=*")
+    val recovered = seenDirs(wd7)
       .select("url_hash").as[Long].collect().toSet
     assert(recovered == expect)
     assert(!new java.io.File(StoreFiles.swapMarker(wd7)).exists)
@@ -1129,7 +1141,7 @@ class CrawlSpec extends SparkSpec {
     plan.moves.foreach(moveByHand) // crash after the rename, before the drops
     assert(seenMembers(wdC) == expect)
     assert(StoreFiles.recover(spark, StoreFiles.swapMarker(wdC)))
-    val physical = spark.read.parquet(s"$wdC/seen/epoch=*")
+    val physical = seenDirs(wdC)
       .select("url_hash").as[Long].collect().toSet
     assert(physical == expect)
     assert(seenMembers(wdC) == expect)
@@ -1168,18 +1180,10 @@ class CrawlSpec extends SparkSpec {
     val wd5 = tmpDir()
     // a store whose payload write hangs, then dies without committing —
     // injected through the PayloadStore trait
-    class SlowStore extends PayloadStore {
-      def writePayload(r: org.apache.spark.sql.Dataset[FetchResult], w: String, e: Int): Unit = {
+    class SlowStore extends DelegatingStore {
+      override def writePayload(r: org.apache.spark.sql.Dataset[FetchResult], w: String, e: Int): Unit = {
         Thread.sleep(3000); throw new RuntimeException("slow store died")
       }
-      def writeLineage(l: org.apache.spark.sql.Dataset[PartitionLineage], w: String, e: Int): Unit =
-        PayloadSink.writeLineage(l, w, e)
-      def writeMetrics(m: EpochMetrics, w: String, s: org.apache.spark.sql.SparkSession): Unit =
-        PayloadSink.writeMetrics(m, w, s)
-      def writeSeenDelta(d: org.apache.spark.sql.DataFrame, w: String, e: Int): Unit =
-        PayloadSink.writeSeenDelta(d, w, e)
-      def writeCarry(c: org.apache.spark.sql.DataFrame, dir: String): Unit =
-        PayloadSink.writeCarry(c, dir)
     }
     val cf = cfg.copy(workDir = wd5, stuckTimeoutMs = 1200)
     intercept[StuckEpochException] {
@@ -1191,9 +1195,143 @@ class CrawlSpec extends SparkSpec {
     // resume with a healthy store replays epoch 0 idempotently
     val resumed = CrawlLoop.run(spark, cfg.copy(workDir = wd5))
     assert(resumed.map(_.epoch) == (0 until cfg.epochs))
-    val seenResumed = spark.read.parquet(s"$wd5/seen/epoch=*")
+    val seenResumed = seenDirs(wd5)
       .select("url_hash").as[Long].collect().toSet
     assert(seenResumed == sim.seen)
+  }
+
+  /** Poll (bounded) until `done`; the listener bus and the status store
+    * are updated asynchronously. */
+  private def eventually(what: String)(done: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!done && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(done, what)
+  }
+
+  private def runningJobs(group: String): Seq[Int] = {
+    val st = spark.sparkContext.statusTracker
+    st.getJobIdsForGroup(group).toSeq.filter(id =>
+      st.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+  }
+
+  private def sinkThreadsAlive(epoch: Int): Boolean = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith(s"graft epoch=$epoch "))
+  }
+
+  test("concurrent sinks: a failing sink fails the epoch uncommitted once every sibling has joined") {
+    val wdF = tmpDir()
+    object FailingSeenStore extends DelegatingStore {
+      override def writeSeenDelta(d: org.apache.spark.sql.DataFrame, w: String, e: Int): Unit =
+        throw new IllegalStateException("seen store died")
+    }
+    // record each job's description and group: every sink job must carry
+    // its own label AND the caller's group (what a watchdog cancels)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(js.properties).getOrElse(new java.util.Properties())
+        jobs.add((p.getProperty("spark.job.description", ""), p.getProperty("spark.jobGroup.id", "")))
+      }
+    }
+    val sc = spark.sparkContext
+    val group = "crawlspec-failing-sink"
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "a sink fails")
+    val err =
+      try intercept[IllegalStateException] {
+        CrawlLoop.run(spark, cfg.copy(workDir = wdF), store = FailingSeenStore)
+      } finally sc.clearJobGroup()
+    assert(err.getMessage == "seen store died")
+    assert(!file(s"$wdF/_commits/epoch_0.json").exists && !file(s"$wdF/metrics/epoch=0").exists)
+    // the error surfaced only after every sibling sink had finished
+    assert(!sinkThreadsAlive(0))
+    Seq("lineage/epoch=0", "latest_delta/epoch=0", "seen_blooms/epoch=0")
+      .foreach(d => assert(file(s"$wdF/$d/_SUCCESS").exists, s"$d was not finished"))
+    assert(file(s"$wdF/seen_blooms/epoch=0/_graft_meta.json").exists)
+    // a dynamic-overwrite write moves its partition dirs in at job commit
+    assert(file(s"$wdF/carry/epoch=0/queue=deferred").exists, "carry was not finished")
+    val sinkLabels = Seq("lineage-write", "latest-delta", "seen-bloom-write", "carry-write")
+      .map(p => s"epoch=0 $p")
+    try eventually("sink jobs never reported") {
+      sinkLabels.forall(l => jobs.toArray.exists(_.asInstanceOf[(String, String)]._1 == l))
+    } finally sc.removeSparkListener(listener)
+    val epochJobs = jobs.toArray.map(_.asInstanceOf[(String, String)]).filter(_._1.startsWith("epoch=0"))
+    assert(epochJobs.forall(_._2 == group), s"jobs outside the caller's group: ${epochJobs.toSeq}")
+    eventually(s"jobs still running in $group")(runningJobs(group).isEmpty)
+    // resume replays epoch 0 and reproduces the uninterrupted crawl
+    val resumed = CrawlLoop.run(spark, cfg.copy(workDir = wdF))
+    assert(resumed.map(_.epoch) == (0 until cfg.epochs))
+    assert(seenDirs(wdF).select("url_hash").as[Long].collect().toSet == sim.seen)
+  }
+
+  test("ST5 watchdog reaps an epoch stalled inside a concurrent sink: FAILED marker, no job left, clean resume") {
+    val wdS = tmpDir()
+    val stalled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // a seen write that hangs in a Spark job until it is cancelled
+    object StallingStore extends DelegatingStore {
+      override def writeSeenDelta(d: org.apache.spark.sql.DataFrame, w: String, e: Int): Unit = {
+        stalled.set(true)
+        d.repartition(1).rdd.foreachPartition(_ => Thread.sleep(120000))
+      }
+    }
+    intercept[StuckEpochException] {
+      CrawlLoop.run(spark, cfg.copy(workDir = wdS, stuckTimeoutMs = 10000), store = StallingStore)
+    }
+    assert(stalled.get, "the watchdog fired before the sinks started")
+    assert(file(s"$wdS/_commits/epoch_0.FAILED.json").exists)
+    assert(!file(s"$wdS/_commits/epoch_0.json").exists)
+    // the cancel reaches the stalled sink's job: its thread and siblings end
+    eventually("sink threads outlived the cancel")(!sinkThreadsAlive(0))
+    eventually("jobs left in graft-epoch-0")(runningJobs("graft-epoch-0").isEmpty)
+    assert(!file(s"$wdS/_commits/epoch_0.json").exists)
+    val resumed = CrawlLoop.run(spark, cfg.copy(workDir = wdS))
+    assert(resumed.map(_.epoch) == (0 until cfg.epochs))
+    assert(seenDirs(wdS).select("url_hash").as[Long].collect().toSet == sim.seen)
+  }
+
+  test("concurrent sinks: 6-epoch local[4] metrics equal a recount of the payload and lineage tables") {
+    assert(spark.sparkContext.master == "local[4]")
+    val c = cfg.copy(workDir = tmpDir(), totalUrls = 12000, epochs = 6,
+      consolidateEvery = 2, latestCompactEvery = 2)
+    val ms = CrawlLoop.run(spark, c)
+    assert(ms.map(_.epoch) == (0 until c.epochs))
+    val payload = spark.read.parquet(s"${c.workDir}/payload")
+      .groupBy($"crawl_epoch")
+      .agg(count(when($"status" === Status.Processed, 1)),
+        count(when($"status" === Status.Failed, 1)),
+        count(when($"status" === Status.Rejected, 1)),
+        coalesce(sum(length($"bytes")), lit(0L)), countDistinct($"host"), count(lit(1)))
+      .as[(Int, Long, Long, Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+    ms.foreach { m =>
+      val (_, p, f, r, bytes, hosts, rows) = payload(m.epoch)
+      assert((m.n_processed, m.n_failed, m.n_rejected, m.bytes_written, m.n_hosts) ==
+        ((p, f, r, bytes, hosts)), s"epoch ${m.epoch} metrics differ from the payload")
+      val lineage = spark.read.parquet(s"${c.workDir}/lineage/epoch=${m.epoch}")
+        .agg(sum($"n_rows"), sum($"n_bytes"), sum($"n_hosts")).as[(Long, Long, Long)].head()
+      assert(lineage == ((rows, bytes, hosts)), s"epoch ${m.epoch} lineage differs from the payload")
+      assert(spark.read.parquet(s"${c.workDir}/metrics/epoch=${m.epoch}").as[EpochMetrics]
+        .collect().toSeq == Seq(m))
+    }
+  }
+
+  test("store read schemas: each declared schema equals the one Spark infers from a fresh store") {
+    val w = tmpDir()
+    val c = cfg.copy(workDir = w, consolidateEvery = 0, latestCompactEvery = 2)
+    CrawlLoop.run(spark, c)
+    SeenDeletes.delete(spark, w, seenDirs(w).select("url_hash").limit(5))
+    def inferred(base: String, dirs: Seq[String]) =
+      spark.read.option("basePath", base).parquet(dirs: _*).schema
+    assert(inferred(s"$w/seen", StoreFiles.epochDirs(spark, s"$w/seen")) == SeenDeletes.SeenSchema)
+    assert(spark.read.parquet(s"$w/seen_tombstones").schema == SeenDeletes.TombSchema)
+    val last = c.epochs - 1
+    assert(spark.read.parquet(CrawlLoop.bloomDir(w, last)).schema == CrawlLoop.SegmentSchema)
+    val leaves = PayloadSink.epochLeaves(spark, w, c.buckets, last).map(l => s"$w/payload/$l")
+    assert(inferred(s"$w/payload", leaves) == PayloadSink.schema)
+    val deltas = StoreFiles.epochDirs(spark, s"$w/latest_delta")
+    assert(deltas.nonEmpty)
+    assert(inferred(s"$w/latest_delta", deltas) == LatestView.DeltaSchema)
+    assert(spark.read.parquet(s"$w/latest").schema == LatestView.ResolvedSchema)
   }
 
   test("prefilter memory valve: past the heap-host ceiling rows bypass safely (completeness intact)") {
@@ -1261,9 +1399,9 @@ class CrawlSpec extends SparkSpec {
   test("determinism across parallelism: local[4] session rerun gives same seen set") {
     val c = cfg.copy(workDir = tmpDir())
     CrawlLoop.run(spark, c)
-    val again = spark.read.parquet(s"${c.workDir}/seen/epoch=*")
+    val again = seenDirs(c.workDir)
       .select("url_hash").as[Long].collect().toSet
-    val first = spark.read.parquet(s"$wd/seen/epoch=*")
+    val first = seenDirs(wd)
       .select("url_hash").as[Long].collect().toSet
     assert(again == first)
   }
@@ -1284,7 +1422,7 @@ class CrawlSpec extends SparkSpec {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         CrawlLoop.run(spark, c)
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    val seenCg = spark.read.parquet(s"${c.workDir}/seen/epoch=*")
+    val seenCg = seenDirs(c.workDir)
       .select("url_hash").as[Long].collect().toSet
     assert(seenCg == sim.seen, "cogroup tier diverged from simulator membership")
     // per-epoch counter equality with the (broadcast-tier) shared run

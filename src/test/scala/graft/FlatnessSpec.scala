@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.crawl._
+import graft.fs.StoreFiles
 
 /** Epoch-age invariance: the per-epoch cost of the crawl loop must be O(1)
   * in crawl age — incremental bloom segments, O(1) touched-bucket listing,
@@ -23,8 +24,8 @@ class FlatnessSpec extends SparkSpec {
       buckets = 8, budgetPerHost = 25, seed = 42L)
 
     // per-epoch scheduled-job counts, attributed via the `epoch=N ...`
-    // job descriptions the loop sets (driver loop is single-threaded, so
-    // every job inherits the last-set description)
+    // job descriptions the loop sets (each concurrent sink and maintenance
+    // stage sets its own on its own thread)
     val jobCounts = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
     val Ep = "epoch=(\\d+)".r
     val listener = new SparkListener {
@@ -89,7 +90,7 @@ class FlatnessSpec extends SparkSpec {
     // admission stream (admitted double-counts retry re-enqueues, so it is
     // an upper bound, not an equality — CrawlSpec owns the byte-identical
     // membership check against the simulator)
-    val seen = spark.read.parquet(s"${cfg.workDir}/seen/epoch=*")
+    val seen = spark.read.parquet(StoreFiles.epochDirs(spark, s"${cfg.workDir}/seen"): _*)
       .select("url_hash").distinct().count()
     val admitted = metrics.map(_.n_admitted).sum
     assert(seen > 0 && seen <= admitted, s"seen=$seen admitted=$admitted")
