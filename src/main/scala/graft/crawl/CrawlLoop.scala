@@ -2,10 +2,14 @@ package graft.crawl
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
+import scala.concurrent.{Await, Promise, TimeoutException}
+import scala.concurrent.duration._
 import graft.fs.StoreFiles
 import graft.seen.SeenSet
 
@@ -47,7 +51,7 @@ final class StuckEpochException(val epoch: Int, timeoutMs: Long)
 /** The epoch fixpoint loop: synth-slice → key → intra-epoch dedup →
   * seen filter (broadcast bloom probe + exact confirm) → fused host stage
   * (robots admission + politeness rank + budget in one pass) → simulated
-  * fetch/validate → partitioned sink + seen delta + carry (deferred+retry)
+  * fetch/validate → partitioned sink + seen delta + carry (deferred+failed)
   * + metrics + lineage, committed per epoch with an atomic marker for
   * resume (ST4).
   *
@@ -81,9 +85,12 @@ final class StuckEpochException(val epoch: Int, timeoutMs: Long)
   *  - every count the metrics need rides as an OBSERVED aggregate
   *    (`Dataset.observe`) on a job the epoch already runs — no dedicated
   *    state-count or metrics-scan jobs, and no extra full pass over the
-  *    cached frontier;
-  *  - deferred+retry land in ONE partitioned carry table, and the bloom
-  *    segment store is maintained by a distributed cogroup merge
+  *    cached frontier; `n_hosts` is the count of `slot = 1` rows (each
+  *    admitted host's first politeness slot), observed with the status
+  *    counts on the latest-delta write;
+  *  - the carry table (deferred + failed rows) is ONE filter over the
+  *    cached schedule, written once, and the bloom segment store is
+  *    maintained by a distributed cogroup merge
   *    ([[graft.seen.SeenSet.mergeDeltaIntoSegments]]) instead of a
   *    driver round-trip. The broadcast-tier probe collects the whole
   *    segment set, so the epoch picks that tier only when the set's
@@ -172,8 +179,7 @@ object CrawlLoop {
     if (cfg.stuckTimeoutMs == Long.MaxValue)
       return runEpoch(spark, cfg, epoch, store, priorCarried, rules)
     val group = s"graft-epoch-$epoch"
-    import scala.concurrent.{Await, Future, TimeoutException}
-    import scala.concurrent.duration._
+    import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
     val fut = Future {
       spark.sparkContext.setJobGroup(group, s"epoch $epoch", interruptOnCancel = true)
@@ -209,15 +215,19 @@ object CrawlLoop {
       store: PayloadStore, priorCarried: Long,
       rules: Broadcast[Map[String, RobotsRule]]): EpochMetrics = {
     spark.sparkContext.setJobDescription(s"epoch=$epoch pre")
-    try epochJobs(spark, cfg, epoch, store, priorCarried, rules)
-    finally spark.sparkContext.setJobDescription(null)
+    val observed = new Observed(epoch)
+    spark.listenerManager.register(observed)
+    try epochJobs(spark, cfg, epoch, store, priorCarried, rules, observed)
+    finally {
+      spark.listenerManager.unregister(observed)
+      spark.sparkContext.setJobDescription(null)
+    }
   }
 
   private def epochJobs(spark: SparkSession, cfg: CrawlConfig, epoch: Int,
       store: PayloadStore, priorCarried: Long,
-      rules: Broadcast[Map[String, RobotsRule]]): EpochMetrics = {
+      rules: Broadcast[Map[String, RobotsRule]], observed: Observed): EpochMetrics = {
     import spark.implicits._
-    import org.apache.spark.sql.Observation
     val tEpoch0 = System.nanoTime()
 
     // 1. this epoch's frontier slice + carried-over work
@@ -310,9 +320,7 @@ object CrawlLoop {
     // materialization (no dedicated count job, no extra pass over the
     // cached frontier — the old union+groupBy state-count job re-scanned
     // BOTH frontier caches every epoch on a memory-bandwidth-bound box)
-    val obsDedup = Observation(s"graft_dedup_$epoch")
-    val dedupTagged = Politeness.dedupFlagged(candidates)
-      .observe(obsDedup,
+    val dedupTagged = observed.on(Politeness.dedupFlagged(candidates), "dedup",
         count(when(col("is_dup__"), 1)).as("dup"),
         count(lit(1)).as("total"))
       .persist(frontierCacheLevel)
@@ -368,30 +376,23 @@ object CrawlLoop {
 
     // 4. fused host stage: robots admission + politeness rank + budget —
     // map-side deny/top-k prefilter, then one repartition(host)+sort pass.
-    // Scheduling-state counts are OBSERVED on the cache materialization:
-    // every live row is exactly one of denied/admitted/deferred, and the
-    // seen-skip count is the residual — zero dedicated count jobs.
+    // Scheduling-state counts are OBSERVED on the carry write, which scans
+    // the whole cached schedule: every live row is exactly one of
+    // denied/admitted/deferred, and the seen-skip count is the residual —
+    // zero dedicated count jobs.
     val (scheduledDs, _) = Politeness.scheduleTracked(unseen, rules.value,
       cfg.budgetPerHost, sharedRules = Some(rules))
-    val obsSched = Observation(s"graft_sched_$epoch")
-    val scheduled = scheduledDs
-      .observe(obsSched,
-        count(when(col("_2") === Politeness.Sched.Denied, 1)).as("denied"),
-        count(when(col("_2") === Politeness.Sched.Admitted, 1)).as("admitted"),
-        count(when(col("_2") === Politeness.Sched.Deferred, 1)).as("deferred"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val scheduled = scheduledDs.persist(StorageLevel.MEMORY_AND_DISK)
 
     // r06: columnar filter+projection instead of typed filter+map — the
     // typed path deserialized the FULL KeyedUrl (incl. per-row
     // java.sql.Timestamp construction, a top frame in 32-core stack
-    // samples) for every scheduled row in BOTH branches, then
-    // re-serialized; the select copies internal rows with zero object
-    // churn. Same rows, same fields (as[...] resolves by name).
+    // samples) for every scheduled row, then re-serialized; the select
+    // copies internal rows with zero object churn. Same rows, same fields
+    // (as[...] resolves by name).
     val admitted = scheduled.filter(col("_2") === Politeness.Sched.Admitted)
       .select(col("_1.*"), col("_3").as("slot"))
       .as[AdmittedUrl]
-    val deferred = scheduled.filter(col("_2") === Politeness.Sched.Deferred)
-      .select(col("_1.*")).as[KeyedUrl]
 
     // 5. simulated fetch + decode + invariant validation — NOT cached:
     // results carry the full payload bytes, and pushing them through the
@@ -401,159 +402,167 @@ object CrawlLoop {
     // (column-pruned parquet read ≪ caching binaries).
     val results = Fetch.fetch(admitted, epoch)
 
-    // 7. sinks (idempotent per epoch), all behind the PayloadStore trait.
-    // This write is the job that materializes BOTH frontier caches, so
-    // the dedup/schedule observations complete with it, before any
-    // concurrent reader of those caches starts.
-    spark.sparkContext.setJobDescription(s"epoch=$epoch payload-write")
-    store.writePayload(results, cfg.workDir, epoch)
-    // scheduled is materialized: release everything upstream of it
-    seenCleanup()
-    dedupTagged.unpersist()
-    // read back ONLY this epoch's partition directories (listing the whole
-    // payload tree would grow linearly with crawl age; at 10^4+ epochs the
-    // file listing, not the data, becomes the cost), under the declared
-    // schema: inferring it would run a footer-reading job per epoch
-    val writtenFull = {
+    // Every cache the epoch made is released in ONE finally, also when the
+    // payload write or a sink throws or the watchdog cancels it: a replay
+    // in this session must not find the failed attempt's blocks.
+    try {
+      // 7. sinks (idempotent per epoch), all behind the PayloadStore
+      // trait. This write is the job that materializes BOTH frontier
+      // caches, before any concurrent reader of them starts.
+      spark.sparkContext.setJobDescription(s"epoch=$epoch payload-write")
+      store.writePayload(results, cfg.workDir, epoch)
+      // scheduled is materialized: release everything upstream of it
+      seenCleanup()
+      dedupTagged.unpersist()
+      // read back ONLY this epoch's partition directories (listing the
+      // whole payload tree would grow linearly with crawl age; at 10^4+
+      // epochs the file listing, not the data, becomes the cost), under
+      // the declared schema: inferring it would run a footer-reading job
+      // per epoch. An epoch that admitted nothing wrote no leaf and reads
+      // nothing.
       val leaves = PayloadSink.epochLeaves(spark, cfg.workDir, cfg.buckets, epoch)
         .map(l => s"${cfg.workDir}/payload/$l")
-      val read = spark.read.schema(PayloadSink.schema)
-      if (leaves.isEmpty)
-        read.parquet(s"${cfg.workDir}/payload")
-          .filter(col("crawl_epoch") === epoch) // degenerate epoch: fall back
-      else read.option("basePath", s"${cfg.workDir}/payload").parquet(leaves: _*)
-    }
-    // ONE slim read shared by every post-write consumer (lineage, latest
-    // delta, seen delta, retry keys, result metrics). Re-reading the
-    // epoch's parquet per consumer was 5x the per-file reader setup —
-    // and parquet reader construction clones the shared hadoop
-    // Configuration under ITS lock (new JobConf per file), the top
-    // BLOCKED monitor in 32-core stack samples once the chmod forks were
-    // gone. The slim projection (6 narrow columns, no payload bytes) is
-    // cheap to cache; the binaries still never enter the block manager.
-    val written = writtenFull
-      .select(col("url_hash"), col("status"), col("n_bytes"), col("host"),
-        col("host_bucket"), col("crawl_epoch"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      val writtenFull =
+        if (leaves.isEmpty)
+          spark.createDataFrame(java.util.Collections.emptyList[Row](), PayloadSink.schema)
+        else spark.read.schema(PayloadSink.schema)
+          .option("basePath", s"${cfg.workDir}/payload").parquet(leaves: _*)
+      // ONE slim read shared by every post-write consumer (lineage, latest
+      // delta, seen delta, retry keys, result metrics). Re-reading the
+      // epoch's parquet per consumer was 5x the per-file reader setup —
+      // and parquet reader construction clones the shared hadoop
+      // Configuration under ITS lock (new JobConf per file), the top
+      // BLOCKED monitor in 32-core stack samples once the chmod forks were
+      // gone. The slim projection (6 narrow columns, no payload bytes) is
+      // cheap to cache; the binaries still never enter the block manager.
+      val written = writtenFull
+        .select(col("url_hash"), col("status"), col("n_bytes"), col("slot"),
+          col("host_bucket"), col("crawl_epoch"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // The five sinks below read only cached frames (`written`, and
-    // `scheduled` through admitted/deferred) and none reads another's
-    // output, so they run as concurrent jobs; the metrics and the commit
-    // marker follow only once every sink has joined, so a replay still
-    // rewrites each sink idempotently.
-    //
-    // Status counts + byte sum are observed on the LINEAGE query's own
-    // plan, above the cache scan: the sinks race to fill the `written`
-    // cache, and an observation inside the cached plan would be reported
-    // by whichever reader finished first, possibly before every
-    // partition was counted. n_hosts = Σ per-bucket exact distinct-host
-    // counts (hosts never span buckets), observed on the lineage output.
-    val obsWritten = Observation(s"graft_written_$epoch")
-    val obsLineage = Observation(s"graft_lineage_$epoch")
-    def writeLineage(): Unit = store.writeLineage(
-      PayloadSink.lineage(written.observe(obsWritten,
+      // The five sinks below read only cached frames (`written` and
+      // `scheduled`) and none reads another's output, so they run as
+      // concurrent jobs; the metrics and the commit marker follow only
+      // once every sink has joined, so a replay still rewrites each sink
+      // idempotently.
+      def writeLineage(): Unit =
+        store.writeLineage(PayloadSink.lineage(written, epoch), cfg.workDir, epoch)
+
+      // J3 upsert-reader maintenance: append this epoch's pointer delta
+      // (O(epoch) — one slim columnar write); the fold into the resolved
+      // latest/ dir happens on the latestCompactEvery cadence in [[run]],
+      // so "current rows" consumers never pay a full-store window per
+      // read. Status counts, byte sum and host count are observed on this
+      // write's own plan, directly above the cache scan: the sinks race
+      // to fill the `written` cache, and an observation inside the cached
+      // plan would be reported by whichever reader finished first,
+      // possibly before every partition was counted. n_hosts = the
+      // `slot = 1` rows: phase 1 of the politeness stage numbers each
+      // admitted host's rows 1..budget in one run, and every admitted row
+      // is written.
+      def writeLatestDelta(): Unit = LatestView.appendDelta(spark, cfg.workDir, epoch,
+        observed.on(written, "written",
           count(when(col("status") === Status.Processed, 1)).as("p"),
           count(when(col("status") === Status.Failed, 1)).as("f"),
           count(when(col("status") === Status.Rejected, 1)).as("r"),
-          coalesce(sum(col("n_bytes")), lit(0L)).as("b")), epoch)
-        .observe(obsLineage, coalesce(sum(col("n_hosts")), lit(0L)).as("hosts")),
-      cfg.workDir, epoch)
+          coalesce(sum(col("n_bytes")), lit(0L)).as("b"),
+          count(when(col("slot") === 1, 1)).as("hosts")))
 
-    // seen delta = terminal-success rows only (reference guard:
-    // status==DOWNLOADED ⇒ skip; CrawlerOrchestrationService.java:114-115)
-    def writeSeen(): Unit = store.writeSeenDelta(
-      written.filter(col("status") === Status.Processed)
-        .select(col("url_hash"), col("host_bucket").cast("int").as("host_bucket")),
-      cfg.workDir, epoch)
+      // seen delta = terminal-success rows only (reference guard:
+      // status==DOWNLOADED ⇒ skip; CrawlerOrchestrationService.java:114-115)
+      def writeSeen(): Unit = store.writeSeenDelta(
+        written.filter(col("status") === Status.Processed)
+          .select(col("url_hash"), col("host_bucket").cast("int").as("host_bucket")),
+        cfg.workDir, epoch)
 
-    // incremental bloom maintenance: segments(epoch) = segments(epoch-1)
-    // (≡ blooms of seen < epoch) ∪ bloom(this epoch's delta) — an O(delta)
-    // scan, never a store rescan, and fully DISTRIBUTED: the delta keys
-    // cogroup into the persisted segment dataset on their bucket
-    // (SeenSet.mergeDeltaIntoSegments), so nothing segment- or key-sized
-    // ever rides through the driver. Deleted (tombstoned) keys stay set in
-    // the persisted blooms: that is only a false positive, and positives
-    // are exactly confirmed against the tombstone-merged store. Written
-    // BEFORE the commit marker so a replayed epoch rewrites it
-    // idempotently; the previous epoch's segment dir is then dropped so
-    // the store stays O(1) dirs regardless of crawl age.
-    def writeBlooms(): Unit = {
-      val deltaKeys = written.filter(col("status") === Status.Processed)
-        .select(col("host_bucket").cast("int").as("host_bucket"),
-          col("url_hash"))
-      val prevSegs: Dataset[(Int, Array[Byte])] =
-        if (seen == null) spark.emptyDataset[(Int, Array[Byte])]
-        else segmentsDs
-      // written at the cogroup's OWN parallelism: an earlier coalesce(1)
-      // folded back into the cogroup and ran the whole merge — every
-      // bucket's key-fill — as ONE task (~12 GB of serial segment work at
-      // 10^10 keys). The file count per segment dir is bounded by the
-      // shuffle parallelism and the dir itself is O(1) per crawl (the
-      // previous epoch's dir is dropped below), so there is no
-      // small-files growth to collapse.
-      SeenSet.mergeDeltaIntoSegments(deltaKeys, prevSegs,
-          expectedPerBucket, cfg.bloomFpp)
-        .toDF("host_bucket", "bloom")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(bloomDir(cfg.workDir, epoch))
+      // incremental bloom maintenance: segments(epoch) = segments(epoch-1)
+      // (≡ blooms of seen < epoch) ∪ bloom(this epoch's delta) — an
+      // O(delta) scan, never a store rescan, and fully DISTRIBUTED: the
+      // delta keys cogroup into the persisted segment dataset on their
+      // bucket (SeenSet.mergeDeltaIntoSegments), so nothing segment- or
+      // key-sized ever rides through the driver. Deleted (tombstoned) keys
+      // stay set in the persisted blooms: that is only a false positive,
+      // and positives are exactly confirmed against the tombstone-merged
+      // store. Written BEFORE the commit marker so a replayed epoch
+      // rewrites it idempotently; the previous epoch's segment dir is then
+      // dropped so the store stays O(1) dirs regardless of crawl age.
+      def writeBlooms(): Unit = {
+        val deltaKeys = written.filter(col("status") === Status.Processed)
+          .select(col("host_bucket").cast("int").as("host_bucket"),
+            col("url_hash"))
+        val prevSegs: Dataset[(Int, Array[Byte])] =
+          if (seen == null) spark.emptyDataset[(Int, Array[Byte])]
+          else segmentsDs
+        // written at the cogroup's OWN parallelism: an earlier coalesce(1)
+        // folded back into the cogroup and ran the whole merge — every
+        // bucket's key-fill — as ONE task (~12 GB of serial segment work
+        // at 10^10 keys). The file count per segment dir is bounded by the
+        // shuffle parallelism and the dir itself is O(1) per crawl (the
+        // previous epoch's dir is dropped below), so there is no
+        // small-files growth to collapse.
+        SeenSet.mergeDeltaIntoSegments(deltaKeys, prevSegs,
+            expectedPerBucket, cfg.bloomFpp)
+          .toDF("host_bucket", "bloom")
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(bloomDir(cfg.workDir, epoch))
+        // sidecar meta: the segment set is only reusable under the SAME
+        // bucketing (host_bucket = hash % buckets) — a changed cfg.buckets
+        // between runs can leave the per-segment bloom shape unchanged
+        // (the max(64,...) floor, or proportionally scaled totalUrls)
+        // while every key now maps to a different bucket, which would read
+        // as bloom false NEGATIVES. loadSegments validates this file and
+        // rebuilds on any mismatch.
+        StoreFiles.writeJson(spark, s"${bloomDir(cfg.workDir, epoch)}/_graft_meta.json",
+          Seq("buckets" -> cfg.buckets, "expectedPerBucket" -> expectedPerBucket,
+            "fpp" -> java.math.BigDecimal.valueOf(cfg.bloomFpp)))
+        StoreFiles.fs(spark, cfg.workDir).delete(new Path(bloomDir(cfg.workDir, epoch - 1)), true)
+      }
+
+      // carry = the next epoch's work: every DEFERRED row, plus each
+      // ADMITTED row whose fetch FAILED (transient/corrupt, eligible next
+      // epoch) — ONE filter over the cached schedule. Failures come from
+      // the ACTUAL validated statuses in the written table (broadcast left
+      // join on the small FAILED sliver, no shuffle), never recomputed
+      // from expected outcomes: if validation ever disagreed with the
+      // expectation table, the engine would otherwise put one URL in BOTH
+      // the seen store and the carry and drift from itself.
+      def writeCarry(): Unit = {
+        val failedKeys = written.filter(col("status") === Status.Failed)
+          .select(col("url_hash").as("failed__"))
+        val states = observed.on(scheduled, "sched",
+          count(when(col("_2") === Politeness.Sched.Denied, 1)).as("denied"),
+          count(when(col("_2") === Politeness.Sched.Admitted, 1)).as("admitted"),
+          count(when(col("_2") === Politeness.Sched.Deferred, 1)).as("deferred"))
+        store.writeCarry(
+          states.join(broadcast(failedKeys), col("_1.url_hash") === col("failed__"), "left")
+            .filter(col("_2") === Politeness.Sched.Deferred ||
+              (col("_2") === Politeness.Sched.Admitted && col("failed__").isNotNull))
+            .select(col("_1.*")),
+          s"${cfg.workDir}/carry/epoch=$epoch")
+      }
+
+      val sinks = Seq[(String, () => Unit)](
+        "lineage-write" -> writeLineage _,
+        "latest-delta" -> writeLatestDelta _,
+        "seen-write" -> writeSeen _,
+        "carry-write" -> writeCarry _) ++
+        (if (cfg.forceUpdate) None else Some("seen-bloom-write" -> writeBlooms _))
+      try Concurrent.all(spark)(sinks.map { case (phase, sink) => s"epoch=$epoch $phase" -> sink }: _*)
+      finally written.unpersist()
+    } finally {
+      seenCleanup()
+      dedupTagged.unpersist()
+      scheduled.unpersist()
       segsFallback.foreach(_.unpersist(blocking = false))
-      // sidecar meta: the segment set is only reusable under the SAME
-      // bucketing (host_bucket = hash % buckets) — a changed cfg.buckets
-      // between runs can leave the per-segment bloom shape unchanged (the
-      // max(64,...) floor, or proportionally scaled totalUrls) while every
-      // key now maps to a different bucket, which would read as bloom
-      // false NEGATIVES. loadSegments validates this file and rebuilds on
-      // any mismatch.
-      StoreFiles.writeJson(spark, s"${bloomDir(cfg.workDir, epoch)}/_graft_meta.json",
-        Seq("buckets" -> cfg.buckets, "expectedPerBucket" -> expectedPerBucket,
-          "fpp" -> java.math.BigDecimal.valueOf(cfg.bloomFpp)))
-      StoreFiles.fs(spark, cfg.workDir).delete(new Path(bloomDir(cfg.workDir, epoch - 1)), true)
     }
-
-    // carry = retry ∪ deferred in ONE partitioned write (queue=retry |
-    // queue=deferred). Retry rows = transient/corrupt FAILED rows,
-    // eligible next epoch — derived from the ACTUAL validated statuses in
-    // the written table (broadcast semi-join on the small FAILED sliver,
-    // no shuffle), never recomputed from expected outcomes: if validation
-    // ever disagreed with the expectation table, the engine would
-    // otherwise put one URL in BOTH the seen store and the retry queue
-    // and drift from itself. Both queues are column projections of the
-    // cached schedule: no typed hop, no per-row object churn.
-    def writeCarry(): Unit = {
-      val failedKeys = written.filter(col("status") === Status.Failed)
-        .select("url_hash")
-      val retryRows = admitted.toDF()
-        .join(broadcast(failedKeys), Seq("url_hash"), "left_semi")
-        .select(KeyedCols.map(col): _*)
-      store.writeCarry(
-        deferred.toDF().withColumn("queue", lit("deferred"))
-          .unionByName(retryRows.withColumn("queue", lit("retry"))),
-        s"${cfg.workDir}/carry/epoch=$epoch")
-    }
-
-    // J3 upsert-reader maintenance: append this epoch's pointer delta
-    // (O(epoch) — one slim columnar write); the fold into the resolved
-    // latest/ dir happens on the latestCompactEvery cadence in [[run]],
-    // so "current rows" consumers never pay a full-store window per read
-    val sinks = Seq[(String, () => Unit)](
-      "lineage-write" -> writeLineage _,
-      "latest-delta" -> (() => LatestView.appendDelta(spark, cfg.workDir, epoch, written)),
-      "seen-write" -> writeSeen _,
-      "carry-write" -> writeCarry _) ++
-      (if (cfg.forceUpdate) None else Some("seen-bloom-write" -> writeBlooms _))
-    // the sinks are the last readers of both caches, also when one fails:
-    // a replay in this session must not find the failed attempt's blocks
-    try Concurrent.all(spark)(sinks.map { case (phase, sink) => s"epoch=$epoch $phase" -> sink }: _*)
-    finally { written.unpersist(); scheduled.unpersist() }
 
     // all outcome metrics were observed on jobs this epoch already ran:
-    // dup/total on the dedup cache, scheduling states on the schedule
-    // cache (both filled by the payload write), status counts + bytes and
-    // the host sum on the lineage write. Zero dedicated metric jobs.
-    val dRow = awaitObserved(obsDedup, "dedup", epoch)
-    val sRow = awaitObserved(obsSched, "sched", epoch)
-    val wRow = awaitObserved(obsWritten, "written", epoch)
-    val lRow = awaitObserved(obsLineage, "lineage", epoch)
+    // dup/total on the dedup cache (filled by the payload write),
+    // scheduling states on the carry write, status counts, bytes and
+    // hosts on the latest-delta write. Zero dedicated metric jobs.
+    val dRow = observed("dedup")
+    val sRow = observed("sched")
+    val wRow = observed("written")
     val nDup = dRow.getAs[Long]("dup")
     val nCandidates = dRow.getAs[Long]("total")
     val nLive = nCandidates - nDup
@@ -580,7 +589,7 @@ object CrawlLoop {
       n_failed = wRow.getAs[Long]("f"),
       n_rejected = wRow.getAs[Long]("r"),
       bytes_written = wRow.getAs[Long]("b"),
-      n_hosts = lRow.getAs[Long]("hosts"),
+      n_hosts = wRow.getAs[Long]("hosts"),
       duration_ms = durationMs,
       urls_per_sec = rate,
       progress_pct = progressPct,
@@ -594,23 +603,44 @@ object CrawlLoop {
     m
   }
 
-  /** Read an observed-metrics row. The observation's promise completes on
-    * the listener callback of the action that materialized its node —
-    * always a job this epoch already ran — so this await is a handshake,
-    * not a wait for work; the timeout exists to fail loudly if an epoch
-    * rewrite ever drops the materializing action. */
-  private def awaitObserved(obs: org.apache.spark.sql.Observation,
-      what: String, epoch: Int): org.apache.spark.sql.Row = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration._
-    try Await.result(obs.future, 600.seconds)
-    catch {
-      case _: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(
+  /** The epoch's observed counts (`Dataset.observe`), each taken from the
+    * first query that REPORTS it. Spark's `Observation` is not used: it
+    * completes with an empty row on the first query whose plan holds the
+    * observed node, also when the adaptive planner cut that node away as
+    * an empty branch — an epoch that admits nothing cuts its payload
+    * write above the frontier caches, and the dedup counts reach the
+    * driver only with the carry write's scan of the cached schedule.
+    * Names carry a per-attempt number, so a cancelled attempt's queries
+    * never answer its replay. */
+  private final class Observed(epoch: Int) extends QueryExecutionListener {
+    private val attempt = observedAttempts.incrementAndGet()
+    private val rows = new java.util.concurrent.ConcurrentHashMap[String, Promise[Row]]()
+    private def name(what: String) = s"graft_${what}_${epoch}_$attempt"
+
+    /** `ds` with `metrics` observed under `what`. */
+    def on[T](ds: Dataset[T], what: String, metrics: Column*): Dataset[T] = {
+      rows.putIfAbsent(name(what), Promise[Row]())
+      ds.observe(name(what), metrics.head, metrics.tail: _*)
+    }
+
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      qe.observedMetrics.foreach { case (n, row) => Option(rows.get(n)).foreach(_.trySuccess(row)) }
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    /** The counts observed under `what`. They arrive with the listener
+      * callback of a query this epoch already ran, so this await is a
+      * handshake, not a wait for work; the timeout exists to fail loudly
+      * if an epoch rewrite ever drops the reporting query. */
+    def apply(what: String): Row =
+      try Await.result(rows.get(name(what)).future, 600.seconds)
+      catch {
+        case _: TimeoutException => throw new IllegalStateException(
           s"epoch=$epoch observed '$what' metrics never materialized — " +
             "the observing action was not executed")
-    }
+      }
   }
+
+  private val observedAttempts = new java.util.concurrent.atomic.AtomicLong()
 
   private def commit(spark: SparkSession, workDir: String, m: EpochMetrics): Unit =
     StoreFiles.publishJson(spark, s"$workDir/_commits/epoch_${m.epoch}.json",
@@ -675,12 +705,11 @@ object CrawlLoop {
     if (dirs.isEmpty) null else graft.seen.SeenDeletes.read(spark, workDir, dirs)
   }
 
-  /** Read the previous epoch's carry table (both queues — partition
-    * pruning makes per-queue reads equally cheap if a caller wants one).
-    * The schema is passed EXPLICITLY: an epoch with zero deferred and
-    * zero retry rows leaves a part-file-less dynamic-partition dir, and
-    * schema inference over that throws UNABLE_TO_INFER_SCHEMA where an
-    * empty carry must simply read back empty. */
+  /** Read the previous epoch's carry table (its deferred and failed
+    * rows). The schema is passed EXPLICITLY: an epoch with zero deferred
+    * and zero failed rows leaves a part-file-less dir, and schema
+    * inference over that throws UNABLE_TO_INFER_SCHEMA where an empty
+    * carry must simply read back empty. */
   private[graft] def readCarried(spark: SparkSession, dir: String): Dataset[KeyedUrl] = {
     import spark.implicits._
     if (StoreFiles.fs(spark, dir).exists(new Path(dir)))

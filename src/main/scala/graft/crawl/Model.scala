@@ -120,8 +120,9 @@ case class EpochMetrics(
     eta_ms: Long = 0L)
 
 /** Per-(epoch, host_bucket) lineage row — which partition wrote what.
-  * `n_hosts` is the exact distinct-host count of the partition (hosts
-  * never span buckets, so these sum to the epoch's global host count). */
+  * `n_hosts` is the exact distinct-host count of the partition, counted
+  * as its `slot = 1` rows (hosts never span buckets, so these sum to the
+  * epoch's global host count). */
 case class PartitionLineage(
     epoch: Int,
     host_bucket: Int,

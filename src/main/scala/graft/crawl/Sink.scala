@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 import graft.fs.StoreFiles
 
 /** Storage abstraction for every crawl-side sink (payload, lineage,
-  * metrics, seen deltas, carried work queues). The crawl loop only talks
+  * metrics, seen deltas, carried work). The crawl loop only talks
   * to this trait, so an Iceberg-backed implementation (the north rule's
   * nominal sink; no Iceberg runtime ships in this container) is a drop-in:
   * implement the six writes with `writeTo(table).overwritePartitions()`
@@ -21,9 +21,8 @@ trait PayloadStore extends Serializable {
   def writeMetrics(m: EpochMetrics, workDir: String, spark: SparkSession): Unit
   /** Seen delta: success-only (url_hash, host_bucket) rows for `epoch`. */
   def writeSeenDelta(delta: DataFrame, workDir: String, epoch: Int): Unit
-  /** Carried work for the next epoch: KeyedUrl columns plus a `queue`
-    * tag (`retry` | `deferred`), written as ONE partitioned table so both
-    * queues cost a single write job per epoch. */
+  /** Carried work for the next epoch: the deferred and failed rows in
+    * KeyedUrl columns, written as ONE table that replaces `dir`. */
   def writeCarry(carry: DataFrame, dir: String): Unit
 }
 
@@ -98,13 +97,13 @@ object PayloadSink extends PayloadStore {
   }
 
   /** Per-(epoch, host_bucket) lineage from the WRITTEN payload frame
-    * (columns: host_bucket, host, url_hash, n_bytes): which partition wrote
+    * (columns: host_bucket, slot, url_hash, n_bytes): which partition wrote
     * what. Computed post-write so the binary column never needs caching.
-    * `n_hosts` is exact per bucket, and because `host_bucket` is a pure
-    * function of `host` (FrontierSynth.key), the global distinct-host
-    * count is the SUM of the per-bucket counts — which is how the epoch
-    * loop derives its `n_hosts` metric without a separate countDistinct
-    * job (observed as `sum(n_hosts)` on the lineage write). */
+    * `n_hosts` counts the `slot = 1` rows: the politeness stage numbers
+    * each admitted host's rows 1..budget in one run (Politeness.schedule)
+    * and every admitted row is written, so each host in the bucket has
+    * exactly one such row — the exact distinct-host count without a
+    * distinct aggregate. */
   def lineage(written: org.apache.spark.sql.DataFrame, epoch: Int): Dataset[PartitionLineage] = {
     val spark = written.sparkSession
     import spark.implicits._
@@ -112,7 +111,7 @@ object PayloadSink extends PayloadStore {
       .groupBy(col("host_bucket"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("n_bytes")).as("n_bytes"),
-        countDistinct(col("host")).as("n_hosts"),
+        count(when(col("slot") === 1, 1)).as("n_hosts"),
         min(col("url_hash")).as("min_url_hash"),
         max(col("url_hash")).as("max_url_hash"))
       .select(graft.expressions.ParamLit.int(epoch).as("epoch"),
@@ -135,5 +134,5 @@ object PayloadSink extends PayloadStore {
     delta.write.mode(SaveMode.Overwrite).parquet(s"$workDir/seen/epoch=$epoch")
 
   def writeCarry(carry: DataFrame, dir: String): Unit =
-    carry.write.mode(SaveMode.Overwrite).partitionBy("queue").parquet(dir)
+    carry.write.mode(SaveMode.Overwrite).parquet(dir)
 }

@@ -3,13 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Similarity / near-dup primitives as column expressions:
-  * character shingles, MinHash signatures, LSH band keys, n-gram Jaccard,
-  * and embedding cosine (built-in `zip_with`/`aggregate` double path plus
-  * the native codegen float path in [[graft.expressions.GraftFunctions]]).
-  *
-  * All deterministic — the MinHash family is `xxhash64(shingle, seed_i)`,
-  * so signatures are identical at any parallelism / cluster size.
+/** Similarity primitives as column expressions: character shingles and
+  * word n-grams (the string references of the native hash kernels),
+  * embedding cosine (built-in `zip_with`/`aggregate` double path plus the
+  * native codegen float path in [[graft.expressions.GraftFunctions]]) and
+  * simhash Hamming distance.
   */
 object SimilarityFunctions {
 
@@ -30,27 +28,6 @@ object SimilarityFunctions {
       array_distinct(transform(
         sequence(lit(0), size(toks) - lit(n)),
         i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-  }
-
-  /** MinHash signature: array of `k` min-hashes over `shingles`, hash
-    * family xxhash64(shingle, i). */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingles, s => xxhash64(s, i))))
-
-  /** LSH band keys: split a k-wide signature into `bands` bands of
-    * `rowsPerBand` and hash each band → array of (band i) keys. Two docs
-    * sharing any band key are near-dup candidates. */
-  def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(b, concat_ws("_",
-        slice(signature, b * rowsPerBand + 1, lit(rowsPerBand)))))
-
-  /** Exact Jaccard similarity of two shingle arrays. */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val uni = size(array_union(a, b)).cast("double")
-    when(uni === 0, 0.0).otherwise(inter / uni)
   }
 
   /** Cosine similarity over array<float>/array<double> embeddings using
@@ -83,21 +60,4 @@ object SimilarityFunctions {
   /** Hamming distance between two 64-bit simhashes. */
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
-
-  /** Sign-random-projection bucket for an embedding: `nBits` deterministic
-    * pseudo-random hyperplanes (hash-derived), sign bits packed to a long.
-    * The LSH path for ANN at scale: equal buckets ⇒ candidate neighbors. */
-  def srpBucket(vec: Column, nBits: Int, dim: Int, seed: Long = 42L): Column = {
-    // hyperplane(b, i) = centered hash in [-0.5, 0.5): deterministic, no data dep
-    def plane(b: Int, i: Column): Column =
-      (pmod(xxhash64(lit(seed), lit(b), i), lit(1000003L)).cast("double") / 1000003.0) - 0.5
-    val bits = (0 until nBits).map { b =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), lit(dim - 1)),
-          (v, i) => v.cast("double") * plane(b, i)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce((x, y) => x.bitwiseOR(y))
-  }
 }

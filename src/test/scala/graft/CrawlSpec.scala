@@ -1179,19 +1179,27 @@ class CrawlSpec extends SparkSpec {
   test("ST5 watchdog reaps a stuck epoch: FAILED marker, no commit, clean resume") {
     val wd5 = tmpDir()
     // a store whose payload write hangs, then dies without committing —
-    // injected through the PayloadStore trait
+    // injected through the PayloadStore trait. The write runs first, so
+    // the epoch's frontier caches are filled (or cancelled while filling)
+    // before the store dies.
     class SlowStore extends DelegatingStore {
       override def writePayload(r: org.apache.spark.sql.Dataset[FetchResult], w: String, e: Int): Unit = {
+        super.writePayload(r, w, e)
         Thread.sleep(3000); throw new RuntimeException("slow store died")
       }
     }
     val cf = cfg.copy(workDir = wd5, stuckTimeoutMs = 1200)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
     intercept[StuckEpochException] {
       CrawlLoop.run(spark, cf, store = new SlowStore)
     }
     assert(new java.io.File(s"$wd5/_commits/epoch_0.FAILED.json").exists)
     assert(!new java.io.File(s"$wd5/_commits/epoch_0.json").exists)
     Thread.sleep(3000) // let the cancelled background epoch die
+    // the failed attempt released every cache it made
+    eventually("the failed epoch leaked cached frames") {
+      spark.sparkContext.getPersistentRDDs.size == persisted
+    }
     // resume with a healthy store replays epoch 0 idempotently
     val resumed = CrawlLoop.run(spark, cfg.copy(workDir = wd5))
     assert(resumed.map(_.epoch) == (0 until cfg.epochs))
@@ -1249,8 +1257,7 @@ class CrawlSpec extends SparkSpec {
     Seq("lineage/epoch=0", "latest_delta/epoch=0", "seen_blooms/epoch=0")
       .foreach(d => assert(file(s"$wdF/$d/_SUCCESS").exists, s"$d was not finished"))
     assert(file(s"$wdF/seen_blooms/epoch=0/_graft_meta.json").exists)
-    // a dynamic-overwrite write moves its partition dirs in at job commit
-    assert(file(s"$wdF/carry/epoch=0/queue=deferred").exists, "carry was not finished")
+    assert(file(s"$wdF/carry/epoch=0/_SUCCESS").exists, "carry was not finished")
     val sinkLabels = Seq("lineage-write", "latest-delta", "seen-bloom-write", "carry-write")
       .map(p => s"epoch=0 $p")
     try eventually("sink jobs never reported") {
@@ -1296,7 +1303,8 @@ class CrawlSpec extends SparkSpec {
       consolidateEvery = 2, latestCompactEvery = 2)
     val ms = CrawlLoop.run(spark, c)
     assert(ms.map(_.epoch) == (0 until c.epochs))
-    val payload = spark.read.parquet(s"${c.workDir}/payload")
+    val payloadRows = spark.read.parquet(s"${c.workDir}/payload")
+    val payload = payloadRows
       .groupBy($"crawl_epoch")
       .agg(count(when($"status" === Status.Processed, 1)),
         count(when($"status" === Status.Failed, 1)),
@@ -1312,7 +1320,38 @@ class CrawlSpec extends SparkSpec {
       assert(lineage == ((rows, bytes, hosts)), s"epoch ${m.epoch} lineage differs from the payload")
       assert(spark.read.parquet(s"${c.workDir}/metrics/epoch=${m.epoch}").as[EpochMetrics]
         .collect().toSeq == Seq(m))
+      // per bucket, the lineage's slot-1 host count is the distinct count
+      val epochRows = payloadRows.filter($"crawl_epoch" === m.epoch)
+      val bucketHosts = epochRows.groupBy($"host_bucket").agg(countDistinct($"host"))
+        .as[(Int, Long)].collect().toMap
+      assert(spark.read.parquet(s"${c.workDir}/lineage/epoch=${m.epoch}")
+        .select($"host_bucket", $"n_hosts").as[(Int, Long)].collect().toMap == bucketHosts,
+        s"epoch ${m.epoch} lineage n_hosts differs from the payload's distinct hosts")
+      // the carry holds every deferred row and every FAILED row
+      val carry = CrawlLoop.readCarried(spark, s"${c.workDir}/carry/epoch=${m.epoch}")
+        .select($"url_hash").as[Long].collect()
+      assert(carry.length == m.n_deferred + m.n_failed, s"epoch ${m.epoch} carry size")
+      val failed = epochRows.filter($"status" === Status.Failed).select($"url_hash").as[Long].collect()
+      assert(failed.toSet.subsetOf(carry.toSet), s"epoch ${m.epoch} carry lost a FAILED row")
     }
+    assert(ms.exists(_.n_failed > 0) && ms.exists(_.n_deferred > 0))
+  }
+
+  test("zero host budget: epochs that admit nothing commit empty lineage and carry every deferred row") {
+    val c = cfg.copy(workDir = tmpDir(), epochs = 2, budgetPerHost = 0)
+    val ms = CrawlLoop.run(spark, c)
+    assert(ms.map(_.epoch) == Seq(0, 1))
+    ms.foreach { m =>
+      assert(file(s"${c.workDir}/_commits/epoch_${m.epoch}.json").exists)
+      assert((m.n_admitted, m.n_hosts, m.n_processed, m.n_failed, m.bytes_written) ==
+        ((0L, 0L, 0L, 0L, 0L)), s"epoch ${m.epoch}: $m")
+      assert(m.n_deferred > 0)
+      assert(spark.read.parquet(s"${c.workDir}/lineage/epoch=${m.epoch}").count() == 0)
+      assert(CrawlLoop.readCarried(spark, s"${c.workDir}/carry/epoch=${m.epoch}").count() ==
+        m.n_deferred)
+    }
+    // epoch 1's candidates are its slice plus everything epoch 0 deferred
+    assert(ms(1).n_candidates == c.urlsPerEpoch + ms(0).n_deferred)
   }
 
   test("store read schemas: each declared schema equals the one Spark infers from a fresh store") {
@@ -1478,21 +1517,19 @@ class CrawlSpec extends SparkSpec {
   }
 
   test("an all-scheduled no-failure epoch's EMPTY carry reads back empty (not UNABLE_TO_INFER_SCHEMA)") {
-    // zero deferred + zero retry rows -> the dynamic-partition carry write
-    // leaves a part-file-less dir; the next epoch's readCarried must see
-    // an empty queue, not a schema-inference crash
+    // zero deferred + zero failed rows -> a carry dir without data
+    // files; the next epoch's readCarried must see an empty carry, not a
+    // schema-inference crash
     val dir = tmpDir() + "/carry/epoch=0"
     val empty = spark.emptyDataset[KeyedUrl].toDF()
-      .withColumn("queue", lit("deferred"))
-      .filter(lit(false))
     PayloadSink.writeCarry(empty, dir)
     val back = CrawlLoop.readCarried(spark, dir)
     assert(back.count() === 0)
-    // and a NON-empty carry still round-trips both queues
+    // and a NON-empty carry still round-trips
     val row = KeyedUrl("https://h0.example.test/a", 1L, "KARE1", "BAG",
       "h0.example.test", 0, "/a", 0L, 0L, 0,
       new java.sql.Timestamp(0L))
-    val one = Seq(row).toDS().toDF().withColumn("queue", lit("retry"))
+    val one = Seq(row).toDS().toDF()
     PayloadSink.writeCarry(one, dir)
     assert(CrawlLoop.readCarried(spark, dir).collect().toSeq === Seq(row))
   }

@@ -397,24 +397,4 @@ class FunctionsSpec extends SparkSpec {
       .select(GraftFunctions.wordNgrams(rand(7L).cast("string"), 2, lowercase = true).as("g"))
     assert(!projected.queryExecution.analyzed.expressions.forall(_.deterministic))
   }
-
-  test("shingles, minhash, lsh bands, jaccard") {
-    val df = Seq(
-      ("a", "the quick brown fox jumps over the lazy dog"),
-      ("b", "the quick brown fox jumped over the lazy dog"),
-      ("c", "entirely unrelated content nothing in common at all")
-    ).toDF("id", "text")
-      .withColumn("sh", SimilarityFunctions.charShingles($"text", 5))
-      .withColumn("sig", SimilarityFunctions.minhashSignature($"sh", 16))
-      .withColumn("bands", SimilarityFunctions.lshBandKeys($"sig", 4, 4))
-    val sigs = df.select($"id", $"sig").as[(String, Seq[Long])].collect().toMap
-    assert(sigs("a").size == 16)
-    def est(x: Seq[Long], y: Seq[Long]) = x.zip(y).count(p => p._1 == p._2) / 16.0
-    assert(est(sigs("a"), sigs("b")) > est(sigs("a"), sigs("c")))
-    val j = df.as("x").join(df.as("y"), $"x.id" < $"y.id")
-      .select($"x.id", $"y.id", SimilarityFunctions.jaccard($"x.sh", $"y.sh").as("j"))
-      .as[(String, String, Double)].collect()
-      .map { case (l, r, v) => (l, r) -> v }.toMap
-    assert(j(("a", "b")) > 0.5 && j(("a", "c")) < 0.1)
-  }
 }
