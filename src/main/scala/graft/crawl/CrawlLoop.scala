@@ -56,19 +56,18 @@ final class StuckEpochException(val epoch: Int, timeoutMs: Long)
   * resume (ST4).
   *
   * Shuffle budget per epoch (the thing that must survive 1000 executors ×
-  * 10^10 rows): (1) url_hash window for intra-epoch dedup, whose hash
-  * partitioning the exact-confirm anti-join reuses — and the anti-join
-  * only sees the bloom-positive sliver because the bloom probe is a
-  * broadcast predicate, not a shuffle; (2) one repartition(host)+sort for
-  * the fused robots+politeness stage, fed by a map-side per-host top-k
-  * prefilter so a Zipf mega-host ships ≤ budget×partitions rows into the
-  * shuffle (and the streamed run-length pass bounds task memory);
-  * (3) the partitioned write. After the write only slim O(epoch) rows
-  * shuffle: the per-bucket lineage aggregate and the bloom-delta cogroup
+  * 10^10 rows): (1) url_hash window for intra-epoch dedup; the seen
+  * probe's anti-join keeps its output narrow, because the bloom probe is a
+  * broadcast predicate and the confirmed hits are broadcast, not
+  * shuffled; (2) one repartition(host)+sort for the fused
+  * robots+politeness stage, fed by a map-side per-host top-k prefilter so
+  * a Zipf mega-host ships ≤ budget×partitions rows into the shuffle (and
+  * the streamed run-length pass bounds task memory); (3) the partitioned
+  * write. After the write only slim O(epoch) rows shuffle: the bloom delta
   * onto the segment set. Everything else is narrow. PlanSpec pins this
   * shape.
   *
-  * Fixed per-epoch driver cost is engineered down four ways (round-5;
+  * Fixed per-epoch driver cost is engineered down five ways (round-5;
   * the measured baseline was ~12.5 s/epoch of pure driver time,
   * BASELINE.md round-4 addendum):
   *  - the epoch runs as a DAG, not a queue: the five sinks after the
@@ -80,17 +79,27 @@ final class StuckEpochException(val epoch: Int, timeoutMs: Long)
   *    install under one swap. The store's own tables are read under
   *    declared schemas, so no read runs a schema-inference job;
   *  - epoch-varying values enter plans as [[graft.expressions.ParamLit]]
-  *    bound parameters, so every epoch re-uses the compiled whole-stage
-  *    code (epoch literals previously busted the codegen cache);
-  *  - every count the metrics need rides as an OBSERVED aggregate
-  *    (`Dataset.observe`) on a job the epoch already runs — no dedicated
-  *    state-count or metrics-scan jobs, and no extra full pass over the
-  *    cached frontier; `n_hosts` is the count of `slot = 1` rows (each
-  *    admitted host's first politeness slot), observed with the status
-  *    counts on the latest-delta write;
+  *    bound parameters, so every epoch's plans generate the same code
+  *    (epoch literals previously changed it every epoch);
+  *  - that code is compiled once per JVM only while a steady epoch's
+  *    generated classes fit Spark's code cache: 100 entries in 4 LRU
+  *    segments of 25, keyed by (class loader, source), so in local mode
+  *    each whole-stage pipeline takes two entries (the driver's and the
+  *    executors' compile). A segment its classes overflow recompiles all
+  *    of them every epoch. The epoch therefore keeps its plans few: the
+  *    seen probe and the prefilter run once, the lineage is one narrow
+  *    pass, the carry and the maintenance rewrites plain filters and
+  *    scans — about 80 entries per steady epoch of perfbench's
+  *    `crawl_incremental` shape;
+  *  - every count the metrics need comes from a job the epoch already
+  *    runs — no dedicated state-count or metrics-scan jobs: the dup and
+  *    schedule counts are OBSERVED aggregates (`Dataset.observe`), the
+  *    written counts come with the collected lineage; `n_hosts` is the
+  *    count of `slot = 1` rows (each admitted host's first politeness
+  *    slot);
   *  - the carry table (deferred + failed rows) is ONE filter over the
   *    cached schedule, written once, and the bloom segment store is
-  *    maintained by a distributed cogroup merge
+  *    maintained by a distributed merge
   *    ([[graft.seen.SeenSet.mergeDeltaIntoSegments]]) instead of a
   *    driver round-trip. The broadcast-tier probe collects the whole
   *    segment set, so the epoch picks that tier only when the set's
@@ -243,26 +252,10 @@ object CrawlLoop {
     // epoch's critical path)
     val candidates = newKeyed.unionByName(carried)
 
-    // 2. intra-epoch first-occurrence dedup (url_hash window), in FLAG
-    // form: every candidate row stays in the frame (DUP/LIVE), so both
-    // the candidate total and the duplicate count fold into the single
-    // state aggregation below instead of their own .count() jobs.
-    // (A min_by hash-agg variant was measured SLOWER — full-row struct
-    // aggregation drops out of codegen into ObjectHashAggregate; the
-    // window's sort is cheaper than the struct churn.)
-    // Duplicates share the canonical URL, so dedup-before-robots is
-    // interchangeable with robots-before-dedup for membership/traces;
-    // doing it first lets the anti-join reuse the url_hash partitioning.
-    // PERSISTED — for speed AND as the partitioning pin: schedule()'s
-    // phase-0 prefilter classifies rows per PARTITION and is evaluated by
-    // two separate consumer subtrees, so its input partitioning must be
-    // IDENTICAL across executions (measured drift otherwise: seen-set +34
-    // trace diffs). Rows reaching the prefilter either flow narrowly from
-    // this cache (partitioning pinned here) or through the confirm join,
-    // whose output is content-deterministically repartitioned inside
-    // unseenTwoTierBroadcast. (A no-cache variant re-ran the dedup window
-    // per consumer: 86-111 s vs 64 s at 32 cores — rejected.)
-    // ADAPTIVE storage level: deserialized rows are the fast path (SER
+    // 2. intra-epoch first-occurrence dedup (url_hash window), PERSISTED
+    // with the live rows only. ADAPTIVE storage level of the epoch's
+    // frontier-sized caches (this one and the prefilter's): deserialized
+    // rows are the fast path (SER
     // re-pays serde on every consumer — measured ~20% wall at 16M URLs),
     // but a frontier slice that rivals the heap must step DOWN — first to
     // compact serialized blocks, then out of the heap entirely: on-heap
@@ -316,16 +309,26 @@ object CrawlLoop {
         StorageLevel.MEMORY_AND_DISK_SER
       else StorageLevel.DISK_ONLY
     }
-    // dup/total counts ride as OBSERVED aggregates on the cache
-    // materialization (no dedicated count job, no extra pass over the
-    // cached frontier — the old union+groupBy state-count job re-scanned
-    // BOTH frontier caches every epoch on a memory-bandwidth-bound box)
-    val dedupTagged = observed.on(Politeness.dedupFlagged(candidates), "dedup",
-        count(when(col("is_dup__"), 1)).as("dup"),
+    // The dup and total counts are OBSERVED on the window's own output,
+    // below the dup filter, when the cache is filled (no dedicated count
+    // job, no extra pass over the cached frontier).
+    // (A min_by hash-agg variant was measured SLOWER — full-row struct
+    // aggregation drops out of codegen into ObjectHashAggregate; the
+    // window's sort is cheaper than the struct churn.)
+    // Duplicates share the canonical URL, so dedup-before-robots is
+    // interchangeable with robots-before-dedup for membership/traces;
+    // doing it first lets the anti-join reuse the url_hash partitioning.
+    // The seen probe reads the cache twice (the bloom sliver and the
+    // anti-joined rows), and the rows reaching the politeness prefilter
+    // flow narrowly from it, so their partitioning is pinned here. (A
+    // no-cache variant re-ran the dedup window per consumer: 86-111 s vs
+    // 64 s at 32 cores — rejected.)
+    val rank = col(Politeness.DupRank)
+    val deduped = observed.on(Politeness.dedupRanked(candidates), "dedup",
+        count(when(rank > 1, 1)).as("dup"),
         count(lit(1)).as("total"))
+      .filter(rank === 1).drop(Politeness.DupRank).as[KeyedUrl]
       .persist(frontierCacheLevel)
-    val deduped = dedupTagged.filter(!col("is_dup__")).drop("is_dup__")
-      .as[KeyedUrl]
 
     // 3. URL-seen anti-join (success-only store; forceUpdate bypasses).
     // Two-tier: bloom probe + exact confirm of the positives. No count job
@@ -371,18 +374,26 @@ object CrawlLoop {
       sql.maxBroadcastTableSizeInBytes)
     val (unseen, seenCleanup): (Dataset[KeyedUrl], () => Unit) =
       if (cfg.forceUpdate || seen == null) (deduped, () => ())
-      else if (broadcastTier) SeenSet.unseenTwoTierBroadcast(deduped, seen, segmentsDs)
+      else if (broadcastTier) SeenSet.unseenTwoTierBroadcast(deduped, seen,
+        loadSegments(spark, cfg, epoch - 1, expectedPerBucket)
+          .getOrElse(segmentsDs.collect().toSeq))
       else SeenSet.unseenTwoTier(deduped, seen, segmentsDs)
 
     // 4. fused host stage: robots admission + politeness rank + budget —
-    // map-side deny/top-k prefilter, then one repartition(host)+sort pass.
+    // map-side deny/top-k prefilter, then one repartition(host)+sort pass
+    // over its survivors. The prefilter's output is PERSISTED: its decided
+    // rows and its survivors both feed the schedule, and without the cache
+    // the probe and the prefilter above it ran once per consumer (and the
+    // prefilter, which decides per PARTITION, had to see identical input
+    // partitioning each time). It is released once the schedule is filled.
     // Scheduling-state counts are OBSERVED on the carry write, which scans
     // the whole cached schedule: every live row is exactly one of
     // denied/admitted/deferred, and the seen-skip count is the residual —
     // zero dedicated count jobs.
-    val (scheduledDs, _) = Politeness.scheduleTracked(unseen, rules.value,
-      cfg.budgetPerHost, sharedRules = Some(rules))
-    val scheduled = scheduledDs.persist(StorageLevel.MEMORY_AND_DISK)
+    val pre = Politeness.prefilter(unseen, rules.value, cfg.budgetPerHost,
+      sharedRules = Some(rules)).persist(frontierCacheLevel)
+    val scheduled = Politeness.rank(pre, rules, cfg.budgetPerHost)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // r06: columnar filter+projection instead of typed filter+map — the
     // typed path deserialized the FULL KeyedUrl (incl. per-row
@@ -405,6 +416,7 @@ object CrawlLoop {
     // Every cache the epoch made is released in ONE finally, also when the
     // payload write or a sink throws or the watchdog cancels it: a replay
     // in this session must not find the failed attempt's blocks.
+    var lineage: Seq[PayloadSink.BucketCounts] = Nil
     try {
       // 7. sinks (idempotent per epoch), all behind the PayloadStore
       // trait. This write is the job that materializes BOTH frontier
@@ -413,7 +425,8 @@ object CrawlLoop {
       store.writePayload(results, cfg.workDir, epoch)
       // scheduled is materialized: release everything upstream of it
       seenCleanup()
-      dedupTagged.unpersist()
+      deduped.unpersist()
+      pre.unpersist()
       // read back ONLY this epoch's partition directories (listing the
       // whole payload tree would grow linearly with crawl age; at 10^4+
       // epochs the file listing, not the data, becomes the cost), under
@@ -440,45 +453,49 @@ object CrawlLoop {
           col("host_bucket"), col("crawl_epoch"))
         .persist(StorageLevel.MEMORY_AND_DISK)
 
+      // The per-bucket lineage, with the epoch's status counts and FAILED
+      // keys, is collected before the fan-out: its job fills the `written`
+      // cache once, so the sinks below never race to fill it, and it gives
+      // the metrics their written counts and the carry its retry keys.
+      spark.sparkContext.setJobDescription(s"epoch=$epoch lineage-write")
+      lineage = PayloadSink.lineage(written, epoch)
+
       // The five sinks below read only cached frames (`written` and
-      // `scheduled`) and none reads another's output, so they run as
-      // concurrent jobs; the metrics and the commit marker follow only
-      // once every sink has joined, so a replay still rewrites each sink
-      // idempotently.
+      // `scheduled`) or what the lineage collected, and none reads another's
+      // output, so they run as concurrent jobs; the metrics and the commit
+      // marker follow only once every sink has joined, so a replay still
+      // rewrites each sink idempotently.
       def writeLineage(): Unit =
-        store.writeLineage(PayloadSink.lineage(written, epoch), cfg.workDir, epoch)
+        store.writeLineage(PayloadSink.localFrame(spark, lineage.map(_.row)).as[PartitionLineage],
+          cfg.workDir, epoch)
 
       // J3 upsert-reader maintenance: append this epoch's pointer delta
       // (O(epoch) — one slim columnar write); the fold into the resolved
       // latest/ dir happens on the latestCompactEvery cadence in [[run]],
       // so "current rows" consumers never pay a full-store window per
-      // read. Status counts, byte sum and host count are observed on this
-      // write's own plan, directly above the cache scan: the sinks race
-      // to fill the `written` cache, and an observation inside the cached
-      // plan would be reported by whichever reader finished first,
-      // possibly before every partition was counted. n_hosts = the
-      // `slot = 1` rows: phase 1 of the politeness stage numbers each
-      // admitted host's rows 1..budget in one run, and every admitted row
-      // is written.
-      def writeLatestDelta(): Unit = LatestView.appendDelta(spark, cfg.workDir, epoch,
-        observed.on(written, "written",
-          count(when(col("status") === Status.Processed, 1)).as("p"),
-          count(when(col("status") === Status.Failed, 1)).as("f"),
-          count(when(col("status") === Status.Rejected, 1)).as("r"),
-          coalesce(sum(col("n_bytes")), lit(0L)).as("b"),
-          count(when(col("slot") === 1, 1)).as("hosts")))
+      // read.
+      def writeLatestDelta(): Unit =
+        LatestView.appendDelta(spark, cfg.workDir, epoch, written)
 
       // seen delta = terminal-success rows only (reference guard:
-      // status==DOWNLOADED ⇒ skip; CrawlerOrchestrationService.java:114-115)
-      def writeSeen(): Unit = store.writeSeenDelta(
-        written.filter(col("status") === Status.Processed)
-          .select(col("url_hash"), col("host_bucket").cast("int").as("host_bucket")),
-        cfg.workDir, epoch)
+      // status==DOWNLOADED ⇒ skip; CrawlerOrchestrationService.java:114-115),
+      // and only keys the store does not hold yet, so the store holds each
+      // key once: the seen probe already dropped the stored keys, except
+      // under forceUpdate, which skips the probe
+      def writeSeen(): Unit = {
+        val processed = written.filter(col("status") === Status.Processed)
+          .select(col("url_hash"), col("host_bucket").cast("int").as("host_bucket"))
+        store.writeSeenDelta(
+          if (cfg.forceUpdate && seen != null)
+            processed.join(seen.select(col("url_hash")), Seq("url_hash"), "left_anti")
+          else processed,
+          cfg.workDir, epoch)
+      }
 
       // incremental bloom maintenance: segments(epoch) = segments(epoch-1)
       // (≡ blooms of seen < epoch) ∪ bloom(this epoch's delta) — an
       // O(delta) scan, never a store rescan, and fully DISTRIBUTED: the
-      // delta keys cogroup into the persisted segment dataset on their
+      // delta keys shuffle with the persisted segment dataset on their
       // bucket (SeenSet.mergeDeltaIntoSegments), so nothing segment- or
       // key-sized ever rides through the driver. Deleted (tombstoned) keys
       // stay set in the persisted blooms: that is only a false positive,
@@ -493,8 +510,8 @@ object CrawlLoop {
         val prevSegs: Dataset[(Int, Array[Byte])] =
           if (seen == null) spark.emptyDataset[(Int, Array[Byte])]
           else segmentsDs
-        // written at the cogroup's OWN parallelism: an earlier coalesce(1)
-        // folded back into the cogroup and ran the whole merge — every
+        // written at the merge's OWN parallelism: an earlier coalesce(1)
+        // folded back into the merge and ran it — every
         // bucket's key-fill — as ONE task (~12 GB of serial segment work
         // at 10^10 keys). The file count per segment dir is bounded by the
         // shuffle parallelism and the dir itself is O(1) per crawl (the
@@ -521,24 +538,23 @@ object CrawlLoop {
       // carry = the next epoch's work: every DEFERRED row, plus each
       // ADMITTED row whose fetch FAILED (transient/corrupt, eligible next
       // epoch) — ONE filter over the cached schedule. Failures come from
-      // the ACTUAL validated statuses in the written table (broadcast left
-      // join on the small FAILED sliver, no shuffle), never recomputed
-      // from expected outcomes: if validation ever disagreed with the
-      // expectation table, the engine would otherwise put one URL in BOTH
-      // the seen store and the carry and drift from itself.
+      // the ACTUAL validated statuses in the written table (the small FAILED
+      // key set the lineage collected, broadcast to the filter), never
+      // recomputed from expected outcomes: if validation ever disagreed
+      // with the expectation table, the engine would otherwise put one URL
+      // in BOTH the seen store and the carry and drift from itself.
       def writeCarry(): Unit = {
-        val failedKeys = written.filter(col("status") === Status.Failed)
-          .select(col("url_hash").as("failed__"))
+        val failed = spark.sparkContext.broadcast(lineage.flatMap(_.failed).toSet)
+        val isFailed = udf((h: Long) => failed.value.contains(h))
         val states = observed.on(scheduled, "sched",
           count(when(col("_2") === Politeness.Sched.Denied, 1)).as("denied"),
-          count(when(col("_2") === Politeness.Sched.Admitted, 1)).as("admitted"),
           count(when(col("_2") === Politeness.Sched.Deferred, 1)).as("deferred"))
-        store.writeCarry(
-          states.join(broadcast(failedKeys), col("_1.url_hash") === col("failed__"), "left")
-            .filter(col("_2") === Politeness.Sched.Deferred ||
-              (col("_2") === Politeness.Sched.Admitted && col("failed__").isNotNull))
+        try store.writeCarry(
+          states.filter(col("_2") === Politeness.Sched.Deferred ||
+              (col("_2") === Politeness.Sched.Admitted && isFailed(col("_1.url_hash"))))
             .select(col("_1.*")),
           s"${cfg.workDir}/carry/epoch=$epoch")
+        finally failed.unpersist()
       }
 
       val sinks = Seq[(String, () => Unit)](
@@ -551,24 +567,27 @@ object CrawlLoop {
       finally written.unpersist()
     } finally {
       seenCleanup()
-      dedupTagged.unpersist()
+      deduped.unpersist()
+      pre.unpersist()
       scheduled.unpersist()
       segsFallback.foreach(_.unpersist(blocking = false))
     }
 
-    // all outcome metrics were observed on jobs this epoch already ran:
-    // dup/total on the dedup cache (filled by the payload write),
-    // scheduling states on the carry write, status counts, bytes and
-    // hosts on the latest-delta write. Zero dedicated metric jobs.
+    // all outcome metrics come from jobs this epoch already ran: dup/total
+    // observed on the dedup cache (filled by the payload write),
+    // denied/deferred observed on the carry write, and the written counts
+    // from the collected lineage (every admitted row is written). Zero
+    // dedicated metric jobs.
     val dRow = observed("dedup")
     val sRow = observed("sched")
-    val wRow = observed("written")
     val nDup = dRow.getAs[Long]("dup")
     val nCandidates = dRow.getAs[Long]("total")
     val nLive = nCandidates - nDup
     val nDenied = sRow.getAs[Long]("denied")
-    val nAdmitted = sRow.getAs[Long]("admitted")
     val nDeferred = sRow.getAs[Long]("deferred")
+    val nAdmitted = lineage.map(_.row.n_rows).sum
+    val nProcessed = lineage.map(_.processed).sum
+    val nFailed = lineage.map(_.failed.length.toLong).sum
     val nSeenSkipped = nLive - nDenied - nAdmitted - nDeferred
     val durationMs = (System.nanoTime() - tEpoch0) / 1000000L
     // A8/A9/A11 derived metrics (BulkCrawlProgress.java:254-329 analogue):
@@ -585,11 +604,11 @@ object CrawlLoop {
       n_seen_skipped = nSeenSkipped,
       n_admitted = nAdmitted,
       n_deferred = nDeferred,
-      n_processed = wRow.getAs[Long]("p"),
-      n_failed = wRow.getAs[Long]("f"),
-      n_rejected = wRow.getAs[Long]("r"),
-      bytes_written = wRow.getAs[Long]("b"),
-      n_hosts = wRow.getAs[Long]("hosts"),
+      n_processed = nProcessed,
+      n_failed = nFailed,
+      n_rejected = nAdmitted - nProcessed - nFailed,
+      bytes_written = lineage.map(_.row.n_bytes).sum,
+      n_hosts = lineage.map(_.row.n_hosts).sum,
       duration_ms = durationMs,
       urls_per_sec = rate,
       progress_pct = progressPct,
@@ -656,12 +675,24 @@ object CrawlLoop {
   private[graft] def bloomDir(workDir: String, epoch: Int): String =
     s"$workDir/seen_blooms/epoch=$epoch"
 
-  /** [[loadSegmentsDs]] collected — test/diagnostic helper ONLY (the epoch
-    * loop never collects segments outside the broadcast-tier probe). */
+  /** The rows of [[loadSegmentsDs]], read on the driver by bucket order:
+    * the broadcast-tier probe needs the whole set there, and the files are
+    * read straight, without a Spark job (the tier rule bounds their size).
+    * The only place outside that probe that reads them is a test. */
   private[graft] def loadSegments(spark: SparkSession, cfg: CrawlConfig,
       epoch: Int, expectedPerBucket: Long): Option[Seq[(Int, Array[Byte])]] =
-    loadSegmentsDs(spark, cfg, epoch, expectedPerBucket)
-      .map(_.collect().toSeq.sortBy(_._1))
+    validSegmentDir(spark, cfg, epoch, expectedPerBucket).map { dir =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      StoreFiles.list(spark, dir).filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        .flatMap { n =>
+          val reader = org.apache.parquet.hadoop.ParquetReader
+            .builder(new org.apache.parquet.hadoop.example.GroupReadSupport, new Path(s"$dir/$n"))
+            .withConf(conf).build()
+          try Iterator.continually(reader.read()).takeWhile(_ != null)
+            .map(g => (g.getInteger("host_bucket", 0), g.getBinary("bloom", 0).getBytes)).toVector
+          finally reader.close()
+        }.sortBy(_._1)
+    }
 
   /** Load the persisted bloom segments written after `epoch` as a lazy
     * Dataset (no job, no collect). Returns None — and the caller rebuilds
@@ -683,17 +714,23 @@ object CrawlLoop {
   private[graft] def loadSegmentsDs(spark: SparkSession, cfg: CrawlConfig,
       epoch: Int, expectedPerBucket: Long): Option[Dataset[(Int, Array[Byte])]] = {
     import spark.implicits._
+    validSegmentDir(spark, cfg, epoch, expectedPerBucket)
+      .map(spark.read.schema(SegmentSchema).parquet(_).as[(Int, Array[Byte])])
+  }
+
+  /** The segment dir written after `epoch`, when [[loadSegmentsDs]]'s
+    * checks pass. */
+  private def validSegmentDir(spark: SparkSession, cfg: CrawlConfig,
+      epoch: Int, expectedPerBucket: Long): Option[String] = {
     val dir = bloomDir(cfg.workDir, epoch)
     if (!StoreFiles.fs(spark, dir).exists(new Path(s"$dir/_SUCCESS"))) return None
     scala.util.Try {
-      val ok = StoreFiles.readJson(spark, s"$dir/_graft_meta.json").exists { m =>
+      StoreFiles.readJson(spark, s"$dir/_graft_meta.json").exists { m =>
         m.get("buckets").asLong == cfg.buckets &&
         m.get("expectedPerBucket").asLong == expectedPerBucket &&
         m.get("fpp").asDouble == cfg.bloomFpp
       }
-      if (!ok) None
-      else Some(spark.read.schema(SegmentSchema).parquet(dir).as[(Int, Array[Byte])])
-    }.getOrElse(None)
+    }.toOption.filter(identity).map(_ => dir)
   }
 
   /** Union of all committed seen deltas before `epoch`, with delete

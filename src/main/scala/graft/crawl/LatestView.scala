@@ -30,9 +30,11 @@ import graft.fs.StoreFiles
   *    per epoch; the delta append is O(epoch).)
   *  - Every `latestCompactEvery` epochs the deltas fold into the resolved
   *    `latest/` dir: tail resolved within itself (max-epoch per key — the
-  *    tail is K epochs, bounded), then the resolved store anti-joins the
-  *    tail's keys (store SCANNED, never shuffled) and the staged result
-  *    swaps in, with the folded deltas dropped, as one [[StoreFiles.swap]].
+  *    tail is K epochs, bounded; one epoch is already resolved), then the
+  *    resolved store anti-joins the tail's keys, and the union is written
+  *    as it streams — no shuffle of the store, no sort — to a staged dir
+  *    that swaps in, with the folded deltas dropped, as one
+  *    [[StoreFiles.swap]].
   *  - [[read]] = resolved scan when no tail exists; otherwise resolved
   *    anti-join broadcast(tail keys) ∪ tail-resolved — zero shuffle of
   *    the store, no Window anywhere, tail work bounded by the cadence.
@@ -49,12 +51,14 @@ object LatestView {
   private def stagingDir(workDir: String) = s"$workDir/latest_staging"
 
   /** Schemas of the delta dirs (read with their `epoch` partition column)
-    * and of the resolved view (`host_bucket` is its partition column):
-    * declared, because inferring them runs a footer-reading job per read. */
+    * and of the resolved view: declared, because inferring them runs a
+    * footer-reading job per read. A view folded before the resolved dir
+    * was flat keeps `host_bucket` as its partition column; read under
+    * this schema it resolves the same columns. */
   private[graft] val DeltaSchema =
     StructType.fromDDL("url_hash BIGINT, status STRING, host_bucket INT, crawl_epoch INT, epoch INT")
   private[graft] val ResolvedSchema =
-    StructType.fromDDL("url_hash BIGINT, status STRING, crawl_epoch INT, host_bucket INT")
+    StructType.fromDDL("url_hash BIGINT, status STRING, host_bucket INT, crawl_epoch INT")
 
   /** The pointer rows of the delta dirs `dirs`, without their dir key. */
   private def readDeltas(spark: SparkSession, workDir: String, dirs: Seq[String]): DataFrame =
@@ -64,7 +68,7 @@ object LatestView {
 
   private def readResolved(spark: SparkSession, workDir: String): DataFrame =
     spark.read.schema(ResolvedSchema).parquet(latestDir(workDir))
-      .select(col("url_hash"), col("status"), col("host_bucket"), col("crawl_epoch"))
+      .select(ResolvedSchema.fieldNames.map(col).toSeq: _*)
 
   private def pointerCols(written: DataFrame): DataFrame =
     written.select(col("url_hash"), col("status"),
@@ -85,18 +89,23 @@ object LatestView {
   private def listDeltaDirs(spark: SparkSession, workDir: String): Seq[String] =
     StoreFiles.epochDirs(spark, deltaRoot(workDir))
 
-  /** Resolve a pointer frame to one row per url_hash (max crawl_epoch
-    * wins — epochs are unique per key). max(struct) keeps the plan
-    * Window-free; it only ever runs over the bounded delta tail. */
-  private def resolveTail(tail: DataFrame): DataFrame =
-    tail.groupBy(col("url_hash"))
+  /** The delta dirs `dirs` resolved to one pointer per url_hash (max
+    * crawl_epoch wins — epochs are unique per key). One dir is already
+    * resolved: an epoch writes each url_hash at most once (its candidates
+    * are deduplicated on it). Several resolve by max(struct), which keeps
+    * the plan Window-free; it only ever runs over the bounded delta tail. */
+  private def resolveTail(spark: SparkSession, workDir: String, dirs: Seq[String]): DataFrame = {
+    val tail = readDeltas(spark, workDir, dirs)
+    if (dirs.size == 1) tail
+    else tail.groupBy(col("url_hash"))
       .agg(max(struct(col("crawl_epoch"), col("host_bucket"), col("status"))).as("r"))
       .select(col("url_hash"), col("r.status").as("status"),
         col("r.host_bucket").as("host_bucket"), col("r.crawl_epoch").as("crawl_epoch"))
+  }
 
   /** Fold all outstanding deltas into the resolved `latest/` dir
-    * (staged write, then one swap of the bucket dirs that drops the
-    * deltas). Amortized: the crawl loop calls it every
+    * (staged write, then one swap that drops the deltas). Amortized: the
+    * crawl loop calls it every
     * `latestCompactEvery` epochs; also safe to call on demand before
     * heavy read workloads. */
   def compact(spark: SparkSession, workDir: String): Unit =
@@ -104,35 +113,27 @@ object LatestView {
       .foreach(StoreFiles.swap(spark, StoreFiles.swapMarker(workDir), _))
 
   /** Write the merged view to `latest_staging/` and return the swap that
-    * moves each staged bucket dir over `latest/` and then drops the
-    * staging dir and the folded deltas (oldest first); None without
-    * deltas. */
+    * moves it over `latest/` and then drops the folded deltas (oldest
+    * first); None without deltas. */
   private[graft] def stageFold(spark: SparkSession, workDir: String)
       : Option[StoreFiles.Swap] = {
     val deltaDirs = listDeltaDirs(spark, workDir)
     if (deltaDirs.isEmpty) return None
     val fs = StoreFiles.fs(spark, workDir)
-    val tail = resolveTail(readDeltas(spark, workDir, deltaDirs))
+    val tail = resolveTail(spark, workDir, deltaDirs)
     val merged =
       if (!fs.exists(new Path(latestDir(workDir)))) tail
       else {
-        val old = readResolved(spark, workDir)
-        // the resolved store streams through a scan; only the bounded tail
-        // shuffles (shuffle-hash: the tail's key set is epochs×admissions —
-        // too big to broadcast cheaply, small enough to shuffle)
-        old.join(tail.select(col("url_hash")).hint("shuffle_hash"),
-            Seq("url_hash"), "left_anti")
+        // the tail's key set is epochs × admissions: Spark plans the
+        // anti-join by its size, a broadcast (the resolved store streams
+        // through a scan) until it outgrows the broadcast threshold
+        readResolved(spark, workDir)
+          .join(tail.select(col("url_hash")), Seq("url_hash"), "left_anti")
           .unionByName(tail)
       }
-    // cleared first: under dynamic partition overwrite a bucket dir left
-    // by an earlier, crashed staging would otherwise survive and swap in
     val staging = stagingDir(workDir)
-    fs.delete(new Path(staging), true)
-    merged.repartition(col("host_bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("host_bucket").parquet(staging)
-    val moves = StoreFiles.list(spark, staging).filter(_.startsWith("host_bucket="))
-      .map(b => s"$staging/$b" -> s"${latestDir(workDir)}/$b")
-    Some(StoreFiles.Swap(moves, staging +: deltaDirs))
+    merged.write.mode(SaveMode.Overwrite).parquet(staging)
+    Some(StoreFiles.Swap(Seq(staging -> latestDir(workDir)), deltaDirs))
   }
 
   /** The latest-row-wins pointer view. Plan shape: resolved scan when the
@@ -147,7 +148,7 @@ object LatestView {
       s"no latest view under $workDir — run the crawl first")
     val tailOpt =
       if (deltaDirs.isEmpty) None
-      else Some(resolveTail(readDeltas(spark, workDir, deltaDirs)))
+      else Some(resolveTail(spark, workDir, deltaDirs))
     (tailOpt, hasResolved) match {
       case (None, _) => readResolved(spark, workDir)
       case (Some(tail), false) => tail

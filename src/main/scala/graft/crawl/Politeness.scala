@@ -1,5 +1,6 @@
 package graft.crawl
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -84,11 +85,11 @@ object Politeness {
     * deterministic.
     *
     * Output: (row, state, slot): ADMITTED (slot 1..budget), DEFERRED
-    * (carried to the next epoch), DENIED (robots; terminal). The phase-0
-    * pass is deliberately NOT persisted: its two consumers sit in one
-    * plan, the exchanges beneath it are deduplicated by ReuseExchange,
-    * and the caller persists the unioned result anyway — one extra
-    * narrow map pass beats caching a full epoch frontier. */
+    * (carried to the next epoch), DENIED (robots; terminal). Phase 0's
+    * output has two consumers (its decided rows and the survivors' host
+    * shuffle); a caller that materializes the result once can persist
+    * [[prefilter]]'s output and hand it to [[rank]] so phase 0 runs once,
+    * as the epoch loop does. */
   def schedule(unseen: Dataset[KeyedUrl], rules: Map[String, RobotsRule],
       budgetPerHost: Int, epochWindowSec: Long = 0L): Dataset[(KeyedUrl, String, Int)] =
     scheduleTracked(unseen, rules, budgetPerHost, epochWindowSec)._1
@@ -100,19 +101,25 @@ object Politeness {
     * scheduled rows are materialized. */
   def scheduleTracked(unseen: Dataset[KeyedUrl], rules: Map[String, RobotsRule],
       budgetPerHost: Int, epochWindowSec: Long = 0L,
-      sharedRules: Option[org.apache.spark.broadcast.Broadcast[Map[String, RobotsRule]]] = None)
-      : (Dataset[(KeyedUrl, String, Int)],
-         org.apache.spark.broadcast.Broadcast[Map[String, RobotsRule]]) = {
-    val spark = unseen.sparkSession
-    import spark.implicits._
+      sharedRules: Option[Broadcast[Map[String, RobotsRule]]] = None)
+      : (Dataset[(KeyedUrl, String, Int)], Broadcast[Map[String, RobotsRule]]) = {
     // rules are epoch-invariant: the epoch loop broadcasts them ONCE per
     // run and passes the handle in, instead of one broadcast per epoch
-    val bcRules = sharedRules.getOrElse(spark.sparkContext.broadcast(rules))
+    val bcRules = sharedRules.getOrElse(unseen.sparkSession.sparkContext.broadcast(rules))
     val pre = prefilter(unseen, rules, budgetPerHost,
       epochWindowSec = epochWindowSec, sharedRules = Some(bcRules))
+    (rank(pre, bcRules, budgetPerHost, epochWindowSec), bcRules)
+  }
 
-    // phase 1: exact global ranking over the (bounded) survivors only
-    val ranked = pre.filter(_._2 == Sched.Survivor).map(_._1)
+  /** Phase 1 of [[schedule]] over phase 0's output `pre`: exact global
+    * ranking of the (bounded) survivors only, in column form up to the
+    * run-length pass; phase 0's decided rows pass through. */
+  private[graft] def rank(pre: Dataset[(KeyedUrl, String, Int)],
+      bcRules: Broadcast[Map[String, RobotsRule]], budgetPerHost: Int,
+      epochWindowSec: Long = 0L): Dataset[(KeyedUrl, String, Int)] = {
+    val spark = pre.sparkSession
+    import spark.implicits._
+    val ranked = pre.filter(col("_2") === Sched.Survivor).select(col("_1.*")).as[KeyedUrl]
       .repartition(col("host"))
       .sortWithinPartitions(col("host"), col("discovered_epoch"),
         col("sitemap_seq"), col("entry_seq"))
@@ -130,7 +137,7 @@ object Politeness {
           else (r, Sched.Deferred, 0)
         }
       }
-    (pre.filter(_._2 != Sched.Survivor).unionByName(ranked), bcRules)
+    pre.filter(col("_2") =!= Sched.Survivor).unionByName(ranked)
   }
 
   /** Heap-state ceiling per task: once this many hosts have live heaps,
@@ -200,7 +207,7 @@ object Politeness {
   private[graft] def prefilter(unseen: Dataset[KeyedUrl],
       rules: Map[String, RobotsRule], budgetPerHost: Int,
       maxHeapHosts: Int = MaxHeapHosts, epochWindowSec: Long = 0L,
-      sharedRules: Option[org.apache.spark.broadcast.Broadcast[Map[String, RobotsRule]]] = None,
+      sharedRules: Option[Broadcast[Map[String, RobotsRule]]] = None,
       maxHeapRows: Int = MaxHeapRowsAuto)
       : Dataset[(KeyedUrl, String, Int)] = {
     val spark = unseen.sparkSession
@@ -259,14 +266,22 @@ object Politeness {
   }
 
   /** [[dedupWithinEpoch]] in flag form: every candidate row tagged
-    * `is_dup__` instead of duplicates being dropped — lets the epoch loop
-    * count duplicates in the SAME aggregation as the scheduling states
-    * (one driver job instead of two counts). */
-  def dedupFlagged(candidates: Dataset[KeyedUrl]): org.apache.spark.sql.DataFrame = {
+    * `is_dup__` instead of duplicates being dropped — lets a caller count
+    * the duplicates of the frame it keeps. */
+  def dedupFlagged(candidates: Dataset[KeyedUrl]): org.apache.spark.sql.DataFrame =
+    dedupRanked(candidates).withColumn("is_dup__", col(DupRank) > 1).drop(DupRank)
+
+  /** Name of [[dedupRanked]]'s rank column: 1 on each url_hash's first
+    * occurrence, above 1 on its duplicates. */
+  private[graft] val DupRank = "dup_rank__"
+
+  /** The candidates with their [[DupRank]] within their url_hash, in
+    * reference order: the window's own output, so a count or a filter on
+    * the rank needs no projection between them and the window. */
+  private[graft] def dedupRanked(candidates: Dataset[KeyedUrl]): org.apache.spark.sql.DataFrame = {
     val w = Window.partitionBy(col("url_hash"))
       .orderBy(orderCols.map(col): _*)
-    candidates.toDF()
-      .withColumn("is_dup__", row_number().over(w) > 1)
+    candidates.toDF().withColumn(DupRank, row_number().over(w))
   }
 
 }

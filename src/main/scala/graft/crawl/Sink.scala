@@ -96,39 +96,74 @@ object PayloadSink extends PayloadStore {
       .filter(l => fs.exists(new Path(s"$workDir/payload/$l")))
   }
 
+  /** One bucket's [[PartitionLineage]] row, its PROCESSED count and its
+    * FAILED rows' url_hashes (the rest of its `n_rows` are REJECTED). */
+  final case class BucketCounts(row: PartitionLineage, processed: Long, failed: Array[Long])
+
   /** Per-(epoch, host_bucket) lineage from the WRITTEN payload frame
-    * (columns: host_bucket, slot, url_hash, n_bytes): which partition wrote
-    * what. Computed post-write so the binary column never needs caching.
-    * `n_hosts` counts the `slot = 1` rows: the politeness stage numbers
-    * each admitted host's rows 1..budget in one run (Politeness.schedule)
-    * and every admitted row is written, so each host in the bucket has
-    * exactly one such row — the exact distinct-host count without a
-    * distinct aggregate. */
-  def lineage(written: org.apache.spark.sql.DataFrame, epoch: Int): Dataset[PartitionLineage] = {
+    * (columns: host_bucket, url_hash, n_bytes, slot, status): which
+    * partition wrote what, with each bucket's status counts and FAILED
+    * keys. One narrow pass: each task folds its rows into per-bucket
+    * partials, and the driver merges the at most tasks × buckets partials
+    * it collects — no aggregate shuffle, and the partials come back as
+    * plain objects, with no row encoding. Computed post-write so the
+    * binary column never needs caching. `n_hosts` counts the `slot = 1`
+    * rows: the politeness stage numbers each admitted host's rows
+    * 1..budget in one run (Politeness.rank) and every admitted row is
+    * written, so each host in the bucket has exactly one such row — the
+    * exact distinct-host count without a distinct aggregate. */
+  def lineage(written: DataFrame, epoch: Int): Seq[BucketCounts] = {
     val spark = written.sparkSession
     import spark.implicits._
-    written
-      .groupBy(col("host_bucket"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("n_bytes")).as("n_bytes"),
-        count(when(col("slot") === 1, 1)).as("n_hosts"),
-        min(col("url_hash")).as("min_url_hash"),
-        max(col("url_hash")).as("max_url_hash"))
-      .select(graft.expressions.ParamLit.int(epoch).as("epoch"),
-        col("host_bucket").cast("int").as("host_bucket"),
-        col("n_rows"), col("n_bytes"), col("n_hosts"),
-        col("min_url_hash"), col("max_url_hash"))
-      .as[PartitionLineage]
+    written.select(col("host_bucket"), col("url_hash"), col("n_bytes"), col("slot"),
+        col("status"))
+      .as[(Int, Long, Long, Int, String)].rdd
+      .mapPartitions { rows =>
+        final class Part(b: Int) {
+          var n, bytes, hosts, processed = 0L
+          var lo = Long.MaxValue
+          var hi = Long.MinValue
+          val failed = Array.newBuilder[Long]
+          def result = BucketCounts(
+            PartitionLineage(epoch, b, n, bytes, hosts, lo, hi), processed, failed.result())
+        }
+        val parts = scala.collection.mutable.Map.empty[Int, Part]
+        rows.foreach { case (b, h, bytes, slot, status) =>
+          val p = parts.getOrElseUpdate(b, new Part(b))
+          p.n += 1; p.bytes += bytes
+          if (slot == 1) p.hosts += 1
+          p.lo = math.min(p.lo, h); p.hi = math.max(p.hi, h)
+          if (status == Status.Processed) p.processed += 1
+          else if (status == Status.Failed) p.failed += h
+        }
+        parts.valuesIterator.map(_.result)
+      }
+      .collect().toSeq.groupBy(_.row.host_bucket).values.map(_.reduce { (x, y) =>
+        BucketCounts(
+          x.row.copy(n_rows = x.row.n_rows + y.row.n_rows,
+            n_bytes = x.row.n_bytes + y.row.n_bytes,
+            n_hosts = x.row.n_hosts + y.row.n_hosts,
+            min_url_hash = math.min(x.row.min_url_hash, y.row.min_url_hash),
+            max_url_hash = math.max(x.row.max_url_hash, y.row.max_url_hash)),
+          x.processed + y.processed, x.failed ++ y.failed)
+      }).toSeq.sortBy(_.row.host_bucket)
   }
 
   def writeLineage(l: Dataset[PartitionLineage], workDir: String, epoch: Int): Unit =
     l.write.mode(SaveMode.Overwrite).parquet(s"$workDir/lineage/epoch=$epoch")
 
-  def writeMetrics(m: EpochMetrics, workDir: String, spark: SparkSession): Unit = {
-    import spark.implicits._
-    Seq(m).toDS().coalesce(1).write.mode(SaveMode.Overwrite)
+  def writeMetrics(m: EpochMetrics, workDir: String, spark: SparkSession): Unit =
+    localFrame(spark, Seq(m)).write.mode(SaveMode.Overwrite)
       .parquet(s"$workDir/metrics/epoch=${m.epoch}")
-  }
+
+  /** `rows` as a one-partition local frame under their case-class schema,
+    * converted field by field: a driver-side table of a few rows needs no
+    * generated row encoder. */
+  def localFrame[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      spark: SparkSession, rows: Seq[T]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(r => org.apache.spark.sql.Row.fromTuple(r)): _*),
+      org.apache.spark.sql.Encoders.product[T].schema).coalesce(1)
 
   def writeSeenDelta(delta: DataFrame, workDir: String, epoch: Int): Unit =
     delta.write.mode(SaveMode.Overwrite).parquet(s"$workDir/seen/epoch=$epoch")

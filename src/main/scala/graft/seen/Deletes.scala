@@ -72,7 +72,9 @@ object SeenDeletes {
     * one, tombstones applied, and drop every tombstone dir with
     * `seq ≤ uptoEpoch`: such a tombstone hides only rows of the merged
     * dirs. Membership-identical; a no-op with fewer than 2 dirs and no such
-    * tombstones. */
+    * tombstones. The merge is a plain rewrite, no distinct: the epoch loop
+    * writes each key to the store once (a seen delta holds only keys the
+    * store lacks), and a tombstone hides a re-crawled key's older row. */
   def consolidate(spark: SparkSession, workDir: String, uptoEpoch: Int): Unit =
     stageConsolidation(spark, workDir, uptoEpoch)
       .foreach(StoreFiles.swap(spark, StoreFiles.swapMarker(workDir), _))
@@ -86,8 +88,7 @@ object SeenDeletes {
       .collect { case d @ SeqDir(s) if s.toInt <= uptoEpoch => s"${tombDir(workDir)}/$d" }
     if (dirs.isEmpty || (dirs.size < 2 && spent.isEmpty)) return None
     val tmp = s"$workDir/seen/.consolidate.tmp"
-    read(spark, workDir, dirs).distinct()
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
+    read(spark, workDir, dirs).write.mode(SaveMode.Overwrite).parquet(tmp)
     Some(StoreFiles.Swap(Seq(tmp -> dirs.last), dirs.init ++ spent))
   }
 

@@ -35,38 +35,32 @@ object SeenSet {
       .as[KeyedUrl]
   }
 
-  /** Build one bloom segment per host_bucket from the seen store.
-    * One shuffle by bucket; each partition builds the blooms of the
-    * buckets it owns (a bucket never spans partitions), emitting
-    * (bucket, serialized segment). Mergeable: same-bucket segments union
-    * by OR (used by the incremental epoch-over-epoch path). */
+  /** Build one bloom segment per host_bucket from the seen store: the
+    * [[mergeDeltaIntoSegments]] of the whole store into no prior segments
+    * (every bucket with keys gets one segment; `buckets` is not needed).
+    * Mergeable: same-bucket segments union by OR (used by the incremental
+    * epoch-over-epoch path). */
   def bloomSegments(seen: DataFrame, buckets: Int, expectedPerBucket: Long,
       fpp: Double): Dataset[(Int, Array[Byte])] = {
     val spark = seen.sparkSession
     import spark.implicits._
-    seen.select(col("host_bucket").cast("int"), col("url_hash").cast("long"))
-      .repartition(buckets, col("host_bucket"))
-      .as[(Int, Long)]
-      .mapPartitions { rows =>
-        val blooms = scala.collection.mutable.Map.empty[Int, LongBloom]
-        rows.foreach { case (b, h) =>
-          blooms.getOrElseUpdate(b, LongBloom.create(expectedPerBucket, fpp)).put(h)
-        }
-        blooms.iterator.map { case (b, f) => (b, f.serialize()) }
-      }
+    mergeDeltaIntoSegments(seen, spark.emptyDataset[(Int, Array[Byte])], expectedPerBucket, fpp)
   }
 
   /** Fully distributed incremental bloom maintenance:
     * segments(epoch) = segments(epoch-1) ∪ bloom(delta), computed as ONE
-    * cogroup of the delta's (host_bucket, url_hash) keys with the persisted
-    * segment set — the delta keys shuffle once on their bucket, the prior
-    * segments ship as ≤ buckets rows, and NOTHING key- or segment-sized
-    * ever lands on the driver (at 10^10 seen keys the segment set is ~12 GB;
-    * a per-epoch driver round-trip of it is the exact anti-pattern this
-    * replaces). A bucket with prior keys but no delta keeps its segment; a
-    * bucket with delta but no prior segment builds fresh; byte-identical to
-    * a fresh full-store build at the same shape (bloom OR is
-    * order-independent — CrawlSpec pins the equality).
+    * shuffle on the bucket of the delta's (host_bucket, url_hash) keys
+    * together with the persisted segment set — the keys shuffle once, the
+    * prior segments ship as ≤ buckets rows, and NOTHING key- or
+    * segment-sized ever lands on the driver (at 10^10 seen keys the
+    * segment set is ~12 GB; a per-epoch driver round-trip of it is the
+    * exact anti-pattern this replaces). Each task folds the rows of the
+    * buckets it owns into one bloom per bucket (a bucket never spans
+    * tasks): a bucket with prior keys but no delta keys keeps its segment;
+    * a bucket with delta but no prior segment builds fresh; byte-identical
+    * to a fresh full-store build at the same shape (bloom OR is
+    * order-independent — CrawlSpec pins the equality). Plain columns up to
+    * the one typed pass, so the merge adds no grouping or sort stage.
     *
     * `delta` columns: host_bucket (int-castable), url_hash (long). */
   def mergeDeltaIntoSegments(delta: DataFrame,
@@ -74,17 +68,23 @@ object SeenSet {
       fpp: Double): Dataset[(Int, Array[Byte])] = {
     val spark = delta.sparkSession
     import spark.implicits._
-    delta.select(col("host_bucket").cast("int"), col("url_hash").cast("long"))
-      .as[(Int, Long)]
-      .groupByKey(_._1)
-      .cogroup(prev.groupByKey(_._1)) { (bucket, keys, segs) =>
-        val bloom = segs.map(s => LongBloom.deserialize(s._2))
-          .reduceOption(_ union _)
-          .getOrElse(LongBloom.create(expectedPerBucket, fpp))
-        keys.foreach(k => bloom.put(k._2))
-        // cogroup invokes this only for buckets present on ≥1 side, so
-        // every emitted segment covers a bucket that genuinely has keys
-        Iterator.single((bucket, bloom.serialize()))
+    // (bucket, key, segment): a key row has no segment, a segment row no key
+    val keys = delta.select(col("host_bucket").cast("int").as("b"),
+      col("url_hash").cast("long").as("h"), lit(null).cast("binary").as("seg"))
+    val segs = prev.toDF("b", "seg").select(col("b"), lit(0L).as("h"), col("seg"))
+    keys.unionByName(segs)
+      .repartition(col("b"))
+      .as[(Int, Long, Array[Byte])]
+      .mapPartitions { rows =>
+        val blooms = scala.collection.mutable.Map.empty[Int, LongBloom]
+        rows.foreach { case (b, h, seg) =>
+          if (seg == null) blooms.getOrElseUpdate(b, LongBloom.create(expectedPerBucket, fpp)).put(h)
+          else {
+            val s = LongBloom.deserialize(seg)
+            blooms.update(b, blooms.get(b).fold(s)(_ union s))
+          }
+        }
+        blooms.iterator.map { case (b, f) => (b, f.serialize()) }
       }
   }
 
@@ -107,62 +107,51 @@ object SeenSet {
   /** Two-tier unseen with a BROADCAST bloom probe: segments are collected
     * (they are tiny relative to the seen set — ~1.2 bytes/key at 1% fpp),
     * broadcast, and probed by a predicate on (host_bucket, url_hash) —
-    * no shuffle, rows stay in Tungsten format. Bloom positives are
-    * confirmed by the exact anti-join; negatives are definitely new.
-    * Returns exactly `unseenExact`'s rows. The crawl loop enters this tier
-    * only when [[broadcastTierFits]] bounds the collect under Spark's caps.
+    * no shuffle, rows stay in Tungsten format. The bloom positives' keys
+    * are confirmed against the store, and the candidates drop the
+    * confirmed hits. Returns exactly `unseenExact`'s rows. The crawl loop
+    * enters this tier only when [[broadcastTierFits]] bounds the collect
+    * under Spark's caps.
     *
     * Returns (unseen, cleanup). `cleanup()` must be called AFTER the
-    * unseen rows are materialized downstream: it unpersists the shared
-    * probe pass and destroys the bloom broadcast — without it an epoch
-    * loop leaks one cached dataset + one broadcast per epoch. */
+    * unseen rows are materialized downstream: it releases the bloom
+    * broadcast — without it an epoch loop leaks one broadcast per epoch. */
   def unseenTwoTierBroadcast(candidates: Dataset[KeyedUrl], seen: DataFrame,
-      segments: Dataset[(Int, Array[Byte])]): (Dataset[KeyedUrl], () => Unit) = {
+      segments: Dataset[(Int, Array[Byte])]): (Dataset[KeyedUrl], () => Unit) =
+    unseenTwoTierBroadcast(candidates, seen, segments.collect().toSeq)
+
+  /** [[unseenTwoTierBroadcast]] over segments already on the driver. */
+  private[graft] def unseenTwoTierBroadcast(candidates: Dataset[KeyedUrl], seen: DataFrame,
+      segments: Seq[(Int, Array[Byte])]): (Dataset[KeyedUrl], () => Unit) = {
     val spark = candidates.sparkSession
     import spark.implicits._
-    val segMap = segments.collect().groupBy(_._1).map { case (b, segs) =>
+    val segMap = segments.groupBy(_._1).map { case (b, segs) =>
       b -> segs.map(s => LongBloom.deserialize(s._2)).reduce(_ union _)
     }
     val bc = spark.sparkContext.broadcast(segMap)
     val mightContain = org.apache.spark.sql.functions.udf(
       (bucket: Int, hash: Long) =>
         bc.value.get(bucket).exists(_.mightContain(hash)))
-    // the probe is NOT persisted: a bloom probe is a handful of hash ops
-    // per row, while caching the probe output means one more full-frontier
-    // cache write per epoch — memory bandwidth is the measured single-box
-    // ceiling, so the two consumers re-run the cheap probe over the
-    // (already-cached) upstream instead.
-    val flagged = candidates
-      .withColumn("maybe_seen__", mightContain(col("host_bucket"), col("url_hash")))
-    val definitelyNew = flagged.filter(!col("maybe_seen__"))
-      .drop("maybe_seen__").as[KeyedUrl]
-    val maybeSeen = flagged.filter(col("maybe_seen__"))
-      .drop("maybe_seen__").as[KeyedUrl]
     // exact confirm WITHOUT shuffling the seen store. A plain
     // `sliver LEFT ANTI seen` can only broadcast its build (right) side —
     // the 10^10-key store — so Spark plans it as a shuffle join that
     // re-shuffles the ENTIRE store every epoch. Inverted form: (1)
     // `seen LEFT SEMI broadcast(sliver keys)` — the store streams through
     // one narrow columnar scan, zero exchange, emitting only the keys that
-    // are genuinely seen (≤ sliver); (2) the sliver anti-joins that tiny
-    // hit set, also broadcast. The per-epoch store cost drops from a full
-    // shuffle+sort to one scan. Valid while the sliver's bound fits the
+    // are genuinely seen (≤ sliver); (2) the candidates anti-join that tiny
+    // hit set, also broadcast. Every seen candidate is a bloom positive
+    // (blooms have no false negatives), so its key is among the hits:
+    // anti-joining all candidates is exact, and its output flows narrowly
+    // from `candidates`, keeping their partitioning. Valid while the sliver's bound fits the
     // broadcast caps ([[broadcastTierFits]]); beyond it, [[unseenTwoTier]]
     // confirms with a plain anti-join that Spark plans by size.
-    val sliverKeys = maybeSeen.select(col("url_hash"))
+    val sliverKeys = candidates.filter(mightContain(col("host_bucket"), col("url_hash")))
+      .select(col("url_hash"))
     val hits = seen.select(col("url_hash"))
       .join(broadcast(sliverKeys), Seq("url_hash"), "left_semi")
-    // the confirm branch's output is repartitioned CONTENT-deterministically
-    // (fixed partition count + hash of the row key — AQE never re-coalesces
-    // an explicit numPartitions): downstream partition-sensitive passes
-    // (the politeness prefilter) may evaluate this subtree more than once,
-    // and the join output partitioning could otherwise be re-planned per
-    // evaluation. The sliver is small, so the pin costs little.
-    val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    val confirmed = maybeSeen
-      .join(broadcast(hits), Seq("url_hash"), "left_anti")
-      .repartition(parts, col("url_hash")).as[KeyedUrl]
-    val out = definitelyNew.unionByName(confirmed)
+      .select(col("url_hash").as("hit__"))
+    val out = candidates.join(broadcast(hits), col("url_hash") === col("hit__"), "left_anti")
+      .as[KeyedUrl]
     // unpersist, NOT destroy: the cached downstream dataset still carries
     // this plan in its lineage, and task (re)serialization references the
     // broadcast even when cached partitions short-circuit execution —
