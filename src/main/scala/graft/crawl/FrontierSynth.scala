@@ -48,68 +48,70 @@ object FrontierSynth {
     val freshPerEpoch = math.max(1L, (n * 4) / 5)
     val dupDomain = math.max(1L, ((epochOffset + n) * 4) / 5)
     val pOffset = ParamLit.long(epochOffset)
+    // one select per dependency level (the shape the optimizer collapses a
+    // per-column chain into): each builder call re-analyses the whole plan
+    val id = col("id")
+    val seq = col("frontier_seq")
+    val (r1, r2, r3) = (col("r1"), col("r2"), col("r3"))
+    val hostIdx = col("host_idx")
     spark.range(n)
-      .select((col("id") + pOffset).as("frontier_seq"), col("id"))
       // identity key: last 20% of each slice re-draw from the global
       // domain (duplicate fixture, cross-epoch); the rest are fresh
-      .withColumn("doc_key",
-        when(col("id") >= freshPerEpoch,
-          pmod(xxhash64(lit(seed), lit(7L), col("id") + pOffset),
-            ParamLit.long(dupDomain)))
-          .otherwise(col("id") + pOffset))
-      .withColumn("r1", xxhash64(lit(seed), col("doc_key")))
-      .withColumn("r2", xxhash64(lit(seed + 1), col("doc_key")))
-      .withColumn("r3", xxhash64(lit(seed + 2), col("frontier_seq"))) // per-row, not per-key: noise
+      .select((id + pOffset).as("frontier_seq"), id,
+        when(id >= freshPerEpoch,
+          pmod(xxhash64(lit(seed), lit(7L), id + pOffset), ParamLit.long(dupDomain)))
+          .otherwise(id + pOffset).as("doc_key"))
+      .select(seq, id,
+        xxhash64(lit(seed), col("doc_key")).as("r1"),
+        xxhash64(lit(seed + 1), col("doc_key")).as("r2"),
+        xxhash64(lit(seed + 2), seq).as("r3")) // per-row, not per-key: noise
       // Zipf-ish host: log-uniform index over [0, numHosts)
-      .withColumn("u", pmod(col("r1"), lit(1000003L)).cast("double") / 1000003.0)
-      .withColumn("host_idx",
-        least(floor(pow(lit(numHosts.toDouble), col("u"))) - 1.0, lit((numHosts - 1).toDouble))
-          .cast("long"))
+      .select(seq, id, r1, r2, r3,
+        least(floor(pow(lit(numHosts.toDouble),
+          pmod(r1, lit(1000003L)).cast("double") / 1000003.0)) - 1.0,
+          lit((numHosts - 1).toDouble)).cast("long").as("host_idx"))
       // r06: concat/lpad instead of format_string — java.util.Formatter
       // re-parses the format per ROW and was ~19% of busy executor
       // samples in the 32-core crawl profile; lpad/concat are codegen
       // string ops. Byte-identical: %04d pads to AT LEAST 4 (never
       // truncates), hence the >9999 guard mirroring Formatter semantics.
-      .withColumn("host", concat(lit("h"),
-        when(col("host_idx") > 9999L, col("host_idx").cast("string"))
-          .otherwise(lpad(col("host_idx").cast("string"), 4, "0")),
-        lit(".courts.example")))
-      .withColumn("prefix", element_at(
-        array(lit("KARE"), lit("KORE"), lit("KSRE"), lit("WBRE"), lit("JURE")),
-        (pmod(col("r1"), lit(5L)) + 1).cast("int")))
-      .withColumn("docnum", pmod(col("r2"), lit(10000000L)))
-      // mirror fixture: 1/8 of the dup-class rows (per-ROW r3 draw, so the
-      // same doc_key re-drawn elsewhere stays a plain URL-dup) republish
-      // their document under a second path — same host, same docid,
-      // DIFFERENT canonical URL. These are what give the crawled corpus
-      // true cross-URL duplicate images (the content is keyed by docid,
-      // Outcomes.contentKey): the c14 phash near-dup query and any content
-      // dedup over the payload table have real work to do.
-      .withColumn("is_mirror",
-        col("id") >= freshPerEpoch && pmod(col("r3"), lit(8L)) === 0)
-      .withColumn("path",
-        when(pmod(col("r2"), lit(31L)) === 0, lit("/private/docs"))
-          .otherwise(when(col("is_mirror"), lit("/jportal/mirror"))
-            .otherwise(lit("/jportal/docs"))))
+      .select(seq, r1, r3,
+        concat(lit("h"),
+          when(hostIdx > 9999L, hostIdx.cast("string"))
+            .otherwise(lpad(hostIdx.cast("string"), 4, "0")),
+          lit(".courts.example")).as("host"),
+        element_at(
+          array(lit("KARE"), lit("KORE"), lit("KSRE"), lit("WBRE"), lit("JURE")),
+          (pmod(r1, lit(5L)) + 1).cast("int")).as("prefix"),
+        pmod(r2, lit(10000000L)).as("docnum"),
+        // mirror fixture: 1/8 of the dup-class rows (per-ROW r3 draw, so
+        // the same doc_key re-drawn elsewhere stays a plain URL-dup)
+        // republish their document under a second path — same host, same
+        // docid, DIFFERENT canonical URL. These are what give the crawled
+        // corpus true cross-URL duplicate images (the content is keyed by
+        // docid, Outcomes.contentKey): the c14 phash near-dup query and
+        // any content dedup over the payload table have real work to do.
+        when(pmod(r2, lit(31L)) === 0, lit("/private/docs"))
+          .otherwise(when(id >= freshPerEpoch && pmod(r3, lit(8L)) === 0,
+            lit("/jportal/mirror"))
+            .otherwise(lit("/jportal/docs"))).as("path"))
       // docnum ∈ [0, 10⁷) by construction (pmod), so lpad(…, 7, "0") is
       // exactly %07d here — no truncation case exists
-      .withColumn("url_clean", concat(
+      .select(seq, r1, r3, col("host"), concat(
         lit("https://"), col("host"), col("path"), lit("/?quelle=jlink&docid="),
         col("prefix"), lpad(col("docnum").cast("string"), 7, "0"),
-        lit("&psml=bsjrsprod.psml&max=true")))
-      // whitespace-noise fixture: ~5% of ROWS get a tab+newline injected
-      .withColumn("url",
-        when(pmod(col("r3"), lit(20L)) === 0,
+        lit("&psml=bsjrsprod.psml&max=true")).as("url_clean"))
+      .select(seq,
+        // whitespace-noise fixture: ~5% of ROWS get a tab+newline injected
+        when(pmod(r3, lit(20L)) === 0,
           regexp_replace(col("url_clean"), "&psml", "\t\n&psml"))
-          .otherwise(col("url_clean")))
-      .withColumn("sitemap_seq", (col("frontier_seq") / UrlsPerSitemap).cast("long"))
-      .withColumn("entry_seq", pmod(col("frontier_seq"), lit(UrlsPerSitemap)))
-      .withColumn("lastmod",
-        timestamp_add("DAY", pmod(col("r1"), lit(365L)),
-          to_timestamp(lit("2025-01-01 00:00:00"))))
-      .withColumn("discovered_epoch", graft.expressions.ParamLit.int(epoch))
-      .select("frontier_seq", "url", "host", "sitemap_seq", "entry_seq",
-        "lastmod", "discovered_epoch")
+          .otherwise(col("url_clean")).as("url"),
+        col("host"),
+        (seq / UrlsPerSitemap).cast("long").as("sitemap_seq"),
+        pmod(seq, lit(UrlsPerSitemap)).as("entry_seq"),
+        timestamp_add("DAY", pmod(r1, lit(365L)),
+          to_timestamp(lit("2025-01-01 00:00:00"))).as("lastmod"),
+        ParamLit.int(epoch).as("discovered_epoch"))
   }
 
   /** Canonicalize + key a frontier (P3-P6): the columns every downstream
@@ -117,16 +119,17 @@ object FrontierSynth {
   def key(frontier: DataFrame, buckets: Int): Dataset[KeyedUrl] = {
     val spark = frontier.sparkSession
     import spark.implicits._
+    val canon = col("url_canon")
+    val carried = Seq("host", "sitemap_seq", "entry_seq", "lastmod", "discovered_epoch").map(col)
     frontier
-      .withColumn("url_canon", UrlFunctions.canonicalizeUrl(col("url")))
-      .withColumn("url_hash", UrlFunctions.urlHash(col("url")))
-      .withColumn("docid", UrlFunctions.extractDocId(col("url_canon")))
-      .withColumn("court", UrlFunctions.courtOf(col("docid")))
-      .withColumn("host_bucket", UrlFunctions.hostBucket(col("host"), buckets))
-      .withColumn("path", regexp_extract(col("url_canon"), "^https?://[^/]+(/[^?]*)", 1))
-      .select($"url_canon", $"url_hash", $"docid", $"court", $"host",
-        $"host_bucket", $"path", $"sitemap_seq", $"entry_seq",
-        $"discovered_epoch", $"lastmod")
+      .select(carried ++ Seq(UrlFunctions.canonicalizeUrl(col("url")).as("url_canon"),
+        UrlFunctions.urlHash(col("url")).as("url_hash")): _*)
+      .select(carried ++ Seq(canon, col("url_hash"),
+        UrlFunctions.extractDocId(canon).as("docid")): _*)
+      .select(canon, $"url_hash", $"docid", UrlFunctions.courtOf($"docid").as("court"),
+        $"host", UrlFunctions.hostBucket($"host", buckets).as("host_bucket"),
+        regexp_extract(canon, "^https?://[^/]+(/[^?]*)", 1).as("path"),
+        $"sitemap_seq", $"entry_seq", $"discovered_epoch", $"lastmod")
       .as[KeyedUrl]
   }
 }

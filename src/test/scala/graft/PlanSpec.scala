@@ -128,6 +128,31 @@ class PlanSpec extends SparkSpec {
       s"the per-row fold must not shuffle tokens or explode positions:\n$p")
   }
 
+  test("fanout gate: no round-robin exchange below the open cost; RoundRobinPartitioning(n) above it") {
+    def rr(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      "RoundRobinPartitioning\\((\\d+)\\)".r.findAllMatchIn(planExec(df))
+        .map(_.group(1).toInt).toSeq
+    def both = Seq(Queries.q40CurationPipeline(spark, dir), Queries.q70BestPassage(spark, dir))
+    both.foreach(q => assert(rr(q).isEmpty, planExec(q)))
+    // n = min(defaultParallelism, ceil(size / openCost)) at a 1 KiB open
+    // cost; one-partition split planning (minPartitionNum 1) leaves the
+    // scan below n, as a one-row-group table does
+    val size = spark.read.parquet(s"$dir/documents.parquet")
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    val n = (BigInt(spark.sparkContext.defaultParallelism) min ((size + 1023) / 1024)).toInt
+    assert(n > 1)
+    val keys = Seq("spark.sql.files.openCostInBytes" -> "1k",
+      "spark.sql.files.minPartitionNum" -> "1")
+    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      keys.foreach { case (k, v) => spark.conf.set(k, v) }
+      both.foreach(q => assert(rr(q) == Seq(n), planExec(q)))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("q72: KMV sketches cross the exchange, never the token-hash stream (2-phase object agg)") {
     val p = planExec(Queries.q72KmvDistinct(spark, dir))
     assert("ObjectHashAggregate".r.findAllIn(p).size >= 2,

@@ -1637,4 +1637,47 @@ class ReadsideSpec extends SparkSpec {
     assert(merged.toSeq == keys.sorted.take(64).toSeq,
       "bottom-k must be mergeable from per-shard bottom-ks")
   }
+
+  test("table reads reuse an inferred schema only while the listing is unchanged; a reuse runs no side job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val q14 = SparkEntry.queries("q14_events_hourly")
+    val tmp = java.nio.file.Files.createTempDirectory("q14schema").toString
+    val h0 = 1704067200000L // 2024-01-01T00:00:00Z
+    val evs = Seq((1L, 0, "view", 2L), (2L, 10, "view", 5L), (3L, 70, "click", 7L))
+      .map { case (id, min, tpe, v) => (id, new java.sql.Timestamp(h0 + min * 60000L), tpe, v) }
+    def write(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$tmp/events.parquet")
+    write(evs.map(e => (e._1, e._2, e._3, e._4.toDouble)).toDF("event_id", "ts", "event_type", "value"))
+    val first = q14(spark, tmp)
+    assert(first.schema("min_v").dataType == DoubleType)
+    assert(first.collect().map(r => (r.getString(1), r.getLong(2), r.getDouble(3))).toSeq ==
+      Seq(("view", 2L, 2.0), ("click", 1L, 7.0)))
+    // rewritten with `value` retyped: the next read sees the new schema
+    write(evs.toDF("event_id", "ts", "event_type", "value"))
+    val second = q14(spark, tmp)
+    assert(second.schema("min_v").dataType == LongType)
+    assert(second.collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3))).toSeq ==
+      Seq(("view", 2L, 2L), ("click", 1L, 7L)))
+    // unchanged table: every job of a run belongs to its SQL execution
+    // (schema inference would start one outside it)
+    val group = s"schema-reuse-${System.nanoTime}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(Option(js.properties.getProperty("spark.sql.execution.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "q14 over an unchanged table")
+      try q14(spark, tmp).collect() finally sc.clearJobGroup()
+      // listener bus is async — poll until the count stops changing
+      var prev = -1; var spins = 0
+      while (prev != jobs.size && spins < 20) { prev = jobs.size; Thread.sleep(150); spins += 1 }
+    } finally sc.removeSparkListener(listener)
+    assert(!jobs.isEmpty)
+    assert(!jobs.contains(None), s"side jobs outside the SQL execution: $jobs")
+  }
 }
